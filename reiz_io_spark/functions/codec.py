@@ -336,9 +336,22 @@ def decode_postings_batch(
     mod-2^64 cumulative sum: exact by telescoping within each block."""
     nd = n_docs_b.astype(np.int64)
     total = int(nd.sum())
+    gaps = varint_decode(doc_deltas_cat)
+    tfs = varint_decode(tfs_cat).view(np.int64)
+    dls = varint_decode(dls_cat).view(np.int64)
+    # a short stream would broadcast or misalign silently below
+    for name, got, want in (
+        ("doc-gap", gaps.size, total - nd.size),
+        ("tf", tfs.size, total),
+        ("dl", dls.size, total),
+    ):
+        if got != want:
+            raise ValueError(
+                f"{name} stream holds {got} values, expected {want} "
+                f"for {nd.size} blocks of {total} postings"
+            )
     starts = np.concatenate(([0], np.cumsum(nd)))[:-1]
     vals = np.empty(total, dtype=np.uint64)
-    gaps = varint_decode(doc_deltas_cat)
     # non-start positions get the gaps, in order; start positions get
     # the block's first doc id
     mask = np.ones(total, dtype=bool)
@@ -351,8 +364,6 @@ def decode_postings_batch(
     z = np.cumsum(vals, dtype=np.uint64)
     seg_base = z[starts] - vals[starts]  # uint64 wraparound-exact
     doc_ids = (z - np.repeat(seg_base, nd)).view(np.int64)
-    tfs = varint_decode(tfs_cat).view(np.int64)
-    dls = varint_decode(dls_cat).view(np.int64)
     return doc_ids, tfs, dls
 
 

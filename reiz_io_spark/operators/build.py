@@ -200,15 +200,21 @@ def _other_batch_dirs(docs_path: str, build_id: str) -> list[str]:
     )
 
 
-def completed_shards(spark: SparkSession, lineage_path: str, build_id: str) -> DataFrame:
-    try:
-        lin = spark.read.schema(LINEAGE).parquet(lineage_path)
-    except Exception:
-        return spark.createDataFrame([], "shard int")
-    return (
-        lin.filter((F.col("build_id") == build_id) & (F.col("status") == "done"))
+def completed_shards(spark: SparkSession, lineage_path: str, build_id: str) -> list[int]:
+    """Shards of ``build_id`` the lineage table marks done (at most
+    n_shards values). A fresh index has no lineage dir yet: no Spark
+    job is launched then."""
+    if not os.path.isdir(lineage_path):
+        return []
+    lin = spark.read.schema(LINEAGE).parquet(lineage_path)
+    return sorted(
+        r["shard"]
+        for r in lin.filter(
+            (F.col("build_id") == build_id) & (F.col("status") == "done")
+        )
         .select("shard")
         .distinct()
+        .collect()
     )
 
 
@@ -230,8 +236,7 @@ def stage1_ingest(
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     t0 = time.perf_counter()
 
-    done = completed_shards(spark, p["lineage"], build_id)
-    done_ids = [r["shard"] for r in done.collect()]  # tiny (n_shards rows)
+    done_ids = completed_shards(spark, p["lineage"], build_id)
     prepared = prepare_docs(corpus, n_shards)
     pending = (
         prepared.filter(~F.col("shard").isin(done_ids)) if done_ids else prepared
@@ -302,7 +307,10 @@ def stage1_ingest(
     # path never joins back to docs for lengths. Derived from the staged
     # parquet (re-tokenization avoided); only this batch's pending shards
     # are rewritten.
-    staged = spark.read.parquet(p["docs"]).filter(F.col("batch") == build_id)
+    # explicit schema on every docs re-read: inferring it is a Spark job
+    staged = spark.read.schema(DOCS_ON_DISK).parquet(p["docs"]).filter(
+        F.col("batch") == build_id
+    )
     if done_ids:
         staged = staged.filter(~F.col("shard").isin(done_ids))
     runs = (
@@ -330,10 +338,7 @@ def stage1_ingest(
     # the shard data landed — crash before this line => shard re-runs).
     stage1_ms = int((time.perf_counter() - t0) * 1000)
     lineage_rows = (
-        spark.read.parquet(p["docs"])
-        .filter(F.col("batch") == build_id)
-        .join(done, "shard", "left_anti")
-        .groupBy("shard")
+        staged.groupBy("shard")
         .agg(
             F.count("*").alias("n_files"),
             F.sum(F.when(~F.col("parse_ok"), 1).otherwise(0)).alias("n_parse_failed"),
@@ -441,7 +446,10 @@ def merge_and_encode(
         .withColumn(
             "term_bucket", F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)).cast("int")
         )
-        .repartition(8 * N_TERM_BUCKETS, "term_bucket")  # whole buckets per task -> no file blowup
+        # whole buckets per task -> one file per bucket dir; AQE sizes
+        # the exchange from the data (at most N_TERM_BUCKETS non-empty
+        # partitions, so a fixed fan-out above that only adds empty tasks)
+        .repartition("term_bucket")
         .write.mode("overwrite")
         .partitionBy("term_bucket")
         .parquet(dict_dir)
@@ -478,9 +486,12 @@ def merge_and_encode(
     # term_bucket collapses the write from n_salted_partitions x
     # n_buckets small files (measured: 1024 at 32x32, a multi-second
     # driver-side commit) to n_buckets files — and a bucket read then
-    # touches ONE file instead of 32.
+    # touches ONE file instead of 32. Hash partitioning puts each bucket
+    # wholly in one task, and AQE sizes the exchange from the data: it
+    # only coalesces partitions, never splits one, so every bucket dir
+    # still gets exactly one file.
     with _arrow_batch(spark, ENCODE_ARROW_BATCH):
-        blocks.repartition(8 * N_TERM_BUCKETS, "term_bucket").write.mode(
+        blocks.repartition("term_bucket").write.mode(
             "overwrite"
         ).partitionBy("term_bucket").parquet(blocks_dir)
     t_blocks = time.perf_counter()
@@ -594,16 +605,33 @@ def _encode_postings(
     # beyond any input contract) — measured r8, the encode stage's cost
     # is per-BYTE boundary tax, so 40 -> 32 bytes/row is a direct cut.
     # The encoder widens back to int64/uint64 before the varint kernel,
-    # so the emitted block bytes are identical.
+    # so the emitted block bytes are identical. A value outside int32
+    # fails the task (_narrow_int32) instead of wrapping into corrupt
+    # blocks when ANSI casts are off.
     return (
         salted.repartition(n_part, "term_id", "salt")
         .sortWithinPartitions("term_id", "salt", "doc_id")
         .select(
-            "term_id", "salt", "doc_id",
-            F.col("tf").cast("int").alias("tf"),
-            F.col("dl").cast("int").alias("dl"),
+            "term_id", "salt", "doc_id", _narrow_int32("tf"), _narrow_int32("dl")
         )
         .mapInArrow(encode, schema=BLOCKS_WITH_BUCKET)
+    )
+
+
+def _narrow_int32(name: str):
+    """Cast a long column to int, raising (JVM-side, in the same
+    projection — no extra job) when the value does not fit."""
+    c = F.col(name)
+    return (
+        F.when(
+            ~c.between(-(2**31), 2**31 - 1),
+            F.raise_error(
+                F.concat(F.lit(f"{name} = "), c.cast("string"),
+                         F.lit(" does not fit the int32 block-encode column"))
+            ),
+        )
+        .otherwise(c.cast("int"))
+        .alias(name)
     )
 
 
@@ -872,7 +900,7 @@ def _merge_incremental_locked(
     )
     dict_staging = os.path.join(out_dir, "dictionary_staging")
     (
-        upd_dict.repartition(8 * N_TERM_BUCKETS, "term_bucket")
+        upd_dict.repartition("term_bucket")  # whole buckets per task, AQE-sized
         .write.mode("overwrite")
         .partitionBy("term_bucket")
         .parquet(dict_staging)
@@ -981,28 +1009,20 @@ def _merge_incremental_locked(
     new_blocks = _encode_postings(spark, postings, hot, block_size)
     blocks_staging = os.path.join(out_dir, "blocks_staging")
     cols = [f.name for f in BLOCKS_WITH_BUCKET.fields]
-    # r8: the KEPT rows (everything in an affected bucket that this
-    # merge does not re-encode — the bulk of the table when a small
-    # batch touches hot terms in every bucket) are map-only up to here
-    # (their anti-joins broadcast), and their scan splits are already
-    # bucket-aligned; writing them WITHOUT the repartition removes the
-    # shuffle that moved the whole blocks table for a 1%-batch merge.
-    # The re-encoded rows land in the same staging dir with a second,
-    # appended write (they do need the bucket shuffle — encode tasks
-    # hold every bucket). blocks_write attribution: this pair was 24 s
-    # of the 30 s update-commit merge at the 200k bench (VERDICT r07
-    # #1); the kept-row shuffle was most of it.
+    # The KEPT rows (everything in an affected bucket that this merge
+    # does not re-encode) and the re-encoded rows go out in ONE write
+    # behind one bucket exchange, so every staged bucket dir holds one
+    # file, as after a full build. Writing the kept rows shuffle-free
+    # and appending the new ones would save that exchange but leave two
+    # files per affected bucket, and more after every commit (the scan
+    # splits a multi-file bucket across tasks). The exchange hashes
+    # whole buckets into one task each and AQE sizes it from the data.
     with _arrow_batch(spark, ENCODE_ARROW_BATCH):
         (
             keep_blocks.select(*cols)
+            .unionByName(new_blocks.select(*cols))
+            .repartition("term_bucket")
             .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(blocks_staging)
-        )
-        (
-            new_blocks.select(*cols)
-            .repartition(8 * N_TERM_BUCKETS, "term_bucket")
-            .write.mode("append")
             .partitionBy("term_bucket")
             .parquet(blocks_staging)
         )

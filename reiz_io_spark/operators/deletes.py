@@ -394,7 +394,7 @@ def compact_deletes(spark: SparkSession, index_dir: str) -> dict:
         t_ph = time.perf_counter()
         dict_staging = os.path.join(index_dir, "dictionary_staging")
         (
-            upd_dict.repartition(8 * N_TERM_BUCKETS, "term_bucket")
+            upd_dict.repartition("term_bucket")  # whole buckets per task, AQE-sized
             .write.mode("overwrite")
             .partitionBy("term_bucket")
             .parquet(dict_staging)
@@ -481,21 +481,15 @@ def compact_deletes(spark: SparkSession, index_dir: str) -> dict:
         cols = [f.name for f in BLOCKS_WITH_BUCKET.fields]
         from .build import ENCODE_ARROW_BATCH, _arrow_batch
 
-        # kept rows are map-only (broadcast anti-joins) and bucket-
-        # aligned from the scan: write them shuffle-free, then append
-        # the re-encoded rows with their own bucket shuffle (see
-        # merge_incremental — same blocks_write attribution fix)
+        # kept and re-encoded rows in ONE write behind one bucket
+        # exchange — one file per staged bucket dir (see
+        # merge_incremental); AQE sizes the exchange from the data
         with _arrow_batch(spark, ENCODE_ARROW_BATCH):
             (
                 keep_blocks.select(*cols)
+                .unionByName(new_blocks.select(*cols))
+                .repartition("term_bucket")
                 .write.mode("overwrite")
-                .partitionBy("term_bucket")
-                .parquet(blocks_staging)
-            )
-            (
-                new_blocks.select(*cols)
-                .repartition(8 * N_TERM_BUCKETS, "term_bucket")
-                .write.mode("append")
                 .partitionBy("term_bucket")
                 .parquet(blocks_staging)
             )

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from reiz_io_spark.functions import codec
@@ -119,3 +120,23 @@ def test_lineage_complete(spark, built_index):
     assert docs_shards <= shards
     total = done.agg(F.sum("n_files")).collect()[0][0]
     assert total == spark.read.parquet(out + "/docs").count()
+
+
+def test_encode_rejects_values_beyond_int32(spark):
+    """tf/dl are narrowed to int32 for the encode exchange: a value
+    that does not fit must fail the build, not wrap into corrupt
+    blocks — with ANSI casts off too, where a plain cast wraps."""
+    from reiz_io_spark.operators.build import _encode_postings
+
+    postings = spark.createDataFrame(
+        [(7, 11, 1, 2**31)], "term_id long, doc_id long, tf long, dl long"
+    )
+    hot = spark.createDataFrame([], "term_id long, n_frag int")
+    key = "spark.sql.ansi.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        with pytest.raises(Exception, match="does not fit the int32"):
+            _encode_postings(spark, postings, hot, 128).collect()
+    finally:
+        spark.conf.set(key, old)

@@ -129,3 +129,30 @@ def test_arrow_encoder_matches_pandas_encoder():
     assert np.array_equal(d2, docs)
     assert np.array_equal(t2, tfs)
     assert np.array_equal(l2, dls)
+
+
+def _two_blocks():
+    """Two encoded blocks (3 + 2 postings) as decode_postings_batch
+    takes them: first doc ids, sizes and the concatenated streams."""
+    docs = np.array([10, 20, 35, 7, 9], dtype=np.int64)
+    nd = np.array([3, 2], dtype=np.int64)
+    gaps = codec.varint_encode(np.array([10, 15, 2], dtype=np.uint64))
+    tfs = codec.varint_encode(np.array([1, 2, 3, 4, 5], dtype=np.uint64))
+    dls = codec.varint_encode(np.array([9, 8, 7, 6, 5], dtype=np.uint64))
+    return docs[[0, 3]], nd, gaps, tfs, dls
+
+
+def test_decode_postings_batch_rejects_truncated_tf_stream():
+    fd, nd, gaps, tfs, dls = _two_blocks()
+    d, t, l = codec.decode_postings_batch(fd, nd, gaps, tfs, dls)
+    assert d.tolist() == [10, 20, 35, 7, 9]
+    with pytest.raises(ValueError, match="tf stream"):
+        codec.decode_postings_batch(fd, nd, gaps, tfs[:-1], dls)
+
+
+def test_decode_postings_batch_rejects_short_doc_gap_stream():
+    # one gap for three non-first positions: numpy would broadcast it
+    fd, nd, _, tfs, dls = _two_blocks()
+    one_gap = codec.varint_encode(np.array([10], dtype=np.uint64))
+    with pytest.raises(ValueError, match="doc-gap stream"):
+        codec.decode_postings_batch(fd, nd, one_gap, tfs, dls)
