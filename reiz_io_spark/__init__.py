@@ -20,8 +20,10 @@ Layout
                   stage and the test oracle)
 - ``streaming/``  incremental index maintenance (foreachBatch + lineage)
                   and stateful sessionization (applyInPandasWithState)
-- ``serve.py``    warm query service (driver-cached postings, df-gated
-                  distributed fallback); ``web.py`` HTTP front-end
+- ``serve.py``    warm query service over one index or a list of shard
+                  snapshots (driver-cached postings, global stats summed
+                  over shards, df-gated distributed fallback); ``web.py``
+                  HTTP front-end
 - ``oracle.py``   single-node golden BM25 implementation (rank-identity)
 """
 

@@ -486,21 +486,16 @@ def _dispatch(args, spark) -> int:
         from .web import serve as http_serve
 
         if args.indexes:
-            from .serve import FederatedQueryService
-
-            service = FederatedQueryService([
-                QueryService(
-                    IndexReader(spark, p).warm(),
-                    auto_refresh_s=args.auto_refresh_s,
-                )
-                for p in args.indexes.split(",") if p
-            ])
-        elif args.index:
-            reader = IndexReader(spark, args.index).warm()
-            service = QueryService(reader, auto_refresh_s=args.auto_refresh_s)
+            dirs = [p for p in args.indexes.split(",") if p]
         else:
+            dirs = [args.index] if args.index else []
+        if not dirs:
             print("serve: pass --index or --indexes")
             return 2
+        service = QueryService(
+            [IndexReader(spark, p).warm() for p in dirs],
+            auto_refresh_s=args.auto_refresh_s,
+        )
         print(json.dumps({"serving": f"http://{args.host}:{args.port}"}),
               file=sys.stderr)
         http_serve(service, host=args.host, port=args.port)

@@ -42,12 +42,11 @@ storage roots; nothing here assumes co-location.
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.lower import LoweredQuery
-from .score import IndexReader
+from .score import IndexReader, bm25_idf
 from .wand import wand_scores
 
 
@@ -69,15 +68,18 @@ def shard_corpus(corpus: DataFrame, n_shards: int) -> list[DataFrame]:
     ]
 
 
-def federated_stats(
-    readers: list[IndexReader], query: LoweredQuery
-) -> tuple[list[tuple[str, ...]], dict, float]:
-    """The dfs phase: (global term groups, stats_override, k1) —
-    groups are the positional union of every shard's dictionary
-    expansion; idf derives from summed df over summed n_docs with the
-    exact single-index expression (score.py::_term_meta_uncached)."""
+def shard_stats(readers: list[IndexReader], terms: list[str]) -> dict:
+    """Collection statistics of a shard set as INTEGER sums over the
+    shards — n_docs, total_dl and each term's df/cf — with avgdl and idf
+    derived from the sums by the single-index expressions
+    (score.bm25_idf), so a set of one shard reproduces that index's own
+    stats bit-for-bit. Refuses shards that disagree on k1/b.
+
+    {"k1", "b", "n_docs", "total_dl", "avgdl",
+     "terms": {term: {"term", "df", "cf", "idf"}}}; terms no shard
+    holds are left out."""
     if not readers:
-        raise ValueError("federated_stats: no shards")
+        raise ValueError("shard_stats: no shards")
     k1s = {float(r.meta["k1"]) for r in readers}
     bs = {float(r.meta["b"]) for r in readers}
     if len(k1s) != 1 or len(bs) != 1:
@@ -86,29 +88,49 @@ def federated_stats(
             f"b={sorted(bs)}) — scores would be incomparable; rebuild "
             f"the outlier shard with matching k1/b"
         )
-    per_shard_groups = [r.resolve_groups(query) for r in readers]
-    n_groups = {len(g) for g in per_shard_groups}
-    if len(n_groups) != 1:
-        raise ValueError("shards resolved different group arity")
-    groups = [
-        tuple(sorted({t for sg in per_shard_groups for t in sg[i]}))
-        for i in range(n_groups.pop())
-    ]
-    all_terms = sorted({t for g in groups for t in g})
-
     n_docs = sum(int(r.meta["n_docs"]) for r in readers)
     total_dl = sum(int(r.meta["total_dl"]) for r in readers)
-    avgdl = total_dl / n_docs if n_docs else 0.0
     df: dict[str, int] = {}
-    for r in readers:
-        for t, m in r.term_meta(all_terms).items():
-            df[t] = df.get(t, 0) + int(m["df"])
-    n = float(n_docs)
-    idf = {
-        t: float(np.log(1.0 + (n - d + 0.5) / (d + 0.5)))
-        for t, d in df.items()
+    cf: dict[str, int] = {}
+    if terms:
+        for r in readers:
+            for t, m in r.term_meta(terms).items():
+                df[t] = df.get(t, 0) + int(m["df"])
+                cf[t] = cf.get(t, 0) + int(m["cf"])
+    return {
+        "k1": k1s.pop(), "b": bs.pop(), "n_docs": n_docs,
+        "total_dl": total_dl,
+        "avgdl": total_dl / n_docs if n_docs else 0.0,
+        "terms": {
+            t: {"term": t, "df": d, "cf": cf[t], "idf": bm25_idf(n_docs, d)}
+            for t, d in df.items()
+        },
     }
-    return groups, {"avgdl": avgdl, "idf_by_term": idf, "df_by_term": df}, k1s.pop()
+
+
+def stats_override(avgdl: float, term_stats: dict) -> dict:
+    """The wand_scores/explain_score/structural_topk federation hook
+    for global stats: {"avgdl", "idf_by_term", "df_by_term"}."""
+    return {
+        "avgdl": avgdl,
+        "idf_by_term": {t: m["idf"] for t, m in term_stats.items()},
+        "df_by_term": {t: m["df"] for t, m in term_stats.items()},
+    }
+
+
+def federated_stats(
+    readers: list[IndexReader], query: LoweredQuery
+) -> tuple[list[tuple[str, ...]], dict, float]:
+    """The dfs phase: (global term groups, stats_override, k1) —
+    groups are the positional union of every shard's dictionary
+    expansion; the stats are shard_stats' integer sums."""
+    per_shard_groups = [r.resolve_groups(query) for r in readers]
+    groups = [
+        tuple(sorted({t for sg in per_shard_groups for t in sg[i]}))
+        for i in range(len(query.groups))
+    ]
+    stats = shard_stats(readers, sorted({t for g in groups for t in g}))
+    return groups, stats_override(stats["avgdl"], stats["terms"]), stats["k1"]
 
 
 def federated_scores(

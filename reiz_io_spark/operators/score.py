@@ -224,9 +224,9 @@ class IndexReader:
         buckets holding query terms are scanned and no extra Spark job
         is launched.
 
-        idf is derived here, not stored: np.log(1 + (N-df+0.5)/(df+0.5))
-        — the exact numpy expression the oracle uses (bit-identity), and
-        the index build never ships the dictionary through Python.
+        idf is derived here, not stored (bm25_idf — the exact numpy
+        expression the oracle uses, bit-identity), and the index build
+        never ships the dictionary through Python.
         max_score is the analytic tf→∞ bound idf·(1+k1).
 
         Memoized per reader (stats are immutable for this index
@@ -252,8 +252,6 @@ class IndexReader:
         return {t: self._tmeta_memo[t] for t in terms if t in self._tmeta_memo}
 
     def _term_meta_uncached(self, terms: list[str]) -> dict[str, dict]:
-        import numpy as np
-
         buckets = self.term_buckets(terms)
         rows = (
             self.dictionary()
@@ -262,12 +260,12 @@ class IndexReader:
             .select("term", "df", "cf")
             .collect()
         )
-        n = float(self.meta["n_docs"])
+        n_docs = int(self.meta["n_docs"])
         k1 = float(self.meta["k1"])
         out = {}
         for r in rows:
             df = int(r["df"])
-            idf = float(np.log(1.0 + (n - df + 0.5) / (df + 0.5)))
+            idf = bm25_idf(n_docs, df)
             out[r["term"]] = {
                 "term": r["term"],
                 "df": df,
@@ -281,6 +279,15 @@ class IndexReader:
         from ..functions.hashing import term_bucket_of
 
         return sorted({term_bucket_of(t, N_TERM_BUCKETS) for t in terms})
+
+
+def bm25_idf(n_docs: int, df: int) -> float:
+    """np.log(1 + (N-df+0.5)/(df+0.5)) — the oracle's exact numpy
+    expression (bit-identity); every engine path derives idf here."""
+    import numpy as np
+
+    n = float(n_docs)
+    return float(np.log(1.0 + (n - df + 0.5) / (df + 0.5)))
 
 
 def naive_bm25_topk(

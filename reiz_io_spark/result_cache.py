@@ -135,13 +135,3 @@ class SharedResultCache:
             names = []
         return {"entries": len(names), "dir": self.dir, "version": self.version}
 
-
-def for_reader(reader, max_entries: int = DEFAULT_MAX_ENTRIES) -> SharedResultCache:
-    """Cache bound to an IndexReader's snapshot: keyed by the committed
-    meta version (falls back to build_id+n_docs for pre-versioning
-    metas)."""
-    meta = reader.meta
-    version = meta.get(
-        "version", f"{meta.get('build_id')}:{meta.get('n_docs')}"
-    )
-    return SharedResultCache(reader.index_dir, version, max_entries=max_entries)

@@ -1,5 +1,5 @@
-"""Warm query serving tier: driver-side decoded-postings cache with a
-distributed fallback.
+"""Warm query serving tier: one service over a list of index snapshots,
+driver-side decoded-postings caches with a distributed fallback.
 
 The reference's production path is a long-lived process holding
 prepared queries and a Redis result cache in front of the database
@@ -9,16 +9,25 @@ fixed per-job scheduling cost (~0.2-1 s) makes "one Spark job per
 interactive query" the wrong serving shape at ANY corpus size, so this
 module gives the engine the same two-tier design:
 
-- QueryService caches the DECODED posting lists of query terms (and the
-  dictionary rows, Like expansions, and doc metadata) in the serving
-  process. Scoring runs the same exact BM25 kernel semantics as the
-  distributed path (ascending-term float accumulation — rank identity
-  vs naive_bm25_topk is pytest-gated).
-- Terms whose total df exceeds ``max_driver_postings`` route the query
-  to the distributed wand_topk path instead (a hot-term scan at 10^12
-  docs is cluster work; a 5-term conjunction over rare terms is not).
-  Cache misses fetch ONLY the missing terms' blocks via one pruned
-  parquet read (term_bucket partition filter + term_id pushdown).
+- QueryService serves one or more committed index snapshots: a single
+  index, or the shards of a sharded one (operators/federation.py —
+  shards partition the docs). Every request takes the same steps for
+  any number of shards: pin one generation; take the global BM25
+  statistics as integer sums over the shards (dfs_query_then_fetch);
+  score each shard's cached, DECODED posting lists under those stats
+  with the exact kernel semantics of the distributed path
+  (ascending-term float accumulation — rank identity vs
+  naive_bm25_topk is pytest-gated); merge on (-score, doc_id); render
+  metadata from the owning shard. Sums over one shard are that
+  index's own statistics, so a one-snapshot service is the
+  single-index service bit-for-bit.
+- Queries whose total df exceeds ``max_driver_postings`` take the
+  distributed route instead (operators/federation.py's plans under the
+  same global stats; for one reader they are the wand_topk plan). A
+  hot-term scan at 10^12 docs is cluster work; a 5-term conjunction
+  over rare terms is not. Cache misses fetch ONLY the missing terms'
+  blocks via one pruned parquet read per shard (term_bucket partition
+  filter + term_id pushdown).
 
 On a real cluster this process is the query frontend; executors keep
 serving big scans. Nothing here is required for correctness — it is a
@@ -26,19 +35,28 @@ latency tier, exactly like the reference's Redis."""
 
 from __future__ import annotations
 
+import json
+import os
 import threading
+import time
 from collections import OrderedDict
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .functions import codec
 from .functions.hashing import spark_xxhash64
-from .plans.lower import LoweredQuery
+from .functions.links import github_link, username_of
+from .operators import federation
 from .operators.score import IndexReader
-from .operators import wand as wand_mod
+from .operators.wand import field_weight_of
+from .plans.lower import LoweredQuery, expand_groups
+
+# decoded sources kept per shard for structural verification
+MAX_CACHED_CONTENTS = 16_384
+# (repo, path, commit) of a doc_id the snapshot does not hold
+_UNKNOWN_DOC = ("?", "?", None)
 
 
 class _LRU(OrderedDict):
@@ -81,16 +99,11 @@ def _fold_position_rows(rows, offset: int) -> list[dict]:
     return out
 
 
-class _Snapshot:
-    """One committed index snapshot bundled with its warm caches:
-    reader, collection stats, decoded-postings LRU, term meta, Like
-    expansions, doc metadata, content LRU, and the pending-tombstone
-    mask. A request captures ONE reference to this object at entry and
-    resolves everything through it, so a refresh landing mid-request
-    can never mix generations (old idf with new postings/avgdl, or a
-    KeyError on a vanished cache entry) — the service publishes a new
-    snapshot with a single reference assignment and in-flight readers
-    keep this one alive until they finish."""
+class _Shard:
+    """One committed index snapshot with its warm caches: reader,
+    decoded-postings LRU, doc metadata, content LRU and the pending-
+    tombstone mask. A commit to the index is picked up by opening a NEW
+    _Shard; this one keeps serving the requests that pinned it."""
 
     def __init__(
         self,
@@ -98,137 +111,107 @@ class _Snapshot:
         miss_lock: threading.Lock,
         max_driver_docmeta: int,
         max_cached_terms: int,
-        max_cached_contents: int,
     ):
         self.reader = reader
         self.meta = reader.meta
-        self.k1 = float(self.meta["k1"])
-        self.b = float(self.meta["b"])
-        self.avgdl = float(self.meta["avgdl"])
         self.n_docs = int(self.meta["n_docs"])
         # shared with the owning service: miss serialization may span a
         # snapshot swap (harmless — it only bounds duplicate collects)
         self._miss_lock = miss_lock
         self._postings: _LRU = _LRU(max_cached_terms)  # term -> (d, tf, dl)
-        self._tmeta: dict[str, dict] = {}
-        self._absent: set[str] = set()
-        self._like_cache: dict[tuple, list[str]] = {}
+        self._content: _LRU = _LRU(MAX_CACHED_CONTENTS)
         self._docmeta: dict[int, tuple] | None = None
         if 0 < self.n_docs <= max_driver_docmeta:
             rows = reader.docs().select("doc_id", "repo", "path", "commit").collect()
             self._docmeta = {
                 r["doc_id"]: (r["repo"], r["path"], r["commit"]) for r in rows
             }
-        self._content: _LRU = _LRU(max_cached_contents)
         # pending deleted docs (operators/deletes.py): masked out of
         # every decoded posting list below, so all serving paths
         # exclude them; folded tombstones are already absent from
         # blocks. The reader pins one meta snapshot — a delete commits
-        # a NEW snapshot, picked up by the next service/reader (the
-        # same contract as every other mutation).
+        # a NEW snapshot, picked up by refresh_if_stale.
         self._excl = reader.pending_tombstone_ids()
         if self._docmeta is not None and self._excl is not None:
             for did in self._excl.tolist():
                 self._docmeta.pop(did, None)
 
-    # -- term resolution (cached) ------------------------------------------
+    def is_stale(self) -> bool:
+        """True iff meta.json now names another committed version."""
+        try:
+            with open(os.path.join(self.reader.index_dir, "meta.json")) as fh:
+                v = int(json.load(fh).get("version", 0))
+        except (OSError, ValueError):
+            return False
+        return v != int(self.meta.get("version", 0))
 
-    def resolve_groups(self, query: LoweredQuery) -> list[tuple[str, ...]]:
-        def expand(namespace: str, regex: str) -> list[str]:
-            key = (namespace, regex)
-            if key not in self._like_cache:
-                with self._miss_lock:
-                    if key not in self._like_cache:  # double-checked
-                        self._like_cache[key] = self.reader.dictionary_terms_for(
-                            namespace, regex
-                        )
-            return self._like_cache[key]
+    # -- postings ----------------------------------------------------------
 
-        from .plans.lower import expand_groups
-
-        return expand_groups(query, expand)
-
-    def term_meta(self, terms: list[str]) -> dict[str, dict]:
-        missing = [t for t in terms if t not in self._tmeta and t not in self._absent]
-        if missing:
-            with self._miss_lock:
-                missing = [
-                    t for t in terms
-                    if t not in self._tmeta and t not in self._absent
-                ]
-                if missing:
-                    got = self.reader.term_meta(missing)
-                    self._tmeta.update(got)
-                    self._absent.update(t for t in missing if t not in got)
-        return {t: self._tmeta[t] for t in terms if t in self._tmeta}
-
-    # -- postings cache ----------------------------------------------------
-
-    def _fetch_postings(self, terms: list[str]) -> None:
-        """One pruned blocks read for all missing terms. Misses are
-        serialized behind the miss lock (double-checked) so concurrent
-        cold queries on the same terms collect once."""
-        if all(t in self._postings for t in terms):
-            return
-        with self._miss_lock:
-            self._fetch_postings_locked(terms)
-
-    def _fetch_postings_locked(self, terms: list[str]) -> None:
-        missing = [t for t in terms if t not in self._postings]
+    def postings(self, terms: list[str]) -> dict[str, tuple]:
+        """{term: (doc_ids, tf, dl)}, doc-sorted, pending deletes
+        masked. The dict is request-local: a concurrent fill evicting a
+        term from the shared LRU cannot take it from this request.
+        Misses serialize behind the miss lock (double-checked) so
+        concurrent cold queries on the same terms collect once."""
+        got = {t: self._postings.get(t) for t in terms}
+        missing = [t for t, v in got.items() if v is None]
         if not missing:
-            return
-        tid_of = {spark_xxhash64(t): t for t in missing}
-        buckets = self.reader.term_buckets(missing)
+            return got
+        with self._miss_lock:
+            got.update((t, self._postings.get(t)) for t in missing)
+            missing = [t for t in missing if got[t] is None]
+            if missing:
+                fetched = self._read_postings(missing)
+                for t, v in fetched.items():
+                    self._postings[t] = v
+                got.update(fetched)
+        return got
+
+    def _read_postings(self, terms: list[str]) -> dict[str, tuple]:
+        """One pruned blocks read for ``terms``."""
+        tid_of = {spark_xxhash64(t): t for t in terms}
         rows = (
             self.reader.blocks()
-            .filter(F.col("term_bucket").isin(buckets))
+            .filter(F.col("term_bucket").isin(self.reader.term_buckets(terms)))
             .filter(F.col("term_id").isin(list(tid_of.keys())))
             .collect()
         )
-        by_term: dict[str, list] = {t: [] for t in missing}
+        by_term: dict[str, list] = {t: [] for t in terms}
         for r in rows:
             by_term[tid_of[r["term_id"]]].append(r)
+        out = {}
         for t, blks in by_term.items():
             if not blks:
-                self._postings[t] = (
+                out[t] = (
                     np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.int64)
                 )
                 continue
-            ds, tfs, dls = [], [], []
-            for r in blks:
-                d, tf, dl = codec.decode_block(r)
-                ds.append(d)
-                tfs.append(tf)
-                dls.append(dl)
-            d = np.concatenate(ds)
-            tf = np.concatenate(tfs)
-            dl = np.concatenate(dls)
+            decoded = [codec.decode_block(r) for r in blks]
+            d = np.concatenate([x[0] for x in decoded])
+            tf = np.concatenate([x[1] for x in decoded])
+            dl = np.concatenate([x[2] for x in decoded])
             if self._excl is not None:
                 pos = np.searchsorted(self._excl, d)
                 pos[pos == self._excl.size] = 0
                 live = self._excl[pos] != d
                 d, tf, dl = d[live], tf[live], dl[live]
             order = np.argsort(d, kind="stable")
-            self._postings[t] = (d[order], tf[order], dl[order])
+            out[t] = (d[order], tf[order], dl[order])
+        return out
 
     # -- scoring (exact, oracle accumulation order) ------------------------
 
-    def _score_driver(
-        self, groups: list[tuple[str, ...]], tmeta: dict, k: int,
+    def score(
+        self, groups: list[tuple[str, ...]], tmeta: dict, postings: dict,
+        k: int, avgdl: float, k1: float, b: float,
         field_weights: dict[str, float] | None = None,
-        avgdl: float | None = None,
     ) -> list[tuple[int, float]]:
-        # LRU guard: between the fetch and here another thread's fill
-        # could (in principle) have evicted one of this query's terms —
-        # refetch rather than silently score without it
-        evicted = [t for t in tmeta if t not in self._postings]
-        if evicted:
-            self._fetch_postings(evicted)
+        """This shard's top-k (doc_id, score) under the given stats."""
         candidates: np.ndarray | None = None
         for g in sorted(groups, key=lambda g: min(
             (tmeta[t]["df"] for t in g if t in tmeta), default=0
         )):
-            docs_g = [self._postings[t][0] for t in g if t in tmeta]
+            docs_g = [postings[t][0] for t in g if t in tmeta]
             union = (
                 np.unique(np.concatenate(docs_g))
                 if docs_g
@@ -244,8 +227,8 @@ class _Snapshot:
         if candidates is None or candidates.size == 0:
             return []
         scores = np.zeros(candidates.size, dtype=np.float64)
-        for term in sorted(t for t in tmeta):
-            d, tf, dl = self._postings[term]
+        for term in sorted(tmeta):
+            d, tf, dl = postings[term]
             if d.size == 0:
                 continue
             pos = np.clip(np.searchsorted(d, candidates), 0, d.size - 1)
@@ -254,40 +237,31 @@ class _Snapshot:
                 continue
             idf = float(tmeta[term]["idf"])
             if field_weights:
-                from .operators.wand import field_weight_of
-
                 idf *= field_weight_of(term, field_weights)
             scores[hit] += codec.bm25_contrib(
-                tf[pos[hit]], dl[pos[hit]], idf,
-                self.avgdl if avgdl is None else avgdl, self.k1, self.b,
+                tf[pos[hit]], dl[pos[hit]], idf, avgdl, k1, b
             )
         order = np.lexsort((candidates, -scores))[:k]
         return [(int(candidates[i]), float(scores[i])) for i in order]
 
     # -- metadata / content lookups ----------------------------------------
 
-    def _doc_meta(self, doc_id: int) -> tuple[str, str, str | None]:
-        if self._docmeta is not None and doc_id in self._docmeta:
-            return self._docmeta[doc_id]
-        with self._miss_lock:
-            if self._docmeta is not None and doc_id in self._docmeta:
-                return self._docmeta[doc_id]
-            rows = (
-                self.reader.docs()
-                .filter(F.col("doc_id") == doc_id)
-                .select("repo", "path", "commit")
-                .collect()
-            )
-            meta = (
-                (rows[0]["repo"], rows[0]["path"], rows[0]["commit"])
-                if rows
-                else ("?", "?", None)
-            )
-            if self._docmeta is not None:
-                self._docmeta[doc_id] = meta
-            return meta
+    def doc_meta(self, doc_id: int) -> tuple[str, str, str | None]:
+        """(repo, path, commit); _UNKNOWN_DOC when this snapshot does
+        not hold the doc. The warm map holds every live doc."""
+        if self._docmeta is not None:
+            return self._docmeta.get(doc_id, _UNKNOWN_DOC)
+        rows = (
+            self.reader.docs()
+            .filter(F.col("doc_id") == doc_id)
+            .select("repo", "path", "commit")
+            .collect()
+        )
+        if not rows:
+            return _UNKNOWN_DOC
+        return (rows[0]["repo"], rows[0]["path"], rows[0]["commit"])
 
-    def _fetch_content(self, doc_ids: list[int]) -> dict[int, str | None]:
+    def contents(self, doc_ids: list[int]) -> dict[int, str | None]:
         """Returns {doc_id: content-or-None} for the requested ids (a
         plain dict snapshot, immune to concurrent LRU eviction); fills
         the bounded cache as a side effect."""
@@ -310,177 +284,109 @@ class _Snapshot:
         return {d: self._content.get(d) for d in doc_ids}
 
 
-class QueryService:
-    """Thread-safety contract: a single QueryService may be called from
-    many threads (ThreadingHTTPServer handlers). The warm path is
-    lock-free — cache reads hit immutable values in dicts that are only
-    ever inserted into. Cache MISSES serialize behind one miss lock
-    (double-checked), so concurrent cold queries never issue duplicate
-    Spark collects for the same keys; warm traffic never blocks on a
-    cold fill. Postings/content caches are bounded LRUs — a long-lived
-    server's memory stays proportional to its hot set, not its history.
+class _Generation:
+    """One pinned set of shard snapshots and the global statistics that
+    rank across them: n_docs, total_dl and per-term df/cf are integer
+    sums over the shards (federation.shard_stats), idf/avgdl derive
+    from the sums. A request pins ONE generation at entry and reads
+    everything through it, so a refresh landing mid-request can never
+    mix generations (old idf with new postings/avgdl). The Like
+    expansions and term stats memoized here are global; each shard's
+    IndexReader serializes and memoizes its own dictionary reads
+    underneath, so concurrent fills here only repeat a deterministic
+    sum and need no lock."""
 
-    Snapshot consistency: all per-snapshot state lives in ONE
-    `_Snapshot` bundle; every request pins `self._snap` once at entry,
-    so a concurrent `refresh_if_stale` (which swaps the pointer to a
-    fresh bundle) can never hand a request a mix of old and new
-    generations.
-    """
+    def __init__(self, shards: list[_Shard]):
+        self.shards = shards
+        self.readers = [sh.reader for sh in shards]
+        self.spark = self.readers[0].spark
+        totals = federation.shard_stats(self.readers, [])
+        self.k1, self.b = totals["k1"], totals["b"]
+        self.n_docs, self.avgdl = totals["n_docs"], totals["avgdl"]
+        versions = "-".join(str(sh.meta.get("version", 0)) for sh in shards)
+        if len(shards) == 1:
+            self.version, self.meta = versions, shards[0].meta
+        else:
+            self.version = f"fed{len(shards)}:{versions}"
+            self.meta = {
+                "version": self.version, "build_id": "federated",
+                "n_docs": self.n_docs, "total_dl": totals["total_dl"],
+                "avgdl": self.avgdl, "k1": self.k1, "b": self.b,
+            }
+        self._like: dict[tuple[str, str], list[str]] = {}
+        self._tmeta: dict[str, dict] = {}
+        self._absent: set[str] = set()
 
-    def __init__(
-        self,
-        reader: IndexReader,
-        max_driver_postings: int = 5_000_000,
-        max_driver_docmeta: int = 5_000_000,
-        max_cached_terms: int = 65_536,
-        max_cached_contents: int = 16_384,
-        auto_refresh_s: float | None = None,
-    ):
-        self.max_driver_postings = max_driver_postings
-        self._max_driver_docmeta = max_driver_docmeta
-        self._max_cached_terms = max_cached_terms
-        self._max_cached_contents = max_cached_contents
-        # auto_refresh_s: with a live-maintained index (update/delete/
-        # merge commits), re-stat meta.json at most this often from
-        # query_topk and reopen on a newer snapshot. None (default) =
-        # pinned snapshot, the classic contract.
-        self.auto_refresh_s = auto_refresh_s
-        self._next_refresh_check = 0.0
-        self._miss_lock = threading.Lock()
-        self._bind(reader)
+    # -- global term resolution (memoized) ---------------------------------
 
-    def _bind(self, reader: IndexReader) -> None:
-        """Point the service at one committed snapshot: fresh caches,
-        fresh stats, published as ONE reference assignment (atomic
-        under the GIL). In-flight requests that pinned the previous
-        `_snap` keep its immutable bundle to completion — per-request
-        consistency holds."""
-        self._snap = _Snapshot(
-            reader, self._miss_lock, self._max_driver_docmeta,
-            self._max_cached_terms, self._max_cached_contents,
-        )
-
-    # -- snapshot delegation (compat surface; request paths pin _snap once) --
-
-    @property
-    def reader(self) -> IndexReader:
-        return self._snap.reader
-
-    @property
-    def meta(self) -> dict:
-        return self._snap.meta
-
-    @property
-    def k1(self) -> float:
-        return self._snap.k1
-
-    @property
-    def b(self) -> float:
-        return self._snap.b
-
-    @property
-    def avgdl(self) -> float:
-        return self._snap.avgdl
-
-    @property
-    def n_docs(self) -> int:
-        return self._snap.n_docs
-
-    @property
-    def _docmeta(self):
-        return self._snap._docmeta
+    def _expand(self, namespace: str, regex: str) -> list[str]:
+        key = (namespace, regex)
+        hit = self._like.get(key)
+        if hit is None:
+            hit = sorted({
+                t for r in self.readers
+                for t in r.dictionary_terms_for(namespace, regex)
+            })
+            self._like[key] = hit
+        return hit
 
     def resolve_groups(self, query: LoweredQuery) -> list[tuple[str, ...]]:
-        return self._snap.resolve_groups(query)
+        return expand_groups(query, self._expand)
 
     def term_meta(self, terms: list[str]) -> dict[str, dict]:
-        return self._snap.term_meta(terms)
+        """Global {term: {"term", "df", "cf", "idf"}} for the terms some
+        shard holds."""
+        missing = [
+            t for t in terms if t not in self._tmeta and t not in self._absent
+        ]
+        if missing:
+            got = federation.shard_stats(self.readers, missing)["terms"]
+            self._tmeta.update(got)
+            self._absent.update(t for t in missing if t not in got)
+        return {t: self._tmeta[t] for t in terms if t in self._tmeta}
 
-    def _fetch_postings(self, terms: list[str]) -> None:
-        self._snap._fetch_postings(terms)
+    # -- driver route ------------------------------------------------------
 
-    def _score_driver(self, *args, **kwargs):
-        return self._snap._score_driver(*args, **kwargs)
+    def _fetch_postings(self, terms: list[str]) -> list[dict]:
+        """Request-local postings, one dict per shard."""
+        return [sh.postings(terms) for sh in self.shards]
 
-    def _doc_meta(self, doc_id: int) -> tuple[str, str, str | None]:
-        return self._snap._doc_meta(doc_id)
+    def _score_driver(
+        self, groups: list[tuple[str, ...]], tmeta: dict, k: int,
+        postings: list[dict], field_weights: dict[str, float] | None = None,
+    ) -> list[tuple[int, float, int]]:
+        """Global top-k (doc_id, score, owning shard) merged on
+        (-score, doc_id)."""
+        per = [
+            [(d, s, i) for d, s in sh.score(
+                groups, tmeta, postings[i], k, self.avgdl, self.k1, self.b,
+                field_weights,
+            )]
+            for i, sh in enumerate(self.shards)
+        ]
+        if len(per) == 1:
+            return per[0]
+        merged = [h for p in per for h in p]
+        merged.sort(key=lambda h: (-h[1], h[0]))
+        return merged[:k]
 
-    def _fetch_content(self, doc_ids: list[int]) -> dict[int, str | None]:
-        return self._snap._fetch_content(doc_ids)
+    # -- rendering ---------------------------------------------------------
 
-    def refresh_if_stale(self) -> bool:
-        """Reopen on a newer committed index snapshot (an update/
-        delete/merge flipped meta.json since this service bound its
-        reader). One meta.json read; True iff the service re-bound.
-        All caches reset and refill lazily — the same warm-up cost as
-        a new service, paid only when a commit actually happened.
-        Concurrent warm queries during the swap serve the OLD snapshot
-        to completion (their cache references stay valid); queries
-        arriving after the swap see the new one."""
-        import json as _json
-        import os as _os
+    def doc_meta(self, doc_id: int, owner: int | None = None) -> tuple:
+        """Metadata from the owning shard; an unknown owner (distributed
+        route) is found by probing the shards — each doc_id lives in
+        exactly one."""
+        shards = self.shards if owner is None else [self.shards[owner]]
+        for sh in shards:
+            got = sh.doc_meta(doc_id)
+            if got != _UNKNOWN_DOC:
+                return got
+        return _UNKNOWN_DOC
 
-        mp = _os.path.join(self.reader.index_dir, "meta.json")
-        try:
-            with open(mp) as fh:
-                v = int(_json.load(fh).get("version", 0))
-        except (OSError, ValueError):
-            return False
-        if v == int(self.meta.get("version", 0)):
-            return False
-        with self._miss_lock:
-            if v == int(self.meta.get("version", 0)):  # double-checked
-                return False
-            self._bind(IndexReader(self.reader.spark, self.reader.index_dir))
-        return True
-
-    def _maybe_auto_refresh(self) -> None:
-        if self.auto_refresh_s is None:
-            return
-        import time as _time
-
-        now = _time.monotonic()
-        if now < self._next_refresh_check:
-            return
-        self._next_refresh_check = now + float(self.auto_refresh_s)
-        self.refresh_if_stale()
-
-    def query_topk(
-        self, query: LoweredQuery, k: int = 10, offset: int = 0,
-        field_weights: dict[str, float] | None = None,
-    ) -> list[dict]:
-        """Ranked results as dicts. Warm path: zero Spark jobs once the
-        query's terms are cached. Fallback: distributed wand_topk.
-        field_weights (BM25F): per-namespace multipliers applied at
-        score time — the postings cache stays weight-independent, so
-        one warm cache serves every weighting."""
-        self._maybe_auto_refresh()
-        snap = self._snap  # pin ONE snapshot for the whole request
-        groups = snap.resolve_groups(query)
-        if not groups or any(len(g) == 0 for g in groups):
-            return []
-        all_terms = sorted({t for g in groups for t in g})
-        tmeta = snap.term_meta(all_terms)
-        for g in groups:
-            if all(t not in tmeta for t in g):
-                return []
-        total_df = sum(m["df"] for m in tmeta.values())
-        if total_df > self.max_driver_postings:
-            top = wand_mod.wand_topk(
-                snap.reader, query, k=k, offset=offset,
-                field_weights=field_weights,
-            ).collect()
-            ranked = [(r["doc_id"], r["score"]) for r in top]
-        else:
-            snap._fetch_postings(list(tmeta))
-            ranked = snap._score_driver(
-                groups, tmeta, k + offset, field_weights=field_weights
-            )[offset:]
-        from .functions.links import github_link, username_of
-
+    def hits(self, ranked: list[tuple], first_rank: int) -> list[dict]:
         out = []
-        for rank, (doc_id, score) in enumerate(ranked, start=offset + 1):
-            repo, path, commit = snap._doc_meta(doc_id)
+        for rank, (doc_id, score, owner) in enumerate(ranked, start=first_rank):
+            repo, path, commit = self.doc_meta(doc_id, owner)
             out.append(
                 {"doc_id": doc_id, "repo": repo, "path": path,
                  "score": score, "rank": rank,
@@ -490,6 +396,165 @@ class QueryService:
                  "username": username_of(repo)}
             )
         return out
+
+
+class QueryService:
+    """Warm serving over one index snapshot or a list of shard
+    snapshots (``reader`` may be an IndexReader or a list of them).
+
+    Thread-safety contract: a single QueryService may be called from
+    many threads (ThreadingHTTPServer handlers). The warm path is
+    lock-free — cache reads hit immutable values in dicts that are only
+    ever inserted into. Cache MISSES serialize behind one miss lock
+    (double-checked), so concurrent cold queries never issue duplicate
+    Spark collects for the same keys; warm traffic never blocks on a
+    cold fill. Postings/content caches are bounded LRUs — a long-lived
+    server's memory stays proportional to its hot set, not its history.
+
+    Snapshot consistency: every request pins `self._snap` (one
+    `_Generation`) once at entry; `refresh_if_stale` publishes a new
+    generation with one reference assignment (atomic under the GIL),
+    so a request never sees a mix of old and new generations.
+    """
+
+    def __init__(
+        self,
+        reader: IndexReader | list[IndexReader],
+        max_driver_postings: int = 5_000_000,
+        max_driver_docmeta: int = 5_000_000,
+        max_cached_terms: int = 65_536,
+        auto_refresh_s: float | None = None,
+    ):
+        readers = list(reader) if isinstance(reader, (list, tuple)) else [reader]
+        if not readers:
+            raise ValueError("QueryService: no index snapshots")
+        self.max_driver_postings = max_driver_postings
+        self._max_driver_docmeta = max_driver_docmeta
+        self._max_cached_terms = max_cached_terms
+        # auto_refresh_s: with a live-maintained index (update/delete/
+        # merge commits), re-stat every shard's meta.json at most this
+        # often from the request methods and rebind the shards that
+        # committed. None (default) = pinned snapshots.
+        self.auto_refresh_s = auto_refresh_s
+        self._next_refresh_check = 0.0
+        self._miss_lock = threading.Lock()
+        self._snap = _Generation([self._open(r) for r in readers])
+
+    def _open(self, reader: IndexReader) -> _Shard:
+        return _Shard(
+            reader, self._miss_lock, self._max_driver_docmeta,
+            self._max_cached_terms,
+        )
+
+    # -- generation delegation (request paths pin _snap once) -------------
+
+    @property
+    def reader(self) -> IndexReader:
+        return self._snap.readers[0]
+
+    @property
+    def meta(self) -> dict:
+        return self._snap.meta
+
+    @property
+    def n_docs(self) -> int:
+        return self._snap.n_docs
+
+    def resolve_groups(self, query: LoweredQuery) -> list[tuple[str, ...]]:
+        return self._snap.resolve_groups(query)
+
+    def term_meta(self, terms: list[str]) -> dict[str, dict]:
+        return self._snap.term_meta(terms)
+
+    # -- refresh -----------------------------------------------------------
+
+    def refresh_if_stale(self) -> bool:
+        """Rebind the shards whose meta.json names a newer committed
+        snapshot (an update/delete/merge flipped it). One meta.json
+        read per shard; True iff the service re-bound. Only committed
+        shards' caches reset and refill lazily; the others carry over.
+        Requests in flight during the swap finish on the old
+        generation; requests arriving after it see the new one."""
+        if not any(sh.is_stale() for sh in self._snap.shards):
+            return False
+        with self._miss_lock:
+            old = self._snap.shards
+            shards = [
+                self._open(IndexReader(sh.reader.spark, sh.reader.index_dir))
+                if sh.is_stale() else sh
+                for sh in old
+            ]
+            if all(a is b for a, b in zip(shards, old)):  # double-checked
+                return False
+            self._snap = _Generation(shards)
+        return True
+
+    def _maybe_auto_refresh(self) -> None:
+        if self.auto_refresh_s is None:
+            return
+        now = time.monotonic()
+        if now < self._next_refresh_check:
+            return
+        self._next_refresh_check = now + float(self.auto_refresh_s)
+        self.refresh_if_stale()
+
+    def version_key(self) -> str:
+        """Version of the generation the next request would serve
+        (after the auto-refresh check): the meta version of a single
+        index, the combined shard versions otherwise. Result caches
+        key on it, so a commit makes older entries unreachable."""
+        self._maybe_auto_refresh()
+        return self._snap.version
+
+    # -- request methods ---------------------------------------------------
+
+    def _pin(self, query: LoweredQuery):
+        """(generation, groups, tmeta) for one request; groups is None
+        when the query cannot match (an empty group, or a group none of
+        whose terms any shard holds)."""
+        self._maybe_auto_refresh()
+        gen = self._snap  # pin ONE generation for the whole request
+        groups = gen.resolve_groups(query)
+        if not groups or any(len(g) == 0 for g in groups):
+            return gen, None, None
+        tmeta = gen.term_meta(sorted({t for g in groups for t in g}))
+        if any(all(t not in tmeta for t in g) for g in groups):
+            return gen, None, None
+        return gen, groups, tmeta
+
+    def _distributed(self, tmeta: dict) -> bool:
+        return sum(m["df"] for m in tmeta.values()) > self.max_driver_postings
+
+    def _ranked(
+        self, gen: _Generation, groups, tmeta, query: LoweredQuery,
+        k: int, offset: int, field_weights: dict[str, float] | None,
+    ) -> list[tuple]:
+        """Global top-k after ``offset`` as (doc_id, score, owner)."""
+        if self._distributed(tmeta):
+            top = federation.federated_topk(
+                gen.spark, None, query, k=k, offset=offset,
+                field_weights=field_weights, readers=gen.readers,
+            ).collect()
+            return [(r["doc_id"], r["score"], None) for r in top]
+        return gen._score_driver(
+            groups, tmeta, k + offset, gen._fetch_postings(list(tmeta)),
+            field_weights,
+        )[offset:]
+
+    def query_topk(
+        self, query: LoweredQuery, k: int = 10, offset: int = 0,
+        field_weights: dict[str, float] | None = None,
+    ) -> list[dict]:
+        """Ranked results as dicts. Warm path: zero Spark jobs once the
+        query's terms are cached. Fallback: the distributed WAND plan.
+        field_weights (BM25F): per-namespace multipliers applied at
+        score time — the postings cache stays weight-independent, so
+        one warm cache serves every weighting."""
+        gen, groups, tmeta = self._pin(query)
+        if groups is None:
+            return []
+        ranked = self._ranked(gen, groups, tmeta, query, k, offset, field_weights)
+        return gen.hits(ranked, offset + 1)
 
     def query_after(
         self, query: LoweredQuery, cursor: tuple[float, int], k: int = 10,
@@ -501,112 +566,86 @@ class QueryService:
         ranks the full candidate set (df-budget-bounded) and the
         keyset filter slices it; page N+1 equals rows N*k+1.. of
         query_topk's full ranking (pytest-gated). Over-budget: the
-        distributed exact cursor path (score.bm25_topk_after)."""
-        self._maybe_auto_refresh()
-        snap = self._snap
-        groups = snap.resolve_groups(query)
-        if not groups or any(len(g) == 0 for g in groups):
+        distributed exact cursor plan (federation.federated_topk_after)."""
+        gen, groups, tmeta = self._pin(query)
+        if groups is None:
             return []
-        all_terms = sorted({t for g in groups for t in g})
-        tmeta = snap.term_meta(all_terms)
-        for g in groups:
-            if all(t not in tmeta for t in g):
-                return []
         s0, d0 = float(cursor[0]), int(cursor[1])
-        if sum(m["df"] for m in tmeta.values()) > self.max_driver_postings:
-            from .operators.score import bm25_topk_after
-
-            top = bm25_topk_after(
-                snap.reader, query, cursor, k=k,
-                field_weights=field_weights,
+        if self._distributed(tmeta):
+            top = federation.federated_topk_after(
+                gen.spark, None, query, (s0, d0), k=k,
+                field_weights=field_weights, readers=gen.readers,
             ).collect()
-            ranked = [(r["doc_id"], r["score"]) for r in top]
+            ranked = [(r["doc_id"], r["score"], None) for r in top]
         else:
-            snap._fetch_postings(list(tmeta))
-            full = snap._score_driver(
-                groups, tmeta, 1 << 31, field_weights=field_weights
+            full = gen._score_driver(
+                groups, tmeta, 1 << 31, gen._fetch_postings(list(tmeta)),
+                field_weights,
             )
             ranked = [
-                (d, s) for d, s in full if s < s0 or (s == s0 and d > d0)
+                h for h in full if h[1] < s0 or (h[1] == s0 and h[0] > d0)
             ][:k]
-        from .functions.links import github_link, username_of
-
-        out = []
-        for rank, (doc_id, score) in enumerate(ranked, start=1):
-            repo, path, commit = snap._doc_meta(doc_id)
-            out.append(
-                {"doc_id": doc_id, "repo": repo, "path": path,
-                 "score": score, "rank": rank,
-                 "github_link": github_link(repo, commit, path),
-                 "username": username_of(repo)}
-            )
-        return out
+        return gen.hits(ranked, 1)
 
     def explain_topk(
         self, query: LoweredQuery, k: int = 1,
         field_weights: dict[str, float] | None = None,
     ) -> list[dict]:
         """Per-term BM25 contribution rows for the query's top-k docs —
-        the serving twin of operators/score.explain_score (same
-        arithmetic: codec.bm25_contrib is the expression the driver
-        scorer uses, so contributions sum to the served score exactly).
-        Warm path: ZERO Spark jobs (postings + term meta caches); the
-        over-budget fallback collects the distributed explain."""
-        self._maybe_auto_refresh()
-        snap = self._snap  # pin ONE snapshot for the whole request
-        groups = snap.resolve_groups(query)
-        if not groups or any(len(g) == 0 for g in groups):
+        the serving twin of operators/score.explain_score: each doc's
+        tf/dl from its OWNING shard under the global df/idf, with the
+        expression the driver scorer uses (codec.bm25_contrib), so a
+        doc's rows sum to its served score exactly. Rows come in rank
+        order, terms ascending. Warm path: ZERO Spark jobs; over budget
+        each shard collects the distributed explain under the global
+        stats."""
+        gen, groups, tmeta = self._pin(query)
+        if groups is None:
             return []
-        all_terms = sorted({t for g in groups for t in g})
-        tmeta = snap.term_meta(all_terms)
-        for g in groups:
-            if all(t not in tmeta for t in g):
-                return []
-        from .operators.wand import field_weight_of
 
         def _w(t: str) -> float:
             return field_weight_of(t, field_weights) if field_weights else 1.0
 
-        if sum(m["df"] for m in tmeta.values()) > self.max_driver_postings:
+        if self._distributed(tmeta):
             from .operators.score import explain_score
 
-            top = wand_mod.wand_topk(
-                snap.reader, query, k=k, field_weights=field_weights
-            ).collect()
-            if not top:
+            top_ids = [
+                d for d, _, _ in
+                self._ranked(gen, groups, tmeta, query, k, 0, field_weights)
+            ]
+            if not top_ids:
                 return []
-            rows = explain_score(
-                snap.reader, query, [int(r["doc_id"]) for r in top],
-                field_weights=field_weights,
-            ).collect()
-            return [dict(r.asDict()) for r in rows]
-        snap._fetch_postings(list(tmeta))
-        ranked = snap._score_driver(
-            groups, tmeta, k, field_weights=field_weights
-        )
+            stats = federation.stats_override(gen.avgdl, tmeta)
+            out = [
+                dict(r.asDict())
+                for reader in gen.readers  # a doc has rows in its owner only
+                for r in explain_score(
+                    reader, query, top_ids, field_weights=field_weights,
+                    stats_override=stats,
+                ).collect()
+            ]
+            out.sort(key=lambda r: (top_ids.index(r["doc_id"]), r["term"]))
+            return out
+        postings = gen._fetch_postings(list(tmeta))
         out = []
-        for doc_id, _score in ranked:
-            evicted = [t for t in tmeta if t not in snap._postings]
-            if evicted:
-                snap._fetch_postings(evicted)
+        for doc_id, _score, owner in gen._score_driver(
+            groups, tmeta, k, postings, field_weights
+        ):
             for term in sorted(tmeta):
-                d, tf, dl = snap._postings[term]
-                if d.size == 0:
-                    continue
+                d, tf, dl = postings[owner][term]
                 pos = int(np.searchsorted(d, doc_id))
                 if pos >= d.size or int(d[pos]) != doc_id:
                     continue
-                idf = float(tmeta[term]["idf"]) * _w(term)
+                idf = float(tmeta[term]["idf"])
                 contrib = float(codec.bm25_contrib(
-                    tf[pos:pos + 1], dl[pos:pos + 1], idf,
-                    snap.avgdl, snap.k1, snap.b,
+                    tf[pos:pos + 1], dl[pos:pos + 1], idf * _w(term),
+                    gen.avgdl, gen.k1, gen.b,
                 )[0])
                 out.append({
                     "doc_id": int(doc_id), "term": term,
                     "tf": int(tf[pos]), "dl": int(dl[pos]),
-                    "df": int(tmeta[term]["df"]),
-                    "idf": float(tmeta[term]["idf"]), "weight": _w(term),
-                    "contrib": contrib,
+                    "df": int(tmeta[term]["df"]), "idf": idf,
+                    "weight": _w(term), "contrib": contrib,
                 })
         return out
 
@@ -615,37 +654,32 @@ class QueryService:
     ) -> list[dict]:
         """Structurally verified results with exact match positions and
         source segments (fetch.py:14-29 projection) — the serving twin
-        of operators/verify.structural_topk (same tranche escalation,
-        driver-side matcher over cached content)."""
+        of operators/verify.structural_topk: tranche escalation over the
+        global ranking, the driver-side matcher over each doc's OWNING
+        shard's cached content."""
         from .plans.matcher import match_spans
 
-        self._maybe_auto_refresh()
-        snap = self._snap  # pin ONE snapshot for the whole request
-        groups = snap.resolve_groups(query)
-        if not groups or any(len(g) == 0 for g in groups):
+        gen, groups, tmeta = self._pin(query)
+        if groups is None:
             return []
-        all_terms = sorted({t for g in groups for t in g})
-        tmeta = snap.term_meta(all_terms)
-        for g in groups:
-            if all(t not in tmeta for t in g):
-                return []
-        if sum(m["df"] for m in tmeta.values()) > self.max_driver_postings:
-            # hot query: distributed verify stage (adaptive retrieval)
-            from .operators.verify import structural_topk
-
-            rows = structural_topk(snap.reader, query, k=k, offset=offset).collect()
-            return _fold_position_rows(rows, offset)
-        snap._fetch_postings(list(tmeta))
+        if self._distributed(tmeta):
+            return self._positions_distributed(gen, groups, tmeta, query, k, offset)
+        postings = gen._fetch_postings(list(tmeta))
         want = k + offset
         tranche = max(want * 4, 16)
-        verified: list[tuple[int, float, list[int]]] = []
+        verified: list[tuple[int, float, list, int]] = []
         seen = 0
         while True:
-            ranked = snap._score_driver(groups, tmeta, seen + tranche)[seen:]
+            ranked = gen._score_driver(groups, tmeta, seen + tranche, postings)[seen:]
             if not ranked:
                 break
-            fetched = snap._fetch_content([d for d, _ in ranked])
-            for doc_id, score in ranked:
+            by_shard: dict[int, list[int]] = {}
+            for doc_id, _, owner in ranked:
+                by_shard.setdefault(owner, []).append(doc_id)
+            fetched: dict[int, str | None] = {}
+            for owner, ids in by_shard.items():
+                fetched.update(gen.shards[owner].contents(ids))
+            for doc_id, score, owner in ranked:
                 content = fetched.get(doc_id)
                 if content is None:
                     continue
@@ -654,18 +688,16 @@ class QueryService:
                 except SyntaxError:
                     continue
                 if spans:
-                    verified.append((doc_id, score, spans))
+                    verified.append((doc_id, score, spans, owner))
             seen += len(ranked)
             if len(verified) >= want or len(ranked) < tranche:
                 break
             tranche *= 4
-        from .functions.links import github_link, username_of
-
         out = []
-        for rank, (doc_id, score, spans) in enumerate(
+        for rank, (doc_id, score, spans, owner) in enumerate(
             verified[offset : offset + k], start=offset + 1
         ):
-            repo, path, commit = snap._doc_meta(doc_id)
+            repo, path, commit = gen.doc_meta(doc_id, owner)
             first = min(s[0] for s in spans)
             first_end = max(s[2] for s in spans if s[0] == first)
             out.append(
@@ -683,15 +715,50 @@ class QueryService:
             )
         return out
 
+    def _positions_distributed(
+        self, gen: _Generation, groups, tmeta, query: LoweredQuery,
+        k: int, offset: int,
+    ) -> list[dict]:
+        """Hot query: each shard's DISTRIBUTED verify stage under the
+        global stats returns its verified top-(k+offset) — any global
+        top doc is in its owner's list — then a doc-level global merge.
+        The per-shard jobs are submitted concurrently (Spark's
+        scheduler runs them in parallel, so latency stays ~flat in the
+        shard count); structural_topk's verify matcher is per-reader,
+        so one union plan is not available here."""
+        from .operators.verify import structural_topk
+
+        stats = federation.stats_override(gen.avgdl, tmeta)
+
+        def shard_rows(reader):
+            return structural_topk(
+                reader, query, k=k + offset, offset=0,
+                groups_override=groups, stats_override=stats,
+            ).collect()
+
+        with ThreadPoolExecutor(max_workers=len(gen.readers)) as pool:
+            per_shard_rows = list(pool.map(shard_rows, gen.readers))
+        docs: list[tuple[float, int, list]] = []
+        for rows in per_shard_rows:
+            cur: list = []
+            for r in rows:
+                if cur and cur[0]["doc_id"] != r["doc_id"]:
+                    docs.append((cur[0]["score"], cur[0]["doc_id"], cur))
+                    cur = []
+                cur.append(r)
+            if cur:
+                docs.append((cur[0]["score"], cur[0]["doc_id"], cur))
+        docs.sort(key=lambda t: (-t[0], t[1]))
+        flat = [r for _, _, rows in docs[offset:offset + k] for r in rows]
+        return _fold_position_rows(flat, offset)
+
     def analyze(self, query: LoweredQuery) -> dict:
-        """Lowered plan + per-term stats (the reference's POST /analyze,
-        reiz/web/api.py:96-119 returns the compiled EdgeQL; we return
-        the lowered CNF + index stats + chosen route)."""
-        snap = self._snap
-        groups = snap.resolve_groups(query)
-        all_terms = sorted({t for g in groups for t in g})
-        tmeta = snap.term_meta(all_terms)
-        total_df = sum(m["df"] for m in tmeta.values())
+        """Lowered plan + per-term global stats (the reference's POST
+        /analyze, reiz/web/api.py:96-119 returns the compiled EdgeQL; we
+        return the lowered CNF + index stats + chosen route)."""
+        gen = self._snap
+        groups = gen.resolve_groups(query)
+        tmeta = gen.term_meta(sorted({t for g in groups for t in g}))
         return {
             "query": query.source,
             "groups": [list(g) for g in groups],
@@ -700,12 +767,11 @@ class QueryService:
                 for t, m in tmeta.items()
             },
             "route": (
-                "distributed-wand"
-                if total_df > self.max_driver_postings
-                else "driver-cache"
+                "distributed-wand" if self._distributed(tmeta) else "driver-cache"
             ),
-            "total_df": total_df,
-            "n_docs": snap.n_docs,
+            "total_df": sum(m["df"] for m in tmeta.values()),
+            "n_docs": gen.n_docs,
+            "n_shards": len(gen.shards),
         }
 
     def statistics(self) -> dict:
@@ -713,512 +779,45 @@ class QueryService:
         Module / AST / stmt / expr instances): derived from the
         dictionary's node: term collection frequencies — cf("node:T") is
         exactly the number of T instances across parsed files, so one
-        tiny dictionary scan answers all four."""
+        tiny dictionary scan per shard answers all four (cf sums over
+        disjoint shards)."""
         import ast as _ast
 
-        snap = self._snap
-        rows = (
-            snap.reader.dictionary()
-            .filter(F.col("term").startswith("node:"))
-            .select("term", "cf")
-            .collect()
-        )
+        gen = self._snap
+        counts: dict[str, int] = {}
+        for reader in gen.readers:
+            rows = (
+                reader.dictionary()
+                .filter(F.col("term").startswith("node:"))
+                .select("term", "cf")
+                .collect()
+            )
+            for r in rows:
+                t = r["term"][len("node:"):]
+                counts[t] = counts.get(t, 0) + int(r["cf"])
         stmt_types = {c.__name__ for c in _ast.stmt.__subclasses__()}
         expr_types = {c.__name__ for c in _ast.expr.__subclasses__()}
-        counts = {r["term"][len("node:"):]: int(r["cf"]) for r in rows}
         return {
             "Module": counts.get("Module", 0),
             "AST": sum(counts.values()),
             "stmt": sum(v for t, v in counts.items() if t in stmt_types),
             "expr": sum(v for t, v in counts.items() if t in expr_types),
-            "n_docs": snap.n_docs,
-            "avgdl": snap.avgdl,
+            "n_docs": gen.n_docs,
+            "avgdl": gen.avgdl,
         }
 
-class FederatedQueryService:
-    """Warm serving over a SHARDED index (operators/federation.py's
-    dfs_query_then_fetch, lifted to the latency tier): one QueryService
-    per shard, global BM25 statistics assembled per query FROM THE
-    SHARD SERVICES' OWN memos (Like expansions, term df, n_docs /
-    total_dl), per-shard driver scoring under the global idf/avgdl,
-    and a driver-side merge of the per-shard top-k. Once the shard
-    caches are warm a federated query runs ZERO Spark jobs — the same
-    steady-state contract as the single-index service — and the
-    results are bit-identical to one index over the union corpus
-    (integer-sum statistics; pytest-gated). Queries whose global df
-    exceeds the driver budget fall back to the distributed federated
-    WAND path."""
+
+class FederatedQueryService(QueryService):
+    """A QueryService over the snapshots of per-shard services, for
+    callers that hold one service per shard."""
 
     def __init__(self, services: list[QueryService]):
         if not services:
             raise ValueError("FederatedQueryService: no shards")
-        k1s = {s.k1 for s in services}
-        bs = {s.b for s in services}
-        if len(k1s) != 1 or len(bs) != 1:
-            raise ValueError(
-                f"shards disagree on BM25 params (k1={sorted(k1s)}, "
-                f"b={sorted(bs)}) — rebuild the outlier shard"
-            )
-        self.services = services
-        self.k1 = services[0].k1
-        self.b = services[0].b
-        self.reader = _FederatedReaderFacade(services)
-
-    @property
-    def meta(self) -> dict:
-        return self.reader.meta
-
-    @property
-    def n_docs(self) -> int:
-        return sum(s.n_docs for s in self.services)
-
-    def statistics(self) -> dict:
-        """Module/AST/stmt/expr counts are cf sums over node: terms —
-        additive across disjoint shards, so the federated /stats is the
-        per-shard sum under the global n_docs/avgdl."""
-        out: dict = {}
-        for s in self.services:
-            for k_, v in s.statistics().items():
-                if k_ in ("n_docs", "avgdl"):
-                    continue
-                out[k_] = out.get(k_, 0) + v
-        m = self.meta
-        out["n_docs"] = m["n_docs"]
-        out["avgdl"] = m["avgdl"]
-        return out
-
-    def analyze(self, query: LoweredQuery) -> dict:
-        snaps = [s._snap for s in self.services]
-        groups, gmeta, _ = self._global_stats(snaps, query)
-        total_df = sum(m["df"] for m in gmeta.values())
-        budget = min(s.max_driver_postings for s in self.services)
-        cf: dict[str, int] = {}
-        for sn in snaps:
-            for t, m in sn.term_meta(sorted(gmeta)).items():
-                cf[t] = cf.get(t, 0) + int(m.get("cf", 0))
-        return {
-            "query": query.source,
-            "groups": [list(g) for g in groups],
-            "terms": {
-                t: {"df": m["df"], "cf": cf.get(t, 0), "idf": m["idf"]}
-                for t, m in gmeta.items()
-            },
-            "route": (
-                "distributed-federated-wand"
-                if total_df > budget
-                else "driver-cache-federated"
-            ),
-            "total_df": total_df,
-            "n_docs": self.meta["n_docs"],
-            "n_shards": len(self.services),
-        }
-
-    def query_positions(
-        self, query: LoweredQuery, k: int = 10, offset: int = 0
-    ) -> list[dict]:
-        """Federated structural positions: per-shard driver scoring
-        under the GLOBAL stats, globally-merged tranche escalation, and
-        content verification against the OWNING shard's cache — the
-        single-index serving algorithm with the ranking federated.
-        Results equal the single-index service over the union corpus
-        (pytest-gated). Hot queries (global df over the driver budget)
-        refuse: the distributed verify stage is per-reader."""
-        from .plans.matcher import match_spans
-
-        for s in self.services:
-            s._maybe_auto_refresh()
-        # pin one snapshot PER SHARD for the whole request (a shard
-        # refresh mid-request must not mix generations)
-        snaps = [s._snap for s in self.services]
-        groups, gmeta, avgdl = self._global_stats(snaps, query)
-        if not groups or any(len(g) == 0 for g in groups):
-            return []
-        for g in groups:
-            if all(t not in gmeta for t in g):
-                return []
-        budget = min(s.max_driver_postings for s in self.services)
-        if sum(m["df"] for m in gmeta.values()) > budget:
-            # hot query: per-shard DISTRIBUTED verify under the global
-            # stats (every shard returns its verified top-(k+offset)
-            # under globally comparable scores — any global top doc is
-            # in its shard's list), then a doc-level global merge.
-            # Per-shard jobs are SUBMITTED CONCURRENTLY from a thread
-            # pool — Spark's scheduler runs them in parallel, so hot-
-            # query latency stays ~flat in n_shards instead of growing
-            # linearly with a sequential collect loop (VERDICT r06 #5;
-            # federated_topk's single-union shape is not available here
-            # because structural_topk's verify matcher is per-reader).
-            from concurrent.futures import ThreadPoolExecutor
-
-            from .operators.verify import structural_topk
-
-            stats = {
-                "avgdl": avgdl,
-                "idf_by_term": {t: m["idf"] for t, m in gmeta.items()},
-                "df_by_term": {t: m["df"] for t, m in gmeta.items()},
-            }
-
-            def _shard_rows(sn):
-                return structural_topk(
-                    sn.reader, query, k=k + offset, offset=0,
-                    groups_override=groups, stats_override=stats,
-                ).collect()
-
-            with ThreadPoolExecutor(max_workers=len(snaps)) as pool:
-                per_shard_rows = list(pool.map(_shard_rows, snaps))
-            docs: list[tuple[float, int, list]] = []
-            for rows in per_shard_rows:
-                cur: list = []
-                for r in rows:
-                    if cur and cur[0]["doc_id"] != r["doc_id"]:
-                        docs.append((cur[0]["score"], cur[0]["doc_id"], cur))
-                        cur = []
-                    cur.append(r)
-                if cur:
-                    docs.append((cur[0]["score"], cur[0]["doc_id"], cur))
-            docs.sort(key=lambda t: (-t[0], t[1]))
-            flat = [
-                r for _, _, rows_ in docs[offset:offset + k] for r in rows_
-            ]
-            return _fold_position_rows(flat, offset)
-        for sn in snaps:
-            sn._fetch_postings(list(gmeta))
-        want = k + offset
-        tranche = max(want * 4, 16)
-        verified: list[tuple[int, float, list, int]] = []
-        seen = 0
-        while True:
-            per: list[tuple[int, float, int]] = []
-            for si, sn in enumerate(snaps):
-                per.extend(
-                    (doc_id, score, si)
-                    for doc_id, score in sn._score_driver(
-                        groups, gmeta, seen + tranche, avgdl=avgdl
-                    )
-                )
-            per.sort(key=lambda t: (-t[1], t[0]))
-            ranked = per[seen:seen + tranche]
-            if not ranked:
-                break
-            by_shard: dict[int, list[int]] = {}
-            for doc_id, _, si in ranked:
-                by_shard.setdefault(si, []).append(doc_id)
-            fetched: dict[int, str | None] = {}
-            for si, ids in by_shard.items():
-                fetched.update(snaps[si]._fetch_content(ids))
-            for doc_id, score, si in ranked:
-                content = fetched.get(doc_id)
-                if content is None:
-                    continue
-                try:
-                    spans = match_spans(content, query.source)
-                except SyntaxError:
-                    continue
-                if spans:
-                    verified.append((doc_id, score, spans, si))
-            seen += len(ranked)
-            if len(verified) >= want or len(per) <= seen:
-                break
-            tranche *= 4
-        from .functions.links import github_link, username_of
-
-        out: list[dict] = []
-        for rank, (doc_id, score, spans, si) in enumerate(
-            verified[offset:offset + k], start=offset + 1
-        ):
-            repo, path, commit = snaps[si]._doc_meta(doc_id)
-            first = min(s_[0] for s_ in spans)
-            first_end = max(s_[2] for s_ in spans if s_[0] == first)
-            out.append(
-                {"doc_id": doc_id, "repo": repo, "path": path,
-                 "score": score, "rank": rank,
-                 "username": username_of(repo),
-                 "github_link": github_link(repo, commit, path, first, first_end),
-                 "linenos": sorted({s_[0] for s_ in spans}),
-                 "matches": [
-                     {"lineno": ln, "col_offset": col, "end_lineno": end_ln,
-                      "segment": seg,
-                      "github_link": github_link(repo, commit, path, ln, end_ln)}
-                     for ln, col, end_ln, _ec, seg in spans
-                 ]}
-            )
-        return out
-
-    def _global_stats(self, snaps: list[_Snapshot], query: LoweredQuery):
-        per_groups = [sn.resolve_groups(query) for sn in snaps]
-        arity = {len(g) for g in per_groups}
-        if len(arity) != 1:
-            raise ValueError("shards resolved different group arity")
-        groups = [
-            tuple(sorted({t for pg in per_groups for t in pg[i]}))
-            for i in range(arity.pop())
-        ]
-        all_terms = sorted({t for g in groups for t in g})
-        df: dict[str, int] = {}
-        for sn in snaps:
-            for t, m in sn.term_meta(all_terms).items():
-                df[t] = df.get(t, 0) + int(m["df"])
-        n_docs = sum(sn.n_docs for sn in snaps)
-        total_dl = sum(int(sn.meta["total_dl"]) for sn in snaps)
-        avgdl = total_dl / n_docs if n_docs else 0.0
-        n = float(n_docs)
-        gmeta = {
-            t: {
-                "term": t,
-                "df": d,
-                "idf": float(np.log(1.0 + (n - d + 0.5) / (d + 0.5))),
-            }
-            for t, d in df.items()
-        }
-        return groups, gmeta, avgdl
-
-    def query_topk(
-        self, query: LoweredQuery, k: int = 10, offset: int = 0,
-        field_weights: dict[str, float] | None = None,
-    ) -> list[dict]:
-        for s in self.services:
-            s._maybe_auto_refresh()
-        snaps = [s._snap for s in self.services]  # pin per-shard snapshots
-        groups, gmeta, avgdl = self._global_stats(snaps, query)
-        return self._query_topk_snaps(
-            snaps, groups, gmeta, avgdl, query, k=k, offset=offset,
-            field_weights=field_weights,
+        super().__init__(
+            [s.reader for s in services],
+            max_driver_postings=min(s.max_driver_postings for s in services),
+            max_driver_docmeta=services[0]._max_driver_docmeta,
+            max_cached_terms=services[0]._max_cached_terms,
+            auto_refresh_s=services[0].auto_refresh_s,
         )
-
-    def _query_topk_snaps(
-        self, snaps: list, groups, gmeta, avgdl,
-        query: LoweredQuery, k: int = 10, offset: int = 0,
-        field_weights: dict[str, float] | None = None,
-    ) -> list[dict]:
-        """Rank against an ALREADY-PINNED snapshot list + global stats.
-        explain_topk threads its own pinned snaps through here so the
-        ranking and the explain read the SAME generation — re-pinning
-        inside would let a concurrent auto-refresh mix generations
-        (ADVICE r07)."""
-        if not groups or any(len(g) == 0 for g in groups):
-            return []
-        for g in groups:
-            if all(t not in gmeta for t in g):
-                return []
-        budget = min(s.max_driver_postings for s in self.services)
-        if sum(m["df"] for m in gmeta.values()) > budget:
-            from .operators.federation import federated_topk
-
-            top = federated_topk(
-                snaps[0].reader.spark, None, query,
-                k=k, offset=offset, field_weights=field_weights,
-                readers=[sn.reader for sn in snaps],
-            ).collect()
-            ranked = [(r["doc_id"], r["score"]) for r in top]
-        else:
-            merged: list[tuple[int, float]] = []
-            for sn in snaps:
-                sn._fetch_postings(list(gmeta))
-                merged.extend(
-                    sn._score_driver(
-                        groups, gmeta, k + offset,
-                        field_weights=field_weights, avgdl=avgdl,
-                    )
-                )
-            merged.sort(key=lambda t: (-t[1], t[0]))
-            ranked = merged[offset:k + offset]
-
-        from .functions.links import github_link, username_of
-
-        out = []
-        for rank, (doc_id, score) in enumerate(ranked, start=offset + 1):
-            repo, path, commit = self._doc_meta_any(snaps, doc_id)
-            out.append(
-                {"doc_id": doc_id, "repo": repo, "path": path,
-                 "score": score, "rank": rank,
-                 "github_link": github_link(repo, commit, path),
-                 "username": username_of(repo)}
-            )
-        return out
-
-    def explain_topk(
-        self, query: LoweredQuery, k: int = 1,
-        field_weights: dict[str, float] | None = None,
-    ) -> list[dict]:
-        """Federated per-term BM25 explain: the top-k under the global
-        ranking, each doc's tf/dl read from its OWNER shard's warm
-        postings, idf/df taken from the GLOBAL integer-sum stats — so
-        contributions sum to the federated (single-index-identical)
-        score. Warm path: zero Spark jobs; over-budget queries collect
-        per-shard distributed explains under a stats override."""
-        for s in self.services:
-            s._maybe_auto_refresh()
-        snaps = [s._snap for s in self.services]
-        groups, gmeta, avgdl = self._global_stats(snaps, query)
-        if not groups or any(len(g) == 0 for g in groups):
-            return []
-        for g in groups:
-            if all(t not in gmeta for t in g):
-                return []
-        # rank from the SAME pinned snaps + stats the explain below
-        # reads — calling query_topk would re-pin fresh snapshots and a
-        # concurrent auto-refresh could mix generations (ADVICE r07)
-        top = self._query_topk_snaps(
-            snaps, groups, gmeta, avgdl, query, k=k,
-            field_weights=field_weights,
-        )
-        if not top:
-            return []
-        top_ids = [int(r["doc_id"]) for r in top]
-        from .operators.wand import field_weight_of
-
-        def _w(t: str) -> float:
-            return field_weight_of(t, field_weights) if field_weights else 1.0
-
-        budget = min(s.max_driver_postings for s in self.services)
-        if sum(m["df"] for m in gmeta.values()) > budget:
-            from .operators.score import explain_score
-
-            override = {
-                "avgdl": avgdl,
-                "df_by_term": {t: m["df"] for t, m in gmeta.items()},
-                "idf_by_term": {t: m["idf"] for t, m in gmeta.items()},
-            }
-            out = []
-            for sn in snaps:  # each doc matches rows in its owner only
-                out.extend(
-                    dict(r.asDict())
-                    for r in explain_score(
-                        sn.reader, query, top_ids,
-                        field_weights=field_weights,
-                        stats_override=override,
-                    ).collect()
-                )
-            out.sort(key=lambda r: (top_ids.index(r["doc_id"]), r["term"]))
-            return out
-        out = []
-        for doc_id in top_ids:
-            for sn in snaps:
-                sn._fetch_postings(list(gmeta))
-                rows = []
-                for term in sorted(gmeta):
-                    if term not in sn._postings:
-                        continue
-                    d, tf, dl = sn._postings[term]
-                    if d.size == 0:
-                        continue
-                    pos = int(np.searchsorted(d, doc_id))
-                    if pos >= d.size or int(d[pos]) != doc_id:
-                        continue
-                    idf = float(gmeta[term]["idf"]) * _w(term)
-                    contrib = float(codec.bm25_contrib(
-                        tf[pos:pos + 1], dl[pos:pos + 1], idf,
-                        avgdl, self.k1, self.b,
-                    )[0])
-                    rows.append({
-                        "doc_id": int(doc_id), "term": term,
-                        "tf": int(tf[pos]), "dl": int(dl[pos]),
-                        "df": int(gmeta[term]["df"]),
-                        "idf": float(gmeta[term]["idf"]),
-                        "weight": _w(term), "contrib": contrib,
-                    })
-                if rows:  # owner shard found — disjointness: stop here
-                    out.extend(rows)
-                    break
-        return out
-
-    def query_after(
-        self, query: LoweredQuery, cursor: tuple[float, int], k: int = 10,
-        field_weights: dict[str, float] | None = None,
-    ) -> list[dict]:
-        """Federated cursor (search_after) pagination: the page
-        strictly after ``cursor`` in the global order. Warm path: each
-        shard's driver scorer ranks its full candidate set under the
-        global stats, the merged list is keyset-filtered — zero Spark
-        jobs; over-budget: the distributed federated cursor plan."""
-        for s in self.services:
-            s._maybe_auto_refresh()
-        snaps = [s._snap for s in self.services]
-        groups, gmeta, avgdl = self._global_stats(snaps, query)
-        if not groups or any(len(g) == 0 for g in groups):
-            return []
-        for g in groups:
-            if all(t not in gmeta for t in g):
-                return []
-        s0, d0 = float(cursor[0]), int(cursor[1])
-        budget = min(s.max_driver_postings for s in self.services)
-        if sum(m["df"] for m in gmeta.values()) > budget:
-            from .operators.federation import federated_topk_after
-
-            top = federated_topk_after(
-                snaps[0].reader.spark, None, query, (s0, d0), k=k,
-                field_weights=field_weights,
-                readers=[sn.reader for sn in snaps],
-            ).collect()
-            ranked = [(r["doc_id"], r["score"]) for r in top]
-        else:
-            merged: list[tuple[int, float]] = []
-            for sn in snaps:
-                sn._fetch_postings(list(gmeta))
-                merged.extend(
-                    sn._score_driver(
-                        groups, gmeta, 1 << 31,
-                        field_weights=field_weights, avgdl=avgdl,
-                    )
-                )
-            merged.sort(key=lambda t: (-t[1], t[0]))
-            ranked = [
-                (d, s) for d, s in merged if s < s0 or (s == s0 and d > d0)
-            ][:k]
-        from .functions.links import github_link, username_of
-
-        out = []
-        for rank, (doc_id, score) in enumerate(ranked, start=1):
-            repo, path, commit = self._doc_meta_any(snaps, doc_id)
-            out.append(
-                {"doc_id": doc_id, "repo": repo, "path": path,
-                 "score": score, "rank": rank,
-                 "github_link": github_link(repo, commit, path),
-                 "username": username_of(repo)}
-            )
-        return out
-
-    def _doc_meta_any(self, snaps: list[_Snapshot], doc_id: int) -> tuple:
-        """Each doc_id lives in exactly one shard (disjoint corpora):
-        check the warm docmeta maps first, then fall back shard by
-        shard."""
-        for sn in snaps:
-            if sn._docmeta is not None and doc_id in sn._docmeta:
-                return sn._docmeta[doc_id]
-        for sn in snaps:
-            got = sn._doc_meta(doc_id)
-            # _doc_meta returns the ('?', '?', None) sentinel on a MISS
-            # (doc not in this shard) — keep probing the other shards;
-            # accepting the first sentinel made the fallback dead and
-            # federated results showed repo/path='?' for any doc above
-            # the warm docmeta bound (ADVICE r07).
-            if got != ("?", "?", None):
-                return got
-        return ("?", "?", None)
-
-
-class _FederatedReaderFacade:
-    """Duck-typed reader for the pieces web.py touches on a federated
-    service: the shared L2 result cache binds to (index_dir, version) —
-    the facade points it at shard 0's directory under a COMBINED
-    version key, so a commit on ANY shard invalidates cached results."""
-
-    def __init__(self, services: list[QueryService]):
-        self._services = services
-        self.index_dir = services[0].reader.index_dir
-        self.spark = services[0].reader.spark
-
-    @property
-    def meta(self) -> dict:
-        versions = "-".join(
-            str(s.meta.get("version", "?")) for s in self._services
-        )
-        n_docs = sum(s.n_docs for s in self._services)
-        total_dl = sum(int(s.meta["total_dl"]) for s in self._services)
-        return {
-            "version": f"fed{len(self._services)}:{versions}",
-            "build_id": "federated",
-            "n_docs": n_docs,
-            "total_dl": total_dl,
-            "avgdl": total_dl / n_docs if n_docs else 0.0,
-        }

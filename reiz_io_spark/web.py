@@ -32,6 +32,7 @@ from collections import OrderedDict
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from .plans.lower import lower_query
+from .result_cache import SharedResultCache
 from .serve import QueryService
 
 # reference parity: reiz/web/api.py:72 "240 per hour;10/minute"
@@ -55,15 +56,24 @@ def make_handler(
     # L2: the cross-frontend shared cache table next to the index (the
     # Redis-shared-by-all-workers analog, reiz/web/api.py:50-63) — a hot
     # query executes once per CLUSTER, not once per frontend process.
-    # Keyed by the index snapshot version, so a merge invalidates it.
-    l2 = None
-    if shared_cache:
-        from .result_cache import for_reader
+    # Both tiers key on the version of the generation the service
+    # serves, so a commit the service picks up invalidates them.
+    l2_bound = None
+    l2_enabled = shared_cache
 
-        try:
-            l2 = for_reader(service.reader)
-        except OSError:  # read-only index dir -> L1 only
-            l2 = None
+    def shared_for(version: str) -> SharedResultCache | None:
+        nonlocal l2_bound, l2_enabled
+        if not l2_enabled:
+            return None
+        cur = l2_bound
+        if cur is None or cur.version != version:
+            try:
+                cur = SharedResultCache(service.reader.index_dir, version)
+            except OSError:  # read-only index dir -> L1 only
+                l2_enabled = False
+                return None
+            l2_bound = cur
+        return cur
 
     class Handler(BaseHTTPRequestHandler):
         def log_message(self, fmt, *args):  # quiet test output
@@ -110,6 +120,7 @@ def make_handler(
         def do_GET(self):
             if self.path != "/stats":
                 return self._error("not found", 404)
+            shared = shared_for(service.version_key())
             m = service.meta
             with cache_lock:
                 l1_entries = len(cache)
@@ -122,7 +133,7 @@ def make_handler(
                 # cache-tier observability (the INFO a Redis deploy has)
                 "result_cache": {
                     "l1_entries": l1_entries,
-                    "l2": l2.stats() if l2 is not None else None,
+                    "l2": shared.stats() if shared is not None else None,
                 },
             }})
 
@@ -193,15 +204,18 @@ def make_handler(
                 return self._send(200, {"status": "success",
                                         "results": results,
                                         "exception": None})
-            key = json.dumps(body, sort_keys=True)
+            version = service.version_key()
+            body_key = json.dumps(body, sort_keys=True)
+            key = f"{version}\x00{body_key}"
             with cache_lock:
                 if key in cache:
                     cache.move_to_end(key)
                     return self._send(200, {"status": "success",
                                             "results": cache[key],
                                             "exception": None, "cached": True})
+            l2 = shared_for(version)
             if l2 is not None:  # another frontend may have computed it
-                shared = l2.get(key)
+                shared = l2.get(body_key)
                 if shared is not None:
                     with cache_lock:
                         cache[key] = shared
@@ -219,13 +233,16 @@ def make_handler(
                     results = service.query_topk(q, k=k, offset=offset)
             except Exception as exc:  # noqa: BLE001 — reference returns tracebacks
                 return self._error(repr(exc), 500)
-            with cache_lock:
-                cache[key] = results
-                cache.move_to_end(key)
-                while len(cache) > cache_max:  # bounded LRU (the Redis role)
-                    cache.popitem(last=False)
-            if l2 is not None:
-                l2.put(key, results)
+            # a commit picked up while the query ran: the results may be
+            # of the newer generation — cache nothing under the old key
+            if service.version_key() == version:
+                with cache_lock:
+                    cache[key] = results
+                    cache.move_to_end(key)
+                    while len(cache) > cache_max:  # bounded LRU (the Redis role)
+                        cache.popitem(last=False)
+                if l2 is not None:
+                    l2.put(body_key, results)
             self._send(200, {"status": "success", "results": results,
                              "exception": None, "cached": False})
 

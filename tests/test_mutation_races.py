@@ -236,8 +236,10 @@ def test_refresh_swaps_snapshot_atomically(spark, tmp_path):
     # generation (old postings + old stats): same ranking as before
     groups = snap0.resolve_groups(Q)
     tmeta = snap0.term_meta(sorted({t for g in groups for t in g}))
-    snap0._fetch_postings(list(tmeta))
-    old_ranked = snap0._score_driver(groups, tmeta, 10)
+    postings = snap0._fetch_postings(list(tmeta))
+    old_ranked = [
+        (d, s) for d, s, _ in snap0._score_driver(groups, tmeta, 10, postings)
+    ]
     assert [d for d, _ in old_ranked] == [r_["doc_id"] for r_ in pre]
 
 
