@@ -35,8 +35,11 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
 import time
 from collections.abc import Iterator
+from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -67,22 +70,17 @@ N_TERM_BUCKETS = 32
 ENCODE_ARROW_BATCH = 65_536
 
 
+@contextmanager
 def _arrow_batch(spark: SparkSession, n: int):
-    """Context manager: temporarily set the Arrow max batch rows around
-    one action, restoring the session default afterwards."""
-    from contextlib import contextmanager
-
-    @contextmanager
-    def _cm():
-        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-        old = spark.conf.get(key)
-        spark.conf.set(key, str(n))
-        try:
-            yield
-        finally:
-            spark.conf.set(key, old)
-
-    return _cm()
+    """Temporarily set the Arrow max batch rows around one action,
+    restoring the session default afterwards."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 def _paths(out_dir: str) -> dict[str, str]:
@@ -142,6 +140,55 @@ def _write_meta_atomic(meta_path: str, meta: dict) -> None:
         with open(hist + ".tmp", "w") as fh:
             json.dump(meta, fh, indent=2)
         os.replace(hist + ".tmp", hist)
+
+
+_VERSIONED_DIR = re.compile(r"^(dictionary|blocks|tombstones)_v\d+$")
+
+
+def _publish(out_dir: str, meta: dict, prev_meta: dict) -> dict:
+    """The publish step of every commit: flip meta.json (the commit
+    point, through the module global so one patch of
+    _write_meta_atomic reaches every mutation), then apply the one
+    retention rule — delete each dictionary_v* / blocks_v* /
+    tombstones_v* dir that neither the new snapshot nor the one it
+    replaced references. The replaced snapshot stays readable for one
+    commit (a reader that resolved its paths just before the flip keeps
+    working, as an Iceberg expire-snapshots policy would); older ones
+    expire, and so does any dir a crashed commit staged but never
+    published. Retention goes by DIR NAME, never version arithmetic:
+    ledger-only commits bump the version without minting table dirs."""
+    _write_meta_atomic(os.path.join(out_dir, "meta.json"), meta)
+    keep = {m.get("tombstones_dir") for m in (meta, prev_meta)} | {
+        os.path.basename(table_dir(out_dir, m, t))
+        for m in (meta, prev_meta)
+        for t in ("dictionary", "blocks")
+    }
+    for name in os.listdir(out_dir):
+        if _VERSIONED_DIR.match(name) and name not in keep:
+            shutil.rmtree(os.path.join(out_dir, name), ignore_errors=True)
+    return meta
+
+
+@contextmanager
+def _writer_lock(index_dir: str):
+    """The O_EXCL writer lock every index mutation holds for its whole
+    run (the same discipline as ann_index appends): two writers would
+    share the staging dirs, and the later meta flip would drop the
+    earlier commit."""
+    lock = os.path.join(index_dir, "deletes.lock")
+    try:
+        fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+    except FileExistsError:
+        raise RuntimeError(
+            f"another index writer is in flight on {index_dir} "
+            f"(lock file {lock}; remove it only if the other writer "
+            f"is known dead)"
+        ) from None
+    os.close(fd)
+    try:
+        yield
+    finally:
+        os.remove(lock)
 
 
 def prepare_docs(corpus: DataFrame, n_shards: int) -> DataFrame:
@@ -388,7 +435,28 @@ def merge_and_encode(
     dictionary_v{N}/blocks_v{N} dirs, then meta.json is flipped
     atomically (os.replace) to point at both — a crash anywhere before
     the flip leaves the previous committed index fully intact, and a
-    reader resolving through meta never observes a mixed pair."""
+    reader resolving through meta never observes a mixed pair. The
+    whole call holds the writer lock: on an index with a delete ledger
+    it rewrites the ledger and flips meta, and a concurrent delete
+    commit would otherwise be lost."""
+    with _writer_lock(out_dir):
+        return _encode_all_runs(
+            spark, out_dir, build_id, block_size, k1, b, fragment_postings
+        )
+
+
+def _encode_all_runs(
+    spark: SparkSession,
+    out_dir: str,
+    build_id: str,
+    block_size: int,
+    k1: float,
+    b: float,
+    fragment_postings: int,
+    extra: dict | None = None,
+) -> dict:
+    """merge_and_encode's body (the caller holds the writer lock);
+    ``extra`` keys join the committed meta."""
     p = _paths(out_dir)
     prev_meta: dict = {}
     if os.path.exists(p["meta"]):
@@ -503,14 +571,11 @@ def merge_and_encode(
     # compact_deletes seeing them pending would double-subtract df)
     _tomb_meta: dict = {}
     if tomb is not None:
-        from .deletes import _write_folded_ledger
+        from .deletes import _stage_ledger
 
-        folded_dir = _write_folded_ledger(spark, out_dir, prev_meta, version)
-        _tomb_meta = {
-            "tombstones_dir": os.path.basename(folded_dir),
-            "n_tombstones": prev_meta.get("n_tombstones", 0),
-            "n_tombstones_pending": 0,
-        }
+        _tomb_meta, _ = _stage_ledger(
+            spark, out_dir, tomb.withColumn("folded", F.lit(True)), version
+        )
 
     meta = {
         "version": version,
@@ -531,37 +596,9 @@ def merge_and_encode(
         "stage23_ms": int((time.perf_counter() - t1) * 1000),
         "t_stats_dict_s": round(t_dict - t1, 2),
         "t_blocks_s": round(t_blocks - t_dict, 2),
+        **(extra or {}),
     }
-    _write_meta_atomic(p["meta"], meta)  # the commit point
-    # retention by DIR, not version arithmetic: delete commits bump the
-    # snapshot version without minting table dirs, so (version,
-    # version-1) can name suffixes that never existed while the real
-    # previous pair ages out
-    _gc_stale_versions(
-        out_dir,
-        keep=_dir_versions(out_dir, meta) | _dir_versions(out_dir, prev_meta),
-    )
-    if _tomb_meta:
-        from .deletes import _gc_stale_tombstones
-
-        keep_tomb = {_tomb_meta["tombstones_dir"]}
-        if prev_meta.get("tombstones_dir"):
-            keep_tomb.add(prev_meta["tombstones_dir"])
-        _gc_stale_tombstones(out_dir, keep_tomb)
-    return meta
-
-
-def _dir_versions(out_dir: str, meta: dict) -> set[int]:
-    """The version suffixes of the dictionary/blocks dirs a meta
-    snapshot actually references (for GC retention)."""
-    import re
-
-    out: set[int] = set()
-    for t in ("dictionary", "blocks"):
-        m = re.search(r"_v(\d+)$", table_dir(out_dir, meta, t))
-        if m:
-            out.add(int(m.group(1)))
-    return out
+    return _publish(out_dir, meta, prev_meta)
 
 
 def _hot_map(dictionary: DataFrame, fragment_postings: int) -> DataFrame:
@@ -682,8 +719,6 @@ def _assemble_version(
     are immutable once written, so shared inodes are safe). Nothing
     here mutates the current version; the new dir only becomes visible
     when meta.json is flipped."""
-    import shutil
-
     os.makedirs(new_dir, exist_ok=True)
     affected = {f"term_bucket={b}" for b in affected_buckets}
     staged = set()
@@ -748,26 +783,6 @@ def snapshots(out_dir: str) -> list[dict]:
     return out
 
 
-def _gc_stale_versions(out_dir: str, keep: tuple[int, ...]) -> None:
-    """Remove versioned dictionary/blocks dirs no longer referenced.
-    The PREVIOUS version is kept one merge cycle (snapshot retention, as
-    an Iceberg expire-snapshots policy would) so an IndexReader that
-    resolved its paths just before a flip keeps working; older versions
-    go."""
-    import re
-    import shutil
-
-    pat = re.compile(r"^(dictionary|blocks)_v(\d+)$")
-    try:
-        names = os.listdir(out_dir)
-    except OSError:
-        return
-    for name in names:
-        m = pat.match(name)
-        if m and int(m.group(2)) not in keep:
-            shutil.rmtree(os.path.join(out_dir, name), ignore_errors=True)
-
-
 def merge_incremental(spark: SparkSession, out_dir: str) -> dict:
     """Merge batches ingested since the last merge into the existing
     dictionary + blocks — WITHOUT re-reading or re-encoding untouched
@@ -778,13 +793,15 @@ def merge_incremental(spark: SparkSession, out_dir: str) -> dict:
     affected terms, and the (tiny) lineage table. Terms untouched by the
     new batches keep their existing block files byte-for-byte.
 
-    Steps: new runs -> new (df, cf) per term -> outer-merge into the
-    affected buckets' dictionary rows; old blocks of affected terms are
-    decoded back to postings, unioned with the new postings (distinct ->
-    idempotent under replay of a half-committed merge), re-salted with
-    the UPDATED df (fragment membership is a pure function of doc_id, so
-    the result is content-identical to a from-scratch rebuild — pytest-
-    gated), re-encoded, and committed as a NEW table version.
+    The new runs are an ADDED delta for _merge_term_delta (the one
+    commit path it shares with compact_deletes): (df, cf) per term
+    outer-merged into the affected buckets' dictionary rows, the
+    affected fragments' blocks decoded, unioned with the new postings
+    (duplicates removed in the encoder -> idempotent under replay of a
+    half-committed merge), re-salted with the UPDATED df (fragment
+    membership is a pure function of doc_id, so the result is
+    content-identical to a from-scratch rebuild — pytest-gated),
+    re-encoded, and assembled as a NEW table version.
 
     Commit protocol (crash-safe, replay-idempotent): staged results are
     assembled into dictionary_v{N+1}/blocks_v{N+1} (affected buckets
@@ -793,9 +810,9 @@ def merge_incremental(spark: SparkSession, out_dir: str) -> dict:
     crash anywhere before the flip leaves v{N} fully intact AND
     merged_batches unchanged, so a replay re-reads the OLD dictionary —
     df/cf deltas are never applied twice (the dictionary-level analog of
-    the postings distinct()). A concurrent reader resolves both dirs
-    from one meta snapshot and never sees a mixed pair; the previous
-    version is retained one merge cycle before GC.
+    the postings dedup). A concurrent reader resolves both dirs from
+    one meta snapshot and never sees a mixed pair; the previous version
+    is retained one commit before GC.
 
     Collection stats (n_docs, avgdl) come from the lineage table over
     ALL batches; block metadata is avgdl-free (codec.block_bound), so
@@ -804,31 +821,25 @@ def merge_incremental(spark: SparkSession, out_dir: str) -> dict:
     Update batches (operators/updates.py) carry a tombstone/revert
     sidecar; it folds into the ledger inside the SAME meta flip, so a
     document update is delete-then-add with ONE commit point. The merge
-    runs under the deletes lock: it rewrites the ledger and flips meta,
+    runs under the writer lock: it rewrites the ledger and flips meta,
     and a concurrent delete/compact commit would otherwise be lost."""
-    from .deletes import _acquire_lock, _gc_stale_tombstones, apply_update_sidecars
+    with _writer_lock(out_dir):
+        return _merge_incremental_locked(spark, out_dir)
+
+
+def _merge_incremental_locked(spark: SparkSession, out_dir: str) -> dict:
+    from .deletes import (
+        _stage_ledger,
+        apply_update_sidecars,
+        deleted_stats,
+        read_tombstones,
+    )
+    from .updates import _consume_sidecars
 
     p = _paths(out_dir)
-    lock = _acquire_lock(out_dir)
-    try:
-        return _merge_incremental_locked(
-            spark, out_dir, p, apply_update_sidecars, _gc_stale_tombstones
-        )
-    finally:
-        os.remove(lock)
-
-
-def _merge_incremental_locked(
-    spark: SparkSession, out_dir: str, p: dict, apply_update_sidecars,
-    _gc_stale_tombstones,
-) -> dict:
     with open(p["meta"]) as fh:
         meta = json.load(fh)
-    version = int(meta.get("version", 1))
-    cur_dict_dir = table_dir(out_dir, meta, "dictionary")
-    cur_blocks_dir = table_dir(out_dir, meta, "blocks")
-    block_size = int(meta["block_size"])
-    fragment_postings = int(meta.get("fragment_postings", FRAGMENT_POSTINGS))
+    prev_meta = dict(meta)
     merged = set(meta.get("merged_batches", []))
     lin = spark.read.schema(LINEAGE).parquet(p["lineage"]).filter(
         F.col("status") == "done"
@@ -856,198 +867,38 @@ def _merge_incremental_locked(
     # contract), and a later compact_deletes subtracts exactly the
     # df/cf this merge adds — excluding them here would desync the
     # dictionary from compaction's arithmetic.
-    from .deletes import read_tombstones as _read_tombstones
-
-    tomb = _read_tombstones(spark, out_dir, meta)
+    tomb = read_tombstones(spark, out_dir, meta)
     if tomb is not None:
         new_runs = new_runs.join(
             tomb.filter(F.col("folded")).select("doc_id"),
             "doc_id", "left_anti",
         )
     phases: dict[str, float] = {}
+    affected_buckets = _merge_term_delta(
+        spark, out_dir, meta, new_runs, removed=False, phases=phases
+    )
     t_ph = time.perf_counter()
-    new_stats = (
-        new_runs.groupBy("term")
-        .agg(F.count("*").alias("df_new"), F.sum("tf").alias("cf_new"))
-        .withColumn("term_id", F.xxhash64("term"))
-        .withColumn(
-            "term_bucket", F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)).cast("int")
-        )
-    ).persist()
-    affected_buckets = sorted(
-        r["term_bucket"] for r in new_stats.select("term_bucket").distinct().collect()
-    )
-    affected_ids = new_stats.select("term_id").distinct()
-    phases["new_stats"] = time.perf_counter() - t_ph
-
-    # --- dictionary: outer-merge within the affected buckets only ----------
-    t_ph = time.perf_counter()
-    old_dict = spark.read.schema(DICTIONARY_ON_DISK).parquet(cur_dict_dir).filter(
-        F.col("term_bucket").isin(affected_buckets)
-    )
-    upd_dict = (
-        old_dict.select("term", "df", "cf")
-        .join(new_stats.select("term", "df_new", "cf_new"), "term", "full_outer")
-        .select(
-            "term",
-            (F.coalesce("df", F.lit(0)) + F.coalesce("df_new", F.lit(0))).alias("df"),
-            (F.coalesce("cf", F.lit(0)) + F.coalesce("cf_new", F.lit(0))).alias("cf"),
-        )
-        .withColumn("term_id", F.xxhash64("term"))
-        .withColumn(
-            "term_bucket", F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)).cast("int")
-        )
-    )
-    dict_staging = os.path.join(out_dir, "dictionary_staging")
-    (
-        upd_dict.repartition("term_bucket")  # whole buckets per task, AQE-sized
-        .write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .parquet(dict_staging)
-    )
-    # collision invariant over the staged parquet (not the join plan, so
-    # the outer-join isn't computed twice): rows are one-per-term, so a
-    # collision exists iff count(*) > countDistinct(term_id)
-    staged_dict = spark.read.schema(DICTIONARY_ON_DISK).parquet(dict_staging)
-    inv = staged_dict.agg(
-        F.count("*").alias("n_terms"), F.countDistinct("term_id").alias("n_ids")
-    ).collect()[0]
-    collisions = int(inv["n_terms"]) - int(inv["n_ids"])
-    if collisions:
-        raise RuntimeError(f"xxhash64 term_id collision on {collisions} ids")
-    phases["dict_write"] = time.perf_counter() - t_ph
-    t_ph = time.perf_counter()
-
-    # --- blocks: re-encode ONLY the affected FRAGMENTS ----------------------
-    # Fragment membership is salt = pmod(xxhash64(doc_id), n_frag) — a
-    # pure function of doc_id — so a block's fragment is derivable from
-    # any member doc: pmod(xxhash64(first_doc_id), n_frag). For an
-    # affected term whose fragment count is UNCHANGED by this merge's
-    # df delta, only the fragments actually receiving new postings are
-    # decoded and re-encoded; the rest keep their block rows
-    # byte-for-byte. Without this, one new posting in a corpus-wide
-    # hot term (node:Call at 10^12 docs) would re-encode the ENTIRE
-    # posting list — the difference between update cost ∝ changed data
-    # and update cost ∝ corpus. Terms that are new, or whose n_frag
-    # steps (df crosses a fragment boundary), fall back to full
-    # re-encode (fragment membership reshuffles).
-    old_blocks = spark.read.schema(BLOCKS_ON_DISK).parquet(cur_blocks_dir).filter(
-        F.col("term_bucket").isin(affected_buckets)
-    )
-    new_postings = new_runs.withColumn("term_id", F.xxhash64("term")).select(
-        "term_id", "doc_id", "tf", "dl"
-    )
-    fp = F.lit(float(fragment_postings))
-    frag_plan = (
-        new_stats.select("term_id", "df_new")
-        .join(
-            old_dict.select("term_id", F.col("df").alias("df_old")),
-            "term_id", "left",
-        )
-        .select(
-            "term_id",
-            F.greatest(
-                F.lit(1), F.ceil(F.coalesce("df_old", F.lit(0)) / fp)
-            ).cast("int").alias("nf_old"),
-            F.greatest(
-                F.lit(1),
-                F.ceil(
-                    (F.coalesce("df_old", F.lit(0)) + F.col("df_new")) / fp
-                ),
-            ).cast("int").alias("nf_new"),
-            F.col("df_old").isNotNull().alias("existed"),
-        )
-    )
-    partial = frag_plan.filter(
-        F.col("existed") & (F.col("nf_old") == F.col("nf_new"))
-    ).select("term_id", F.col("nf_new").alias("n_frag"))
-    full_ids = frag_plan.filter(
-        ~(F.col("existed") & (F.col("nf_old") == F.col("nf_new")))
-    ).select("term_id")
-    touched = (
-        new_postings.join(partial, "term_id")
-        .select(
-            "term_id",
-            F.pmod(F.xxhash64("doc_id"), F.col("n_frag")).cast("int").alias("salt"),
-        )
-        .distinct()
-    )
-    partial_blocks = old_blocks.join(partial, "term_id").withColumn(
-        "salt",
-        F.pmod(F.xxhash64("first_doc_id"), F.col("n_frag")).cast("int"),
-    )
-    blk_cols = [f.name for f in BLOCKS_WITH_BUCKET.fields]
-    keep_blocks = (
-        old_blocks.join(affected_ids, "term_id", "left_anti")
-        .unionByName(
-            partial_blocks.join(touched, ["term_id", "salt"], "left_anti")
-            .select(*blk_cols)
-        )
-    )
-    decode_blocks = (
-        old_blocks.join(full_ids, "term_id", "left_semi")
-        .unionByName(
-            partial_blocks.join(touched, ["term_id", "salt"], "left_semi")
-            .select(*blk_cols)
-        )
-    )
-    old_postings = _decode_blocks_to_postings(decode_blocks)
-    # replay idempotence WITHOUT a distinct(): duplicate postings from
-    # a replayed half-committed merge are removed inside the block
-    # encoder (sorted-adjacent mask in _make_block_encoder — rows are
-    # sorted by (term_id, salt, doc_id) there, so duplicates are
-    # adjacent). The old .distinct() was a full exchange of every
-    # decoded posting on a key different from the encode shuffle's —
-    # two corpus-sized shuffles where one suffices (guide §2.4).
-    postings = old_postings.unionByName(new_postings)
-    hot = _hot_map(
-        staged_dict.filter(
-            F.col("term_bucket").isin(affected_buckets)
-        ),
-        fragment_postings,
-    )
-    new_blocks = _encode_postings(spark, postings, hot, block_size)
-    blocks_staging = os.path.join(out_dir, "blocks_staging")
-    cols = [f.name for f in BLOCKS_WITH_BUCKET.fields]
-    # The KEPT rows (everything in an affected bucket that this merge
-    # does not re-encode) and the re-encoded rows go out in ONE write
-    # behind one bucket exchange, so every staged bucket dir holds one
-    # file, as after a full build. Writing the kept rows shuffle-free
-    # and appending the new ones would save that exchange but leave two
-    # files per affected bucket, and more after every commit (the scan
-    # splits a multi-file bucket across tasks). The exchange hashes
-    # whole buckets into one task each and AQE sizes it from the data.
-    with _arrow_batch(spark, ENCODE_ARROW_BATCH):
-        (
-            keep_blocks.select(*cols)
-            .unionByName(new_blocks.select(*cols))
-            .repartition("term_bucket")
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(blocks_staging)
-        )
-    new_stats.unpersist()
-    phases["blocks_write"] = time.perf_counter() - t_ph
-    t_ph = time.perf_counter()
-
-    # --- commit: assemble next version, then ONE atomic meta flip -----------
-    new_version = version + 1
-    new_dict_dir = os.path.join(out_dir, f"dictionary_v{new_version}")
-    new_blocks_dir = os.path.join(out_dir, f"blocks_v{new_version}")
-    _assemble_version(cur_blocks_dir, blocks_staging, new_blocks_dir, affected_buckets)
-    _assemble_version(cur_dict_dir, dict_staging, new_dict_dir, affected_buckets)
+    new_version = int(meta.get("version", 1)) + 1
     # update-batch sidecars: stage the rewritten tombstone ledger and
     # point meta at it — published by the same flip below, so the new
     # version's postings and the old versions' tombstones appear
     # together (the Lucene updateDocument contract)
-    prev_tomb = meta.get("tombstones_dir")
-    sidecars_applied = apply_update_sidecars(
-        spark, out_dir, meta, new_batches, new_version
-    )
+    ledger = apply_update_sidecars(spark, out_dir, meta, new_batches, new_version)
+    if ledger is not None:
+        tomb_meta, (del_n, del_dl) = _stage_ledger(
+            spark, out_dir, ledger, new_version
+        )
+        meta.update(tomb_meta)
+    else:
+        # folded_only: pending tombstones still sit in the blocks (and
+        # in the dictionary's df), so they keep counting toward
+        # n_docs/avgdl until compact_deletes folds them — the Lucene
+        # live-docs contract
+        del_n, del_dl = deleted_stats(spark, out_dir, meta, folded_only=True)
     # Stats restricted to the batches actually being PUBLISHED
     # (all_batches was snapshotted above): the lineage scan re-executes
     # at collect time, and a batch landing mid-merge (batch landing does
-    # not hold the deletes lock) would otherwise be counted in
+    # not hold the writer lock) would otherwise be counted in
     # n_docs/avgdl while being in neither merged_batches nor the blocks
     # — violating the fsck collection-stats invariant (ADVICE r07).
     # Matches the merged-only discipline of compact_deletes and fsck.
@@ -1055,31 +906,25 @@ def _merge_incremental_locked(
         F.sum(F.col("n_files") - F.col("n_parse_failed")).alias("n_docs"),
         F.sum("n_terms").alias("total_dl"),
     ).collect()[0]
-    from .deletes import deleted_stats as _deleted_stats
-
-    # folded_only: pending tombstones still sit in the blocks (and in
-    # the dictionary's df), so they keep counting toward n_docs/avgdl
-    # until compact_deletes folds them — the Lucene live-docs contract
-    del_n, del_dl = _deleted_stats(spark, out_dir, meta, folded_only=True)
     n_docs = int(stats["n_docs"] or 0) - del_n
     total_dl = int(stats["total_dl"] or 0) - del_dl
+    if affected_buckets is not None:  # None: the batches hold no posting
+        meta["dictionary_dir"] = f"dictionary_v{new_version}"
+        meta["blocks_dir"] = f"blocks_v{new_version}"
     meta.update(
         {
             "version": new_version,
-            "dictionary_dir": os.path.basename(new_dict_dir),
-            "blocks_dir": os.path.basename(new_blocks_dir),
             "n_docs": n_docs,
             "total_dl": total_dl,
             "avgdl": total_dl / n_docs if n_docs else 0.0,
             "merged_batches": all_batches,
-            "term_id_collisions": collisions,
             "last_merge_ms": int((time.perf_counter() - t0) * 1000),
             "last_merge_new_batches": new_batches,
-            "last_merge_affected_buckets": affected_buckets,
+            "last_merge_affected_buckets": affected_buckets or [],
             # per-phase attribution (VERDICT r07 #1): new_stats = new
             # runs agg, dict_write = outer-merge + staging + collision
             # check, blocks_write = keep/decode/re-encode + staging,
-            # sidecar_commit = assemble + ledger + stats + flip
+            # sidecar_commit = ledger + stats + flip
             "last_merge_phases_ms": {
                 k: int(v * 1000) for k, v in {
                     **phases,
@@ -1088,25 +933,224 @@ def _merge_incremental_locked(
             },
         }
     )
-    _write_meta_atomic(p["meta"], meta)  # the commit point
-    # dir-based retention (see merge_and_encode): cur_*_dir is the pair
-    # this merge replaced, whatever its suffix; a delete commit between
-    # merges makes (new_version, version) name a phantom suffix
-    _gc_stale_versions(
-        out_dir,
-        keep={new_version}
-        | _dir_versions(out_dir, {"dictionary_dir": os.path.basename(cur_dict_dir),
-                                  "blocks_dir": os.path.basename(cur_blocks_dir)}),
-    )
-    if sidecars_applied:
-        from .updates import _consume_sidecars
-
-        keep_tomb = {meta["tombstones_dir"]}
-        if prev_tomb:
-            keep_tomb.add(prev_tomb)
-        _gc_stale_tombstones(out_dir, keep_tomb)
+    _publish(out_dir, meta, prev_meta)
+    if ledger is not None:
         _consume_sidecars(out_dir, new_batches)
     return meta
+
+
+def _merge_term_delta(
+    spark: SparkSession,
+    out_dir: str,
+    meta: dict,
+    delta_runs: DataFrame,
+    removed: bool,
+    phases: dict[str, float],
+) -> list[int] | None:
+    """The one term-delta merge behind every posting mutation: fold the
+    runs rows (term, doc_id, tf, dl) of ``delta_runs`` into the
+    dictionary and blocks of ``meta``'s snapshot — ADDED
+    (merge_incremental) or REMOVED (compact_deletes) — and assemble
+    dictionary_v{N+1}/blocks_v{N+1}, N = meta["version"]. Nothing is
+    published: the caller adds its own ledger and stats and flips meta
+    (_publish). Returns the affected term buckets, or None (nothing
+    staged) when the delta holds no posting.
+
+    Steps, each written once for both signs:
+    - signed (df, cf) per term, and the term buckets they touch;
+    - dictionary: one full outer join within the affected buckets,
+      then df > 0 (never drops a row for a merge; drops the terms a
+      compaction emptied);
+    - fragment plan: a block's fragment is pmod(xxhash64(first_doc_id),
+      n_frag), a pure function of doc_id. A term whose df stays
+      positive with an UNCHANGED fragment count decodes and re-encodes
+      only the fragments the delta touches; the rest keep their block
+      rows byte-for-byte. New or emptied terms, and terms whose n_frag
+      steps, re-encode whole (fragment membership reshuffles). Without
+      this, one posting in a corpus-wide hot term (node:Call at 10^12
+      docs) would re-encode the ENTIRE posting list — update cost ∝
+      corpus instead of ∝ changed data;
+    - re-encode input: decoded ∪ added postings, or decoded minus the
+      removed doc_ids;
+    - kept and re-encoded block rows in ONE bucket-partitioned write,
+      so every staged bucket dir holds one file, as after a full build
+      (kept rows written shuffle-free plus an appended write would
+      save the exchange but leave two files per affected bucket, more
+      after every commit). AQE sizes each bucket exchange from the
+      data, whole buckets per task.
+
+    Both persisted intermediates are released in a ``finally``, so a
+    failed commit leaks no cached RDD."""
+    version = int(meta.get("version", 1))
+    cur_dict_dir = table_dir(out_dir, meta, "dictionary")
+    cur_blocks_dir = table_dir(out_dir, meta, "blocks")
+    block_size = int(meta["block_size"])
+    fragment_postings = int(meta.get("fragment_postings", FRAGMENT_POSTINGS))
+    sign = -1 if removed else 1
+    t_ph = time.perf_counter()
+    # persisted: the stats, the touched-fragment map and the re-encode
+    # input all consume the delta — uncached, a compaction's pruned
+    # runs scan + semi join ran once per consumer
+    delta_runs = delta_runs.persist()
+    delta = (
+        delta_runs.groupBy("term")
+        .agg(
+            (F.count("*") * sign).alias("df_delta"),
+            (F.sum("tf") * sign).alias("cf_delta"),
+        )
+        .withColumn("term_id", F.xxhash64("term"))
+        .withColumn(
+            "term_bucket", F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)).cast("int")
+        )
+    ).persist()
+    try:
+        affected_buckets = sorted(
+            r["term_bucket"] for r in delta.select("term_bucket").distinct().collect()
+        )
+        phases["del_stats" if removed else "new_stats"] = time.perf_counter() - t_ph
+        if not affected_buckets:
+            return None
+        affected_ids = delta.select("term_id").distinct()
+
+        # --- dictionary: outer-merge within the affected buckets only ------
+        t_ph = time.perf_counter()
+        old_dict = spark.read.schema(DICTIONARY_ON_DISK).parquet(cur_dict_dir).filter(
+            F.col("term_bucket").isin(affected_buckets)
+        )
+        upd_dict = (
+            old_dict.select("term", "df", "cf")
+            .join(delta.select("term", "df_delta", "cf_delta"), "term", "full_outer")
+            .select(
+                "term",
+                (F.coalesce("df", F.lit(0)) + F.coalesce("df_delta", F.lit(0))).alias("df"),
+                (F.coalesce("cf", F.lit(0)) + F.coalesce("cf_delta", F.lit(0))).alias("cf"),
+            )
+            .filter(F.col("df") > 0)
+            .withColumn("term_id", F.xxhash64("term"))
+            .withColumn(
+                "term_bucket", F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)).cast("int")
+            )
+        )
+        dict_staging = os.path.join(out_dir, "dictionary_staging")
+        (
+            upd_dict.repartition("term_bucket")  # whole buckets per task, AQE-sized
+            .write.mode("overwrite")
+            .partitionBy("term_bucket")
+            .parquet(dict_staging)
+        )
+        staged_dict = spark.read.schema(DICTIONARY_ON_DISK).parquet(dict_staging)
+        if not removed:
+            # collision invariant over the staged parquet (not the join
+            # plan, so the outer join isn't computed twice): rows are
+            # one-per-term, so a collision exists iff count(*) >
+            # countDistinct(term_id). Removing terms cannot create one.
+            inv = staged_dict.agg(
+                F.count("*").alias("n_terms"), F.countDistinct("term_id").alias("n_ids")
+            ).collect()[0]
+            collisions = int(inv["n_terms"]) - int(inv["n_ids"])
+            if collisions:
+                raise RuntimeError(f"xxhash64 term_id collision on {collisions} ids")
+        phases["dict_write"] = time.perf_counter() - t_ph
+
+        # --- blocks: re-encode ONLY the affected FRAGMENTS -----------------
+        t_ph = time.perf_counter()
+        old_blocks = spark.read.schema(BLOCKS_ON_DISK).parquet(cur_blocks_dir).filter(
+            F.col("term_bucket").isin(affected_buckets)
+        )
+        delta_postings = delta_runs.withColumn("term_id", F.xxhash64("term")).select(
+            "term_id", "doc_id", "tf", "dl"
+        )
+        fp = F.lit(float(fragment_postings))
+        df_old = F.coalesce("df_old", F.lit(0))
+        df_new = df_old + F.col("df_delta")
+        nf_old = F.greatest(F.lit(1), F.ceil(df_old / fp)).cast("int")
+        nf_new = F.greatest(F.lit(1), F.ceil(df_new / fp)).cast("int")
+        frag_plan = (
+            delta.select("term_id", "df_delta")
+            .join(
+                old_dict.select("term_id", F.col("df").alias("df_old")),
+                "term_id", "left",
+            )
+            .select(
+                "term_id",
+                nf_new.alias("n_frag"),
+                (
+                    F.col("df_old").isNotNull() & (df_new > 0) & (nf_old == nf_new)
+                ).alias("partial"),
+            )
+        )
+        partial = frag_plan.filter(F.col("partial")).select("term_id", "n_frag")
+        full_ids = frag_plan.filter(~F.col("partial")).select("term_id")
+        touched = (
+            delta_postings.join(partial, "term_id")
+            .select(
+                "term_id",
+                F.pmod(F.xxhash64("doc_id"), F.col("n_frag")).cast("int").alias("salt"),
+            )
+            .distinct()
+        )
+        partial_blocks = old_blocks.join(partial, "term_id").withColumn(
+            "salt",
+            F.pmod(F.xxhash64("first_doc_id"), F.col("n_frag")).cast("int"),
+        )
+        cols = [f.name for f in BLOCKS_WITH_BUCKET.fields]
+        keep_blocks = (
+            old_blocks.join(affected_ids, "term_id", "left_anti")
+            .unionByName(
+                partial_blocks.join(touched, ["term_id", "salt"], "left_anti")
+                .select(*cols)
+            )
+        )
+        decode_blocks = (
+            old_blocks.join(full_ids, "term_id", "left_semi")
+            .unionByName(
+                partial_blocks.join(touched, ["term_id", "salt"], "left_semi")
+                .select(*cols)
+            )
+        )
+        decoded = _decode_blocks_to_postings(decode_blocks)
+        if removed:
+            postings = decoded.join(
+                F.broadcast(delta_runs.select("doc_id").distinct()),
+                "doc_id", "left_anti",
+            )
+        else:
+            # replay idempotence WITHOUT a distinct(): duplicate postings
+            # from a replayed half-committed merge are removed inside the
+            # block encoder (sorted-adjacent mask in _make_block_encoder)
+            # — a distinct() here would be a second corpus-sized exchange
+            # on a key different from the encode shuffle's (guide §2.4)
+            postings = decoded.unionByName(delta_postings)
+        hot = _hot_map(
+            staged_dict.filter(F.col("term_bucket").isin(affected_buckets)),
+            fragment_postings,
+        )
+        new_blocks = _encode_postings(spark, postings, hot, block_size)
+        blocks_staging = os.path.join(out_dir, "blocks_staging")
+        with _arrow_batch(spark, ENCODE_ARROW_BATCH):
+            (
+                keep_blocks.select(*cols)
+                .unionByName(new_blocks.select(*cols))
+                .repartition("term_bucket")
+                .write.mode("overwrite")
+                .partitionBy("term_bucket")
+                .parquet(blocks_staging)
+            )
+        phases["blocks_write"] = time.perf_counter() - t_ph
+    finally:
+        delta.unpersist()
+        delta_runs.unpersist()
+
+    new_version = version + 1
+    _assemble_version(
+        cur_blocks_dir, blocks_staging,
+        os.path.join(out_dir, f"blocks_v{new_version}"), affected_buckets,
+    )
+    _assemble_version(
+        cur_dict_dir, dict_staging,
+        os.path.join(out_dir, f"dictionary_v{new_version}"), affected_buckets,
+    )
+    return affected_buckets
 
 
 def build_index(
@@ -1124,14 +1168,11 @@ def build_index(
     after a crash: completed shards are skipped via the lineage
     anti-join; the merge + block stage is deterministic given runs."""
     s1 = stage1_ingest(spark, corpus, out_dir, build_id=build_id, n_shards=n_shards)
-    meta = merge_and_encode(
-        spark, out_dir, build_id=build_id, block_size=block_size,
-        k1=k1, b=b, fragment_postings=fragment_postings,
-    )
-    meta.update(s1)
-    meta["n_shards"] = n_shards
-    _write_meta_atomic(_paths(out_dir)["meta"], meta)
-    return meta
+    with _writer_lock(out_dir):
+        return _encode_all_runs(
+            spark, out_dir, build_id, block_size, k1, b, fragment_postings,
+            extra={**s1, "n_shards": n_shards},
+        )
 
 
 def _make_block_encoder(block_size: int):

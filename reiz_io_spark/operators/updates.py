@@ -29,11 +29,12 @@ merge (operators/build.py::merge_incremental) machinery:
 
 Atomicity: the tombstone/untombstone rows are staged as a per-batch
 sidecar (``update_ledger/batch=<id>/``) next to the staged runs/docs/
-content partitions; ``merge_incremental`` folds the sidecar into the
-tombstone ledger inside the SAME meta.json flip that publishes the new
-blocks/dictionary. Queries therefore never observe the intermediate
-states (both versions visible, or neither) — the Lucene updateDocument
-contract. A crash anywhere before the flip leaves the previous
+content partitions; ``merge_incremental`` — the ADDED-delta caller of
+build._merge_term_delta, the one term-delta merge compact_deletes also
+runs — folds the sidecar into the tombstone ledger inside the SAME
+meta.json flip that publishes the new blocks/dictionary. Queries
+therefore never observe the intermediate states (both versions
+visible, or neither) — the Lucene updateDocument contract. A crash anywhere before the flip leaves the previous
 snapshot intact; replaying ``update_docs`` with the same batch is
 idempotent (same deterministic batch id -> lineage resume + dynamic
 partition overwrite + doc_id anti-join, sidecar overwrite).
@@ -42,9 +43,9 @@ Scale shape (100 TB): cost ∝ changed files only — one docs-table scan
 to resolve live versions (predicate pushdown on nothing; it is a
 doc_id/repo/path/sha projection), the normal incremental ingest of the
 changed files, and a merge touching only the affected term buckets.
-The tombstoned old postings are folded out later by the existing
-``compact_deletes`` (cost ∝ deleted postings). Nothing rewrites
-untouched data.
+The tombstoned old postings are folded out later by
+``compact_deletes`` (the same delta merge with a REMOVED delta, cost ∝
+deleted postings). Nothing rewrites untouched data.
 
 After ``update_docs`` + ``compact_deletes`` the index ranks and scores
 exactly like a from-scratch build over the updated corpus
@@ -62,8 +63,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import DOCS_ON_DISK
-from .build import _paths, merge_incremental, prepare_docs, stage1_ingest
-from .deletes import _acquire_lock, read_tombstones
+from .build import (
+    _paths,
+    _writer_lock,
+    merge_incremental,
+    prepare_docs,
+    stage1_ingest,
+)
+from .deletes import _commit_ledger, apply_update_sidecars, read_tombstones
 
 UPDATE_LEDGER_SCHEMA = (
     "doc_id long, doclen long, parse_ok boolean, action string"
@@ -105,12 +112,11 @@ def update_docs(
         meta = json.load(fh)
     n_shards = int(meta.get("n_shards", 8))
 
-    # The decision phase runs under the deletes lock: the live/pending
+    # The decision phase runs under the writer lock: the live/pending
     # classification must not race a delete/compact commit. The lock is
     # released before merge_incremental, which re-acquires it for the
     # ledger application (single-writer discipline, no re-entrance).
-    lock = _acquire_lock(index_dir)
-    try:
+    with _writer_lock(index_dir):
         new = prepare_docs(corpus, n_shards).select(
             "repo", "path", "commit", "content", "lang",
             F.col("content_sha256").alias("new_sha"),
@@ -274,8 +280,6 @@ def update_docs(
         except BaseException:
             changed.unpersist()
             raise
-    finally:
-        os.remove(lock)
 
     try:
         if has_adds:
@@ -301,34 +305,19 @@ def _commit_revert_only(
 ) -> dict:
     """A batch consisting purely of reverts to pending-tombstoned
     versions: no new postings, so there is nothing for the merge to
-    fold — the commit is a ledger rewrite (undelete semantics, same
-    commit protocol as deletes.undelete_docs)."""
-    from .deletes import _gc_stale_tombstones, apply_update_sidecars
-
-    lock = _acquire_lock(index_dir)
-    try:
-        p = _paths(index_dir)
-        with open(p["meta"]) as fh:
+    fold — the commit is a ledger rewrite (undelete semantics, the
+    ledger-only commit deletes.undelete_docs uses)."""
+    with _writer_lock(index_dir):
+        with open(_paths(index_dir)["meta"]) as fh:
             meta = json.load(fh)
-        version = int(meta.get("version", 1)) + 1
-        prev_tomb = meta.get("tombstones_dir")
-        changed = apply_update_sidecars(
-            spark, index_dir, meta, [batch_id], version
+        ledger = apply_update_sidecars(
+            spark, index_dir, meta, [batch_id], int(meta.get("version", 1)) + 1
         )
-        if not changed:
+        if ledger is None:
             return meta
-        meta["version"] = version
-        from .build import _write_meta_atomic
-
-        _write_meta_atomic(p["meta"], meta)
-        keep = {meta["tombstones_dir"]}
-        if prev_tomb:
-            keep.add(prev_tomb)
-        _gc_stale_tombstones(index_dir, keep)
+        _commit_ledger(spark, index_dir, meta, ledger)
         _consume_sidecars(index_dir, [batch_id])
         return meta
-    finally:
-        os.remove(lock)
 
 
 def _consume_sidecars(index_dir: str, batch_ids: list[str]) -> None:

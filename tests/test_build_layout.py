@@ -6,7 +6,9 @@
   file, and the index carries one parquet footer per bucket.
 - One build_index into a fresh directory launches a bounded number of
   Spark jobs, so an avoidable job (a schema-inference read, a collect
-  over nothing) fails here instead of hiding in build wall time.
+  over nothing) fails here instead of hiding in build wall time. The
+  two delta commits, update_docs (with its merge) and compact_deletes,
+  carry the same kind of bound.
 """
 
 from __future__ import annotations
@@ -27,6 +29,31 @@ from reiz_io_spark.sources.corpus import synth_corpus
 # (local[8], 8 shuffle partitions): 22 when the stage-1 docs re-reads
 # inferred their schema and the resume check collected an empty lineage
 MAX_BUILD_JOBS = 18
+# Spark jobs of update_docs (stage-1 ingest + merge) and of the
+# compact_deletes that folds the replaced versions, on the same corpus,
+# measured when merge and compaction still had separate delta merges
+MAX_UPDATE_JOBS = 64
+MAX_COMPACT_JOBS = 42
+
+
+def _jobs_in_group(spark, group: str, fn) -> int:
+    """Run fn() under a Spark job group; return the jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _update_batch(corpus):
+    victim = corpus.select("repo").distinct().orderBy("repo").first()["repo"]
+    return corpus.filter(F.col("repo") == victim).withColumn(
+        "content",
+        F.concat(F.col("content"), F.lit("\n\ndef probe(seq):\n    return len(seq)\n")),
+    )
 
 
 def _files_per_bucket(index_dir: str) -> dict[str, dict[str, int]]:
@@ -55,16 +82,11 @@ def layout_index(spark, tmp_path_factory):
     corpus = synth_corpus(spark, n_filler=60, seed=42).cache()
     corpus.count()
     out = str(tmp_path_factory.mktemp("layout_index"))
-    sc = spark.sparkContext
-    group = "test_build_layout.fresh_build"
-    sc.setJobGroup(group, "one build_index into a fresh dir")
-    try:
-        build_index(spark, corpus, out, build_id="b0", n_shards=2,
-                    fragment_postings=64)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    n_jobs = _jobs_in_group(
+        spark, "test_build_layout.fresh_build",
+        lambda: build_index(spark, corpus, out, build_id="b0", n_shards=2,
+                            fragment_postings=64),
+    )
     return {"dir": out, "corpus": corpus, "n_jobs": n_jobs}
 
 
@@ -87,3 +109,22 @@ def test_one_file_per_bucket_through_maintenance(spark, layout_index):
 
     compact_deletes(spark, out)
     _assert_one_file_per_bucket(out, "compact_deletes")
+
+
+def test_commit_job_counts(spark, layout_index, tmp_path):
+    """update_docs + merge and compact_deletes on a fresh build of the
+    layout corpus each stay within their measured Spark-job count."""
+    corpus = layout_index["corpus"]
+    out = str(tmp_path / "commits")
+    build_index(spark, corpus, out, build_id="b0", n_shards=2,
+                fragment_postings=64)
+    n_update = _jobs_in_group(
+        spark, "test_build_layout.update",
+        lambda: update_docs(spark, out, _update_batch(corpus)),
+    )
+    n_compact = _jobs_in_group(
+        spark, "test_build_layout.compact",
+        lambda: compact_deletes(spark, out),
+    )
+    assert 0 < n_update <= MAX_UPDATE_JOBS, n_update
+    assert 0 < n_compact <= MAX_COMPACT_JOBS, n_compact

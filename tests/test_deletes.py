@@ -23,8 +23,17 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from reiz_io_spark.operators.build import build_index, merge_incremental, stage1_ingest
-from reiz_io_spark.operators.deletes import compact_deletes, delete_docs
+from reiz_io_spark.operators.build import (
+    build_index,
+    merge_and_encode,
+    merge_incremental,
+    stage1_ingest,
+)
+from reiz_io_spark.operators.deletes import (
+    compact_deletes,
+    delete_docs,
+    undelete_docs,
+)
 from reiz_io_spark.operators.score import IndexReader, naive_bm25_topk
 from reiz_io_spark.operators.wand import wand_topk, wand_topk_batch
 from reiz_io_spark.plans.lower import lower_query
@@ -273,16 +282,35 @@ def test_full_reencode_does_not_resurrect(spark, del_index):
     assert meta["n_tombstones_pending"] == 0
 
 
-def test_delete_lock_serializes(spark, del_index):
+WRITERS = {
+    "delete_docs": lambda s, out: delete_docs(s, out, F.col("repo") == "x"),
+    "undelete_docs": lambda s, out: undelete_docs(s, out, F.col("repo") == "x"),
+    "compact_deletes": compact_deletes,
+    "merge_incremental": merge_incremental,
+    "merge_and_encode": lambda s, out: merge_and_encode(
+        s, out, build_id="b0", fragment_postings=64
+    ),
+}
+
+
+@pytest.mark.parametrize("writer", list(WRITERS))
+def test_delete_lock_serializes(spark, del_index, writer):
+    """Every index writer refuses while another holds the lock, and
+    leaves the committed meta untouched."""
     out = del_index["dir"]
+    meta_path = os.path.join(out, "meta.json")
+    with open(meta_path) as fh:
+        before = fh.read()
     lock = os.path.join(out, "deletes.lock")
     fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
     os.close(fd)
     try:
         with pytest.raises(RuntimeError, match="in flight"):
-            delete_docs(spark, out, F.col("repo") == "x")
+            WRITERS[writer](spark, out)
     finally:
         os.remove(lock)
+    with open(meta_path) as fh:
+        assert fh.read() == before
 
 
 def test_gcd_ledger_pointer_raises_not_resurrects(spark, del_index):

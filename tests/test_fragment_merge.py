@@ -1,7 +1,8 @@
 """Fragment-grained incremental merge/compaction: an update touching
 one doc must re-encode ONLY the touched fragments of affected hot
-terms, never their whole posting lists (build.py merge_incremental /
-deletes.py compact_deletes).
+terms, never their whole posting lists (build._merge_term_delta, the
+one term-delta merge behind merge_incremental's ADDED delta and
+compact_deletes' REMOVED delta).
 
 Content equality with full rebuilds is already gated by
 test_incremental/test_deletes/test_updates; this module pins the

@@ -17,24 +17,37 @@ and a serving process can refresh mid-request. Contracts pinned here:
 - QueryService publishes each committed snapshot as ONE immutable
   bundle: a refresh mid-request can never hand a query old idf with
   new postings/avgdl.
+- a crash at any commit point of delete, undelete, compact or update
+  (ledger staging, version assembly, the meta flip) leaves the previous
+  snapshot serving, and a replay converges to the index a clean run
+  produces; a failed delta commit leaks no persisted DataFrame.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
+from reiz_io_spark.operators import build as B
+from reiz_io_spark.operators import deletes as D
 from reiz_io_spark.operators.build import (
+    _decode_blocks_to_postings,
     build_index,
     merge_incremental,
     stage1_ingest,
+    table_dir,
 )
 from reiz_io_spark.operators.deletes import (
     TOMBSTONES_SCHEMA,
     compact_deletes,
     delete_docs,
+    undelete_docs,
 )
+from reiz_io_spark.operators.updates import update_docs
 from reiz_io_spark.operators.fsck import fsck_index
 from reiz_io_spark.operators.score import IndexReader
 from reiz_io_spark.operators.wand import wand_topk
@@ -269,3 +282,160 @@ def test_grep_fallback_without_sidecar_applies_factor_prefilter(
     )
     assert sorted(map(tuple, got.collect())) == want
     assert want  # non-vacuous
+
+
+# ---- crash-point sweep -------------------------------------------------
+
+CRASH_SUFFIX = "\n\ndef crash_probe(seq):\n    return len(seq)\n"
+# the prebuilt index each mutation starts from
+BASE = {
+    "delete_docs": "built",
+    "undelete_docs": "deleted",
+    "compact_deletes": "deleted",
+    "update_docs": "built",
+}
+# (module, attribute) a fault replaces; every commit reaches them
+# through these module globals
+FAULTS = {
+    "ledger_staging": (D, "_stage_ledger"),
+    "assemble_version": (B, "_assemble_version"),
+    "meta_flip": (B, "_write_meta_atomic"),
+}
+CRASH_CASES = [
+    ("delete_docs", "ledger_staging"),
+    ("delete_docs", "meta_flip"),
+    ("undelete_docs", "ledger_staging"),
+    ("undelete_docs", "meta_flip"),
+    ("compact_deletes", "assemble_version"),
+    ("compact_deletes", "ledger_staging"),
+    ("compact_deletes", "meta_flip"),
+    ("update_docs", "assemble_version"),
+    ("update_docs", "ledger_staging"),
+    ("update_docs", "meta_flip"),
+]
+
+
+@pytest.fixture(scope="module")
+def crash_bases(spark, tmp_path_factory):
+    """Two small prebuilt indexes that every crash case copies:
+    ``built`` (no deletes) and ``deleted`` (one repo pending-deleted)."""
+    root = tmp_path_factory.mktemp("crash_bases")
+    corpus = synth_corpus(spark, n_filler=24, seed=7).cache()
+    built = str(root / "built")
+    build_index(spark, corpus, built, build_id="b0", n_shards=2,
+                fragment_postings=64)
+    victim = corpus.select("repo").distinct().orderBy("repo").first()["repo"]
+    deleted = str(root / "deleted")
+    shutil.copytree(built, deleted)
+    delete_docs(spark, deleted, F.col("repo") == victim)
+    return {"built": built, "deleted": deleted, "corpus": corpus,
+            "victim": victim}
+
+
+def _mutate(spark, bases, mutation, out):
+    victim = F.col("repo") == bases["victim"]
+    if mutation == "delete_docs":
+        return delete_docs(spark, out, victim)
+    if mutation == "undelete_docs":
+        return undelete_docs(spark, out, victim)
+    if mutation == "compact_deletes":
+        return compact_deletes(spark, out)
+    batch = bases["corpus"].filter(victim).withColumn(
+        "content", F.concat(F.col("content"), F.lit(CRASH_SUFFIX))
+    )
+    return update_docs(spark, out, batch)
+
+
+def _copy_base(bases, mutation, dest):
+    shutil.copytree(bases[BASE[mutation]], dest)
+    return dest
+
+
+def _top30(spark, out):
+    reader = IndexReader(spark, out)
+    return [(r["doc_id"], r["score"]) for r in wand_topk(reader, Q, k=30).collect()]
+
+
+def _state(spark, out):
+    """What a commit changes: decoded postings, dictionary, ledger and
+    collection stats of the committed snapshot."""
+    with open(os.path.join(out, "meta.json")) as fh:
+        meta = json.load(fh)
+    blocks = spark.read.parquet(table_dir(out, meta, "blocks"))
+    postings = sorted(map(tuple, _decode_blocks_to_postings(blocks).collect()))
+    dictionary = sorted(
+        (r["term"], r["df"], r["cf"])
+        for r in spark.read.parquet(table_dir(out, meta, "dictionary")).collect()
+    )
+    ledger = []
+    if meta.get("tombstones_dir"):
+        ledger = sorted(
+            (r["doc_id"], r["folded"])
+            for r in spark.read.schema(TOMBSTONES_SCHEMA)
+            .parquet(os.path.join(out, meta["tombstones_dir"])).collect()
+        )
+    return postings, dictionary, ledger, meta["n_docs"], meta["avgdl"]
+
+
+@pytest.fixture(scope="module")
+def clean_states(spark, crash_bases, tmp_path_factory):
+    """The state each mutation reaches on a copy that never crashed
+    (computed once per mutation)."""
+    cache = {}
+
+    def get(mutation):
+        if mutation not in cache:
+            out = _copy_base(crash_bases, mutation,
+                             str(tmp_path_factory.mktemp("clean") / "ix"))
+            _mutate(spark, crash_bases, mutation, out)
+            cache[mutation] = _state(spark, out)
+        return cache[mutation]
+
+    return get
+
+
+def _boom(*args, **kwargs):
+    raise RuntimeError("simulated crash")
+
+
+@pytest.mark.parametrize("mutation,point", CRASH_CASES)
+def test_crash_point_keeps_snapshot_and_replay_converges(
+    spark, crash_bases, clean_states, tmp_path, monkeypatch, mutation, point
+):
+    out = _copy_base(crash_bases, mutation, str(tmp_path / "ix"))
+    meta_path = os.path.join(out, "meta.json")
+    with open(meta_path) as fh:
+        meta_before = fh.read()
+    top_before = _top30(spark, out)
+
+    monkeypatch.setattr(*FAULTS[point], _boom)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        _mutate(spark, crash_bases, mutation, out)
+    monkeypatch.undo()
+
+    with open(meta_path) as fh:
+        assert fh.read() == meta_before
+    assert _top30(spark, out) == top_before
+
+    _mutate(spark, crash_bases, mutation, out)  # replay without the fault
+    assert _state(spark, out) == clean_states(mutation)
+
+
+@pytest.mark.parametrize("mutation", ["update_docs", "compact_deletes"])
+def test_failed_delta_commit_releases_persisted(
+    spark, crash_bases, tmp_path, monkeypatch, mutation
+):
+    """The block encoder fails after the delta stats were materialized
+    (update_docs reaches it through merge_incremental): every DataFrame
+    the commit persisted is released on the way out."""
+    out = _copy_base(crash_bases, mutation, str(tmp_path / "ix"))
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+
+    def failing_encoder(block_size):
+        raise RuntimeError("simulated encoder failure")
+
+    monkeypatch.setattr(B, "_make_block_encoder", failing_encoder)
+    with pytest.raises(RuntimeError, match="simulated encoder failure"):
+        _mutate(spark, crash_bases, mutation, out)
+    assert jsc.getPersistentRDDs().size() == before
