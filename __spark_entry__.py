@@ -617,18 +617,17 @@ def _code_search_explain(s: SparkSession, d: str) -> DataFrame:
 
 def _code_facets_federated(s: SparkSession, d: str) -> DataFrame:
     """Per-repo facet counts of the flagship query's match set across
-    the 3-shard federation (federation.federated_facets): per-shard
-    exact match sets (WAND kernels, pruning off) unioned + ONE global
-    count aggregate. Membership is per-document, so the counts equal
-    the single-index facet over the union corpus exactly."""
-    from reiz_io_spark.operators.federation import federated_facets
-    from reiz_io_spark.operators.score import IndexReader
+    the 3-shard federation (score.facet_counts over the shard readers):
+    per-shard exact match sets (WAND kernels, pruning off) unioned +
+    ONE global count aggregate. Membership is per-document, so the
+    counts equal the single-index facet over the union corpus exactly."""
+    from reiz_io_spark.operators.score import IndexReader, facet_counts
     from reiz_io_spark.plans.lower import lower_query
 
     readers = [IndexReader(s, p) for p in _ensure_fed_shards(s, d)]
-    return federated_facets(
-        s, None, lower_query("flagship", "Call(Name('len'))"),
-        facet_col="repo", readers=readers,
+    return facet_counts(
+        readers, lower_query("flagship", "Call(Name('len'))"),
+        facet_col="repo",
     )
 
 
@@ -748,25 +747,23 @@ def _ensure_fed_shards(s: SparkSession, d: str) -> list[str]:
 def _code_search_federated(s: SparkSession, d: str) -> DataFrame:
     """Sharded-index federation (operators/federation.py): the entry
     corpus split into 3 shard indexes by pmod(xxhash64(repo), 3), the
-    flagship query answered with the dfs_query_then_fetch discipline —
-    per-shard dictionary expansion unioned, df/n_docs/total_dl summed,
+    flagship query answered by wand_topk over the shard readers with
+    the dfs_query_then_fetch discipline — per-shard dictionary
+    expansion unioned, df/n_docs/total_dl summed (score.query_stats),
     global idf/avgdl injected into each shard's unmodified WAND
     kernels, per-shard candidates unioned into a global top-k. Result
     is bit-identical to one index over the whole corpus (pytest-gated),
     so the twin is the SAME single-index DuckDB BM25 recompute as
     code_search_wand."""
-    from reiz_io_spark.operators.federation import (
-        federated_doc_metadata, federated_topk,
-    )
-    from reiz_io_spark.operators.score import IndexReader
+    from reiz_io_spark.operators.score import IndexReader, attach_doc_metadata
+    from reiz_io_spark.operators.wand import wand_topk
     from reiz_io_spark.plans.lower import lower_query
 
     readers = [IndexReader(s, p) for p in _ensure_fed_shards(s, d)]
-    top = federated_topk(
-        s, None, lower_query("flagship", "Call(Name('len'))"), k=10,
-        readers=readers,
+    top = wand_topk(
+        readers, lower_query("flagship", "Call(Name('len'))"), k=10
     )
-    return federated_doc_metadata(readers, top).select(
+    return attach_doc_metadata(readers, top).select(
         "doc_id", "repo", "path", F.round("score", 6).alias("score")
     )
 

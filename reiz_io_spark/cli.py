@@ -32,8 +32,13 @@ def main(argv: list[str] | None = None) -> int:
     b.add_argument("--shards", type=int, default=64)
     b.add_argument("--block-size", type=int, default=128)
 
-    q = sub.add_parser("query", help="run a ReizQL pattern against an index")
-    q.add_argument("--index", required=True)
+    q = sub.add_parser(
+        "query", help="run a ReizQL pattern against an index or a "
+        "comma-separated shard set (global BM25 stats — bit-identical "
+        "to one index over the union corpus)"
+    )
+    q.add_argument("--index", help="single index dir")
+    q.add_argument("--indexes", help="comma-separated shard dirs")
     q.add_argument("--pattern", required=True)
     q.add_argument("-k", type=int, default=10)
     q.add_argument("--naive", action="store_true", help="runs-table path (no WAND)")
@@ -44,20 +49,6 @@ def main(argv: list[str] | None = None) -> int:
     q.add_argument("--after", default=None, metavar="SCORE,DOC_ID",
                    help="keyset cursor: page strictly after this "
                         "(score, doc_id) — the deep-paging primitive")
-
-    qf = sub.add_parser(
-        "query-federated", help="run a ReizQL pattern across SHARD "
-        "indexes with globally-correct BM25 stats (dfs_query_then_fetch "
-        "— bit-identical to one index over the union corpus)"
-    )
-    qf.add_argument(
-        "--indexes", required=True,
-        help="comma-separated shard index dirs",
-    )
-    qf.add_argument("--pattern", required=True)
-    qf.add_argument("-k", type=int, default=10)
-    qf.add_argument("--after", default=None, metavar="SCORE,DOC_ID",
-                    help="keyset cursor (see query --after)")
 
     rs = sub.add_parser(
         "reshard", help="re-split a shard set to a different shard "
@@ -321,6 +312,13 @@ def main(argv: list[str] | None = None) -> int:
         spark.stop()
 
 
+def _index_dirs(args) -> list[str]:
+    """--indexes (comma-separated shard dirs) or --index as a dir list."""
+    if args.indexes:
+        return [p for p in args.indexes.split(",") if p]
+    return [args.index] if args.index else []
+
+
 def _dispatch(args, spark) -> int:
     if args.cmd == "build":
         from .operators.build import build_index
@@ -339,7 +337,17 @@ def _dispatch(args, spark) -> int:
         from .operators.wand import wand_topk
         from .plans.lower import lower_query
 
-        reader = IndexReader(spark, args.index, at_version=args.at_version)
+        dirs = _index_dirs(args)
+        if not dirs:
+            print("query: pass --index or --indexes", file=sys.stderr)
+            return 2
+        if args.indexes and (args.naive or args.at_version is not None):
+            print("query: --naive and --at-version read one index "
+                  "(--index), not a shard set", file=sys.stderr)
+            return 2
+        readers = [
+            IndexReader(spark, p, at_version=args.at_version) for p in dirs
+        ]
         q = lower_query("cli", args.pattern)
         if args.explain:
             print("lowered groups:")
@@ -351,13 +359,13 @@ def _dispatch(args, spark) -> int:
 
             s_str, d_str = args.after.split(",", 1)
             top = bm25_topk_after(
-                reader, q, (float(s_str), int(d_str)), k=args.k
+                readers, q, (float(s_str), int(d_str)), k=args.k
             )
+        elif args.naive:
+            top = naive_bm25_topk(readers[0], q, k=args.k)
         else:
-            top = (naive_bm25_topk if args.naive else wand_topk)(
-                reader, q, k=args.k
-            )
-        out = attach_doc_metadata(reader, top)
+            top = wand_topk(readers, q, k=args.k)
+        out = attach_doc_metadata(readers, top)
         if args.explain:
             out.explain("formatted")
         rows = out.collect()
@@ -407,61 +415,19 @@ def _dispatch(args, spark) -> int:
         return 0
 
     if args.cmd == "facets":
+        from .operators.score import IndexReader, facet_counts
         from .plans.lower import lower_query
 
-        q = lower_query("cli", args.pattern)
-        if args.indexes:
-            from .operators.federation import federated_facets
-
-            out = federated_facets(
-                spark, args.indexes.split(","), q,
-                facet_col=args.by, k=args.k,
-            )
-        elif args.index:
-            from .operators.score import IndexReader, facet_counts
-
-            out = facet_counts(
-                IndexReader(spark, args.index), q,
-                facet_col=args.by, k=args.k,
-            )
-        else:
+        dirs = _index_dirs(args)
+        if not dirs:
             print("facets: pass --index or --indexes", file=sys.stderr)
             return 2
+        out = facet_counts(
+            [IndexReader(spark, p) for p in dirs],
+            lower_query("cli", args.pattern), facet_col=args.by, k=args.k,
+        )
         for r in out.collect():
             print(json.dumps({args.by: r[args.by], "n_docs": r["n_docs"]}))
-        return 0
-
-    if args.cmd == "query-federated":
-        from .operators.federation import federated_doc_metadata, federated_topk
-        from .operators.score import IndexReader
-        from .plans.lower import lower_query
-
-        dirs = [p for p in args.indexes.split(",") if p]
-        readers = [IndexReader(spark, p) for p in dirs]
-        q = lower_query("cli", args.pattern)
-        t0 = time.perf_counter()
-        if args.after:
-            from .operators.federation import federated_topk_after
-
-            s_str, d_str = args.after.split(",", 1)
-            top = federated_topk_after(
-                spark, None, q, (float(s_str), int(d_str)),
-                k=args.k, readers=readers,
-            )
-        else:
-            top = federated_topk(spark, None, q, k=args.k, readers=readers)
-        rows = federated_doc_metadata(readers, top).collect()
-        wall = time.perf_counter() - t0
-        for i, r in enumerate(rows):
-            print(json.dumps({
-                "rank": i + 1, "doc_id": r["doc_id"],
-                "repo": r["repo"], "path": r["path"],
-                "score": round(r["score"], 6),
-            }))
-        print(
-            f"# {len(rows)} rows over {len(dirs)} shards in {wall:.3f}s",
-            file=sys.stderr,
-        )
         return 0
 
     if args.cmd == "reshard":
@@ -485,10 +451,7 @@ def _dispatch(args, spark) -> int:
         from .serve import QueryService
         from .web import serve as http_serve
 
-        if args.indexes:
-            dirs = [p for p in args.indexes.split(",") if p]
-        else:
-            dirs = [args.index] if args.index else []
+        dirs = _index_dirs(args)
         if not dirs:
             print("serve: pass --index or --indexes")
             return 2

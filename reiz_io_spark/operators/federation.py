@@ -1,5 +1,5 @@
-"""Federated search over a SHARDED index: N independent index dirs,
-one globally-correct ranked answer.
+"""Sharded indexes: N independent index dirs, one globally-correct
+ranked answer.
 
 At 10^12 documents a single index directory is operationally wrong —
 builds, compactions, and deletes want to touch a bounded slice, and
@@ -8,46 +8,32 @@ architecture (Elasticsearch/Solr shards, Lucene per-segment search)
 splits the corpus by a stable hash — here ``pmod(xxhash64(repo),
 n_shards)``, the engine's existing shard function — into independent
 indexes, each built/merged/compacted with the machinery this repo
-already has. The ONLY thing federation must add is statistics
-discipline: BM25's idf and length normalization depend on df, n_docs
-and avgdl over the WHOLE corpus, so scoring each shard with its local
-stats skews scores wherever term frequencies differ across shards
-(Elasticsearch's default local-stats mode has exactly this artifact;
-its fix, ``dfs_query_then_fetch``, is the two-phase protocol
-implemented here):
+already has.
 
-1. **stats phase** (driver-side, cheap): resolve the query's term
-   groups against EVERY shard's dictionary (union — a LIKE expansion
-   must see all shards' vocabularies), sum each term's df and the
-   shards' (n_docs, total_dl) integer totals, derive global idf/avgdl
-   with the exact single-index numpy expression.
-2. **query phase** (one Spark job per shard, or one union job): run
-   the unmodified block-max WAND kernels on each shard with the
-   global stats injected (wand_scores(stats_override=...)), union the
-   per-shard candidate frames, and take the global top-k.
+Reads need no code here: every read operator (wand_topk, wand_scores,
+bm25_topk_after, explain_score, facet_counts, attach_doc_metadata,
+structural_topk) takes a list of IndexReaders. BM25's idf and length
+normalization depend on df, n_docs and avgdl over the WHOLE corpus, so
+those operators take one statistics step, score.query_stats: resolve
+the query's term groups against EVERY shard's dictionary (a LIKE
+expansion must see all shards' vocabularies), sum each term's df and
+the shards' (n_docs, total_dl) as integers, and derive idf/avgdl with
+the single-index expressions (Elasticsearch's dfs_query_then_fetch).
+Each shard then runs the unmodified kernels under those stats and the
+per-shard frames union. Because the sums run over disjoint doc sets,
+the floats are bit-identical to one index over the union corpus
+(pytest-gated, rank AND score).
 
-Because df/n_docs/total_dl are INTEGER sums over disjoint doc sets,
-the derived floats are bit-identical to what one index over the whole
-corpus computes — federated results equal single-index results
-exactly (pytest-gated, rank AND score), which is also why the driver
-entry can share the single-index DuckDB twin.
-
-Scale shape: the stats phase reads only the query terms' dictionary
-buckets per shard (partition-pruned, driver-collected, memoized by
-each reader); the query phase is the already-audited per-shard WAND
-plan; the merge is a union of n_shards × (per-bucket top-k) rows —
-constant-bounded, never corpus-sized. Shards can live on different
-storage roots; nothing here assumes co-location.
+This module keeps what is shard-specific: routing (shard_of,
+shard_corpus), per-shard writes (update/delete routed to the owning
+shard), grep over a shard set, the ANN tier's federation, and
+resharding.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from ..plans.lower import LoweredQuery
-from .score import IndexReader, bm25_idf
-from .wand import wand_scores
 
 
 def shard_of(n_shards: int):
@@ -66,202 +52,6 @@ def shard_corpus(corpus: DataFrame, n_shards: int) -> list[DataFrame]:
         withs.filter(F.col("_fed_shard") == i).drop("_fed_shard")
         for i in range(n_shards)
     ]
-
-
-def shard_stats(readers: list[IndexReader], terms: list[str]) -> dict:
-    """Collection statistics of a shard set as INTEGER sums over the
-    shards — n_docs, total_dl and each term's df/cf — with avgdl and idf
-    derived from the sums by the single-index expressions
-    (score.bm25_idf), so a set of one shard reproduces that index's own
-    stats bit-for-bit. Refuses shards that disagree on k1/b.
-
-    {"k1", "b", "n_docs", "total_dl", "avgdl",
-     "terms": {term: {"term", "df", "cf", "idf"}}}; terms no shard
-    holds are left out."""
-    if not readers:
-        raise ValueError("shard_stats: no shards")
-    k1s = {float(r.meta["k1"]) for r in readers}
-    bs = {float(r.meta["b"]) for r in readers}
-    if len(k1s) != 1 or len(bs) != 1:
-        raise ValueError(
-            f"shards disagree on BM25 params (k1={sorted(k1s)}, "
-            f"b={sorted(bs)}) — scores would be incomparable; rebuild "
-            f"the outlier shard with matching k1/b"
-        )
-    n_docs = sum(int(r.meta["n_docs"]) for r in readers)
-    total_dl = sum(int(r.meta["total_dl"]) for r in readers)
-    df: dict[str, int] = {}
-    cf: dict[str, int] = {}
-    if terms:
-        for r in readers:
-            for t, m in r.term_meta(terms).items():
-                df[t] = df.get(t, 0) + int(m["df"])
-                cf[t] = cf.get(t, 0) + int(m["cf"])
-    return {
-        "k1": k1s.pop(), "b": bs.pop(), "n_docs": n_docs,
-        "total_dl": total_dl,
-        "avgdl": total_dl / n_docs if n_docs else 0.0,
-        "terms": {
-            t: {"term": t, "df": d, "cf": cf[t], "idf": bm25_idf(n_docs, d)}
-            for t, d in df.items()
-        },
-    }
-
-
-def stats_override(avgdl: float, term_stats: dict) -> dict:
-    """The wand_scores/explain_score/structural_topk federation hook
-    for global stats: {"avgdl", "idf_by_term", "df_by_term"}."""
-    return {
-        "avgdl": avgdl,
-        "idf_by_term": {t: m["idf"] for t, m in term_stats.items()},
-        "df_by_term": {t: m["df"] for t, m in term_stats.items()},
-    }
-
-
-def federated_stats(
-    readers: list[IndexReader], query: LoweredQuery
-) -> tuple[list[tuple[str, ...]], dict, float]:
-    """The dfs phase: (global term groups, stats_override, k1) —
-    groups are the positional union of every shard's dictionary
-    expansion; the stats are shard_stats' integer sums."""
-    per_shard_groups = [r.resolve_groups(query) for r in readers]
-    groups = [
-        tuple(sorted({t for sg in per_shard_groups for t in sg[i]}))
-        for i in range(len(query.groups))
-    ]
-    stats = shard_stats(readers, sorted({t for g in groups for t in g}))
-    return groups, stats_override(stats["avgdl"], stats["terms"]), stats["k1"]
-
-
-def federated_scores(
-    spark: SparkSession,
-    readers: list[IndexReader],
-    query: LoweredQuery,
-    k: int | None = 10,
-    field_weights: dict[str, float] | None = None,
-) -> DataFrame:
-    """Union of every shard's wand_scores under global stats —
-    unordered (doc_id, score) candidates, per-bucket-top-k bounded."""
-    groups, stats, _ = federated_stats(readers, query)
-    if not groups or any(len(g) == 0 for g in groups):
-        from .wand import _empty_results
-
-        return _empty_results(spark)
-    out = None
-    for r in readers:
-        part = wand_scores(
-            r, query, k=k, field_weights=field_weights,
-            groups_override=groups, stats_override=stats,
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
-
-
-def federated_topk(
-    spark: SparkSession,
-    index_dirs: list[str] | None,
-    query: LoweredQuery,
-    k: int = 10,
-    offset: int = 0,
-    field_weights: dict[str, float] | None = None,
-    readers: list[IndexReader] | None = None,
-) -> DataFrame:
-    """Global top-k over the shard set — rank- and score-identical to
-    wand_topk over one index holding the union corpus (pytest-gated)."""
-    if readers is None:
-        readers = [IndexReader(spark, d) for d in index_dirs]
-    out = federated_scores(
-        spark, readers, query, k=k + offset, field_weights=field_weights
-    )
-    ranked = out.orderBy(F.desc("score"), F.asc("doc_id"))
-    if offset:
-        ranked = ranked.offset(offset)
-    return ranked.limit(k)
-
-
-def federated_doc_metadata(
-    readers: list[IndexReader], top: DataFrame
-) -> DataFrame:
-    """attach_doc_metadata across shards: each doc_id lives in exactly
-    one shard (disjoint corpora), so the union of per-shard
-    (broadcast top-k ⋈ docs) inner joins is exactly one row per hit."""
-    out = None
-    for r in readers:
-        docs = r.docs().select(
-            "doc_id", "repo", "path", "commit", "content_sha256"
-        )
-        part = F.broadcast(top).join(docs, "doc_id")
-        out = part if out is None else out.unionByName(part)
-    return out.orderBy(F.desc("score"), F.asc("doc_id"))
-
-
-def federated_topk_after(
-    spark: SparkSession,
-    index_dirs: list[str] | None,
-    query: LoweredQuery,
-    cursor: tuple[float, int],
-    k: int = 10,
-    field_weights: dict[str, float] | None = None,
-    readers: list[IndexReader] | None = None,
-) -> DataFrame:
-    """Cursor (search_after) pagination over the shard set: the page
-    strictly after ``cursor`` = (score, doc_id) in the global total
-    order (score DESC, doc_id ASC). Per-shard exact candidate sets
-    under the global-stats discipline (scores are bit-identical to a
-    single union index, so the keyset filter commutes with the shard
-    union), ONE lazy plan, the filter BEFORE the global
-    TakeOrderedAndProject — deep pages never rank the rows OFFSET
-    would. Identical to the single-index cursor page (pytest-gated)."""
-    if readers is None:
-        readers = [IndexReader(spark, d) for d in index_dirs]
-    s0, d0 = float(cursor[0]), int(cursor[1])
-    cands = federated_scores(
-        spark, readers, query, k=None, field_weights=field_weights
-    )
-    return (
-        cands.filter(
-            (F.col("score") < F.lit(s0))
-            | ((F.col("score") == F.lit(s0)) & (F.col("doc_id") > F.lit(d0)))
-        )
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-
-
-def federated_facets(
-    spark: SparkSession,
-    index_dirs: list[str] | None,
-    query: LoweredQuery,
-    facet_col: str = "repo",
-    k: int | None = None,
-    readers: list[IndexReader] | None = None,
-) -> DataFrame:
-    """Exact per-facet doc counts of the query's match set across the
-    shard set (score.facet_counts over a federation). Counts are exact
-    and identical to the single-index facet over the union corpus:
-    each shard's match set is exact under the global-stats discipline
-    (scores don't even matter — membership is the conjunction test,
-    which is per-document), doc sets are disjoint, and the final
-    count aggregate integer-sums across shards in one job. Scale
-    shape: per-shard pruned blocks decode + ONE global hash aggregate;
-    only (doc_id, facet) rows cross the exchange."""
-    if readers is None:
-        readers = [IndexReader(spark, d) for d in index_dirs]
-    cands = federated_scores(spark, readers, query, k=None)
-    if not cands.columns:  # defensive; _empty_results has columns
-        return cands
-    meta = None
-    for r in readers:
-        part = r.docs().select("doc_id", facet_col)
-        meta = part if meta is None else meta.unionByName(part)
-    out = (
-        cands.select("doc_id")
-        .join(meta, "doc_id")
-        .groupBy(facet_col)
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy(F.desc("n_docs"), F.asc(facet_col))
-    )
-    return out.limit(k) if k is not None else out
 
 
 def federated_grep(

@@ -528,7 +528,7 @@ def fsck_federation(
       failures are namespaced `shard<i>.<check>`);
     - shards agree on the BM25/layout params that make scores globally
       comparable (k1, b, block_size, fragment_postings — the same
-      refusal federated_stats enforces at query time);
+      refusal score.shard_stats enforces at query time);
     - live doc_ids are DISJOINT across shards (the property every
       federated merge relies on: metadata joins expect one owner,
       dfs stats would double-count a doc indexed twice). Tombstoned

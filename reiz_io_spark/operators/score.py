@@ -6,12 +6,19 @@ subtlety is float determinism: per-doc scores are accumulated with an
 ordered fold over a term-sorted array (F.aggregate) so the summation
 order matches the oracle exactly, instead of a nondeterministic
 SUM() reduction order.
+
+The module also holds what every read shares: IndexReader, the one
+collection-statistics step (shard_stats / query_stats — integer sums
+over a reader list, idf and avgdl derived from the sums), and the
+reader-list operators built on the WAND kernels (cursor paging,
+explain, facets, metadata render). One reader is the one-shard case.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -87,10 +94,6 @@ class IndexReader:
         self._tmeta_absent: set[str] = set()
         self._like_memo: dict[tuple[str, str], list[str]] = {}
         self._memo_lock = threading.Lock()
-
-    @property
-    def avgdl(self) -> float:
-        return float(self.meta["avgdl"])
 
     def warm(self) -> "IndexReader":
         """Pin dictionary + blocks in executor memory for a query service
@@ -290,11 +293,84 @@ def bm25_idf(n_docs: int, df: int) -> float:
     return float(np.log(1.0 + (n - df + 0.5) / (df + 0.5)))
 
 
+def as_readers(readers: IndexReader | list[IndexReader]) -> list[IndexReader]:
+    """The read operators' input normalisation: one IndexReader is the
+    one-shard case of a reader list (the shards of a sharded index,
+    operators/federation.py — disjoint doc sets)."""
+    out = list(readers) if isinstance(readers, (list, tuple)) else [readers]
+    if not out:
+        raise ValueError("no index readers")
+    return out
+
+
+def _union_all(frames: list[DataFrame]) -> DataFrame:
+    return reduce(DataFrame.unionByName, frames)
+
+
+def shard_stats(readers: list[IndexReader], terms: list[str]) -> dict:
+    """Collection statistics of a reader list as INTEGER sums over the
+    readers — n_docs, total_dl and each term's df/cf — with avgdl and
+    idf derived from the sums by the single-index expressions
+    (bm25_idf), so one reader reproduces that index's own stats
+    bit-for-bit and N shards reproduce one index over their union.
+    Refuses readers that disagree on k1/b.
+
+    {"k1", "b", "n_docs", "total_dl", "avgdl",
+     "terms": {term: {"term", "df", "cf", "idf"}}}; terms no reader
+    holds are left out."""
+    if not readers:
+        raise ValueError("shard_stats: no shards")
+    k1s = {float(r.meta["k1"]) for r in readers}
+    bs = {float(r.meta["b"]) for r in readers}
+    if len(k1s) != 1 or len(bs) != 1:
+        raise ValueError(
+            f"shards disagree on BM25 params (k1={sorted(k1s)}, "
+            f"b={sorted(bs)}) — scores would be incomparable; rebuild "
+            f"the outlier shard with matching k1/b"
+        )
+    n_docs = sum(int(r.meta["n_docs"]) for r in readers)
+    total_dl = sum(int(r.meta["total_dl"]) for r in readers)
+    df: dict[str, int] = {}
+    cf: dict[str, int] = {}
+    if terms:
+        for r in readers:
+            for t, m in r.term_meta(terms).items():
+                df[t] = df.get(t, 0) + int(m["df"])
+                cf[t] = cf.get(t, 0) + int(m["cf"])
+    return {
+        "k1": k1s.pop(), "b": bs.pop(), "n_docs": n_docs,
+        "total_dl": total_dl,
+        "avgdl": total_dl / n_docs if n_docs else 0.0,
+        "terms": {
+            t: {"term": t, "df": d, "cf": cf[t], "idf": bm25_idf(n_docs, d)}
+            for t, d in df.items()
+        },
+    }
+
+
+def query_stats(
+    readers: list[IndexReader], query: LoweredQuery
+) -> tuple[list[tuple[str, ...]], dict]:
+    """(term groups, stats) of one read — the dfs phase of
+    dfs_query_then_fetch and the only place a read takes its idf and
+    avgdl from. Group i is the union of every reader's expansion of
+    query group i (a LIKE marker must see every shard's vocabulary);
+    the stats are shard_stats over the groups' terms."""
+    per_reader = [r.resolve_groups(query) for r in readers]
+    groups = [
+        tuple(sorted({t for rg in per_reader for t in rg[i]}))
+        for i in range(len(query.groups))
+    ]
+    return groups, shard_stats(readers, sorted({t for g in groups for t in g}))
+
+
 def naive_bm25_topk(
     reader: IndexReader, query: LoweredQuery, k: int = 10,
     field_weights: dict[str, float] | None = None,
 ) -> DataFrame:
-    """Term-conjunction BM25 over the runs table, exact scores.
+    """Term-conjunction BM25 over the runs table, exact scores — the
+    single-reader reference the WAND paths are rank-identity-gated
+    against.
 
     Plan shape: pruned scan of runs (term IN ...) -> broadcast join with
     the per-term metadata (a handful of rows) -> one hash aggregate per
@@ -303,26 +379,13 @@ def naive_bm25_topk(
     field_weights (BM25F): per-namespace multipliers folded into idf —
     the independent twin of wand's weighted path (rank-identity-gated).
     """
-    scored = _naive_scored(reader, query, field_weights)
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
-def _naive_scored(
-    reader: IndexReader,
-    query: LoweredQuery,
-    field_weights: dict[str, float] | None = None,
-) -> DataFrame:
-    """The exact (doc_id, score) set of every conjunction-satisfying
-    doc — naive_bm25_topk before its ranking, shared with the cursor
-    paging path."""
     spark = reader.spark
-    groups = reader.resolve_groups(query)
+    groups, stats = query_stats([reader], query)
     if any(len(g) == 0 for g in groups):
         return _empty_results(spark)
-    meta = reader.meta
-    k1, b, avgdl = meta["k1"], meta["b"], float(meta["avgdl"])
+    k1, b, avgdl = stats["k1"], stats["b"], stats["avgdl"]
     all_terms = sorted({t for g in groups for t in g})
-    tmeta = reader.term_meta(all_terms)
+    tmeta = stats["terms"]
     n_groups = len(groups)
 
     from .wand import field_weight_of
@@ -370,11 +433,11 @@ def _naive_scored(
         .filter(F.size("_gids") >= n_groups)  # every OR-group satisfied
         .drop("_gids")
     )
-    return scored
+    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def bm25_topk_after(
-    reader: IndexReader,
+    readers: IndexReader | list[IndexReader],
     query: LoweredQuery,
     cursor: tuple[float, int],
     k: int = 10,
@@ -390,12 +453,17 @@ def bm25_topk_after(
     ``cursor`` = (score, doc_id) of the LAST row already served; the
     next page is every doc strictly after it in the total order
     (score DESC, doc_id ASC). Scores are deterministic bit-identical
-    across executions (ordered float fold), so the float equality in
-    the tie-break is sound. Exact naive scoring path (one shuffle);
-    page N+1 therefore equals rows N*k+1..N*k+k of the full ranking
+    across executions and across shard splits (exact ascending-term
+    rescore under query_stats), so the float equality in the tie-break
+    is sound and the keyset filter commutes with the reader union.
+    The exact candidate set (wand_scores with k=None), the filter, then
+    ONE TakeOrderedAndProject — deep pages never rank the rows OFFSET
+    would; page N+1 equals rows N*k+1..N*k+k of the full ranking
     (pytest-gated + oracle-checked via the OFFSET twin)."""
+    from .wand import wand_scores
+
     s0, d0 = float(cursor[0]), int(cursor[1])
-    scored = _naive_scored(reader, query, field_weights)
+    scored = wand_scores(readers, query, k=None, field_weights=field_weights)
     return (
         scored.filter(
             (F.col("score") < F.lit(s0))
@@ -407,19 +475,17 @@ def bm25_topk_after(
 
 
 def explain_score(
-    reader: IndexReader,
+    readers: IndexReader | list[IndexReader],
     query: LoweredQuery,
     doc_ids: list[int],
     field_weights: dict[str, float] | None = None,
-    stats_override: dict | None = None,
 ) -> DataFrame:
     """Per-term BM25 contribution breakdown for specific docs — the
     Elasticsearch `_explain` analog (the reference exposes no scoring
-    introspection; this is our engine's own debugging surface).
-    stats_override is the federation hook (same shape wand_scores
-    takes: {"avgdl", "idf_by_term", "df_by_term"} computed over the
-    shard set) — a shard explains its local tf/dl under GLOBAL
-    df/idf, so federated explains sum to the federated scores.
+    introspection; this is our engine's own debugging surface). Over a
+    reader list each doc's tf/dl come from its own shard under the
+    summed df/idf/avgdl of query_stats, so explains sum to the scores
+    of the same reader list.
 
     One row per (doc_id, matched query term):
     (doc_id, term, tf, dl, df, idf, weight, contrib), where
@@ -434,38 +500,30 @@ def explain_score(
     runs scan (an explain touches a handful of row groups at any corpus
     size); the per-term metadata is a broadcast of len(query terms)
     rows; no shuffle, no aggregation."""
-    spark = reader.spark
+    readers = as_readers(readers)
+    spark = readers[0].spark
     empty = spark.createDataFrame(
         [], "doc_id long, term string, tf long, dl long, df long, "
             "idf double, weight double, contrib double",
     )
-    groups = reader.resolve_groups(query)
-    if not doc_ids or not groups or any(len(g) == 0 for g in groups):
+    if not doc_ids:
         return empty
-    meta = reader.meta
-    k1, b = float(meta["k1"]), float(meta["b"])
+    groups, stats = query_stats(readers, query)
+    if not groups or any(len(g) == 0 for g in groups):
+        return empty
+    k1, b, avgdl = stats["k1"], stats["b"], stats["avgdl"]
     all_terms = sorted({t for g in groups for t in g})
-    if stats_override is not None:
-        avgdl = float(stats_override["avgdl"])
-        df_of = stats_override["df_by_term"]
-        idf_of = stats_override["idf_by_term"]
-    else:
-        avgdl = float(meta["avgdl"])
-        tmeta = reader.term_meta(all_terms)
-        if not tmeta:
-            return empty
-        df_of = {t: int(m["df"]) for t, m in tmeta.items()}
-        idf_of = {t: float(m["idf"]) for t, m in tmeta.items()}
 
     from .wand import field_weight_of
 
     def _w(t: str) -> float:
         return field_weight_of(t, field_weights) if field_weights else 1.0
 
+    tmeta = stats["terms"]
     qterm_rows = [
-        (t, int(df_of[t]), float(idf_of[t]), _w(t))
+        (t, int(tmeta[t]["df"]), float(tmeta[t]["idf"]), _w(t))
         for t in all_terms
-        if t in df_of
+        if t in tmeta
     ]
     if not qterm_rows:
         return empty
@@ -473,15 +531,18 @@ def explain_score(
         qterm_rows, "term string, df long, idf double, weight double"
     )
     id_list = ",".join(str(int(x)) for x in doc_ids)
-    p = (
-        reader.runs()
-        .filter(F.col("term").isin(all_terms))
-        # one parsed IN expression (Column.isin = py4j literal/element)
-        .filter(F.expr(f"doc_id IN ({id_list})"))
-    )
-    tomb = reader.tombstones()
-    if tomb is not None:
-        p = p.join(tomb.select("doc_id"), "doc_id", "left_anti")
+    parts = []
+    for r in readers:
+        p = (
+            r.runs()
+            .filter(F.col("term").isin(all_terms))
+            # one parsed IN expression (Column.isin = py4j literal/element)
+            .filter(F.expr(f"doc_id IN ({id_list})"))
+        )
+        tomb = r.tombstones()
+        if tomb is not None:
+            p = p.join(tomb.select("doc_id"), "doc_id", "left_anti")
+        parts.append(p)
     contrib = (
         F.col("idf") * F.col("weight")
         * (F.col("tf") * F.lit(1.0 + k1))
@@ -492,7 +553,8 @@ def explain_score(
         )
     )
     return (
-        p.join(F.broadcast(qterms), "term")
+        _union_all(parts)
+        .join(F.broadcast(qterms), "term")
         .select(
             "doc_id", "term", "tf", "dl", "df", "idf", "weight",
             contrib.alias("contrib"),
@@ -502,7 +564,7 @@ def explain_score(
 
 
 def facet_counts(
-    reader: IndexReader,
+    readers: IndexReader | list[IndexReader],
     query: LoweredQuery,
     facet_col: str = "repo",
     k: int | None = None,
@@ -515,13 +577,17 @@ def facet_counts(
     (facet, n_docs) rows, count-descending. Exact, not approximate:
     the match set is every conjunction-satisfying live doc (the WAND
     kernels with pruning off — k=None returns all candidates), joined
-    to the docs table's facet column and hash-aggregated. Scale shape:
-    one pruned blocks decode (query terms only) + one shuffle for the
-    count aggregate; the docs join carries only (doc_id, facet)."""
+    to the docs table's facet column and hash-aggregated. Membership is
+    per-document and shards hold disjoint docs, so over a reader list
+    the counts equal the facet of one index over the union corpus.
+    Scale shape: one pruned blocks decode (query terms only) + one
+    shuffle for the count aggregate; the docs join carries only
+    (doc_id, facet)."""
     from .wand import wand_scores
 
-    cands = wand_scores(reader, query, k=None).select("doc_id")
-    meta = reader.docs().select("doc_id", facet_col)
+    readers = as_readers(readers)
+    cands = wand_scores(readers, query, k=None).select("doc_id")
+    meta = _union_all([r.docs().select("doc_id", facet_col) for r in readers])
     out = (
         cands.join(meta, "doc_id")
         .groupBy(facet_col)
@@ -535,8 +601,15 @@ def _empty_results(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], "doc_id long, score double")
 
 
-def attach_doc_metadata(reader: IndexReader, results: DataFrame) -> DataFrame:
+def attach_doc_metadata(
+    readers: IndexReader | list[IndexReader], results: DataFrame
+) -> DataFrame:
     """Top-k docIDs (tiny) ⋈ docs — broadcast the RESULTS side, mirroring
-    the reference's render join (reiz/fetch.py:84-114)."""
-    docs = reader.docs().select("doc_id", "repo", "path", "commit", "content_sha256")
+    the reference's render join (reiz/fetch.py:84-114). Each doc_id
+    lives in exactly one reader, so the join over the readers' docs
+    yields one row per hit."""
+    docs = _union_all([
+        r.docs().select("doc_id", "repo", "path", "commit", "content_sha256")
+        for r in as_readers(readers)
+    ])
     return F.broadcast(results).join(docs, "doc_id").orderBy(F.desc("score"), F.asc("doc_id"))

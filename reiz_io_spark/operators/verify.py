@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
 from ..plans.lower import LoweredQuery
-from .score import IndexReader
+from .score import IndexReader, _union_all, as_readers, query_stats
 from .wand import wand_scores, wand_topk
 
 OVERSAMPLE = 4  # first tranche = k * OVERSAMPLE candidate docs
@@ -90,45 +90,46 @@ def _match_positions(query_source: str):
 
 
 def verify_candidates(
-    reader: IndexReader, doc_ids: list[int], query_source: str
+    readers: IndexReader | list[IndexReader],
+    doc_ids: list[int],
+    query_source: str,
 ) -> DataFrame:
     """(doc_id, lineno) of exact structural matches among the given
-    docs. The IN-list filter is pushed into the parquet scan — built as
-    ONE parsed SQL expression: Column.isin creates a py4j literal
+    docs, whose content is read as a union over the readers. The
+    IN-list filter is pushed into each parquet scan — built as ONE
+    parsed SQL expression: Column.isin creates a py4j literal
     round-trip PER element (~0.6 ms each), a linear driver cost that
     at tranche sizes (k*4^n docs) would dominate serving latency."""
+    readers = as_readers(readers)
     if not doc_ids:
-        return reader.spark.createDataFrame([], _POSITIONS_SCHEMA)
+        return readers[0].spark.createDataFrame([], _POSITIONS_SCHEMA)
     in_list = ",".join(str(int(i)) for i in doc_ids)
-    content = reader.content().filter(
-        F.expr(f"doc_id IN ({in_list})")
-    ).select("doc_id", "content")
+    content = _union_all([
+        r.content().filter(F.expr(f"doc_id IN ({in_list})")).select(
+            "doc_id", "content"
+        )
+        for r in readers
+    ])
     return content.mapInPandas(_match_positions(query_source), _POSITIONS_SCHEMA)
 
 
-def _candidate_estimate(reader: IndexReader, query: LoweredQuery) -> int:
+def _candidate_estimate(readers: list[IndexReader], query: LoweredQuery) -> int:
     """Upper bound on the conjunction's candidate count: the smallest
     group's summed df (driver-side dictionary lookup, no Spark job for
     plain terms)."""
-    groups = reader.resolve_groups(query)
+    groups, stats = query_stats(readers, query)
     if not groups:
         return 0
-    tmeta = reader.term_meta(sorted({t for g in groups for t in g}))
-    best = None
-    for g in groups:
-        s = sum(int(tmeta[t]["df"]) for t in g if t in tmeta)
-        best = s if best is None else min(best, s)
-    return int(best or 0)
+    tmeta = stats["terms"]
+    return min(sum(int(tmeta[t]["df"]) for t in g if t in tmeta) for g in groups)
 
 
 def structural_topk(
-    reader: IndexReader,
+    readers: IndexReader | list[IndexReader],
     query: LoweredQuery,
     k: int = 10,
     offset: int = 0,
     candidate_budget: int = CANDIDATE_BUDGET,
-    groups_override: list[tuple[str, ...]] | None = None,
-    stats_override: dict | None = None,
 ) -> DataFrame:
     """Exact top-k structurally matching docs with match line numbers.
 
@@ -142,8 +143,12 @@ def structural_topk(
     exceeds ``candidate_budget`` escalate through ranked wand_topk
     PREFIXES — each a global exact top-N with MaxScore pruning — so no
     plan ever materializes a corpus-sized candidate list. Both routes
-    return identical results (pytest-gated)."""
-    spark = reader.spark
+    return identical results (pytest-gated). Over a reader list the
+    ranking is the global one (wand_scores under the summed stats) and
+    content and docs are read as unions over the readers, so N shards
+    answer exactly what one index over their union does."""
+    readers = as_readers(readers)
+    spark = readers[0].spark
     want = k + offset
     verified: dict[int, list] = {}  # doc_id -> [(lineno, col, end, segment)]
     scores: dict[int, float] = {}
@@ -156,7 +161,7 @@ def structural_topk(
         if not ids:
             return 0
         scores.update({r["doc_id"]: r["score"] for r in rows})
-        hits = verify_candidates(reader, ids, query.source).collect()
+        hits = verify_candidates(readers, ids, query.source).collect()
         by_doc: dict[int, list] = {}
         for h in hits:
             by_doc.setdefault(h["doc_id"], []).append(
@@ -169,27 +174,20 @@ def structural_topk(
                 order.append(did)
         return len(ids)
 
-    est = _candidate_estimate(reader, query)
+    est = _candidate_estimate(readers, query)
     seen: set = set()
     if est > candidate_budget:
         # hot query: exact ranked prefixes, growing; MaxScore pruning
         # applies inside each retrieval (k is finite)
         tranche = max(want * OVERSAMPLE, 16)
         for _ in range(MAX_TRANCHES):
-            rows = wand_topk(
-                reader, query, k=tranche,
-                groups_override=groups_override,
-                stats_override=stats_override,
-            ).collect()
+            rows = wand_topk(readers, query, k=tranche).collect()
             consume(rows, seen)
             if len(order) >= want or len(rows) < tranche:
                 break
             tranche *= 4
     else:
-        cand = wand_scores(
-            reader, query, k=None,
-            groups_override=groups_override, stats_override=stats_override,
-        ).persist(
+        cand = wand_scores(readers, query, k=None).persist(
             StorageLevel.MEMORY_AND_DISK
         )
         try:
@@ -221,7 +219,9 @@ def structural_topk(
     )
     from ..functions.links import github_link_col, username_col
 
-    meta = reader.docs().select("doc_id", "repo", "path", "commit")
+    meta = _union_all(
+        [r.docs().select("doc_id", "repo", "path", "commit") for r in readers]
+    )
     return (
         F.broadcast(hits_df)
         .join(meta, "doc_id")

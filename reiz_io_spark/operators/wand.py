@@ -47,7 +47,14 @@ from pyspark.sql import functions as F
 
 from ..functions import codec
 from ..plans.lower import LoweredQuery
-from .score import IndexReader, _empty_results
+from .score import (
+    IndexReader,
+    _empty_results,
+    _union_all,
+    as_readers,
+    query_stats,
+    shard_stats,
+)
 
 DOC_BUCKET_SHIFT = 58  # 64 buckets over the int64 doc-id space
 TARGET_DOCS_PER_BUCKET = 250_000  # adaptive: ~task-sized intersection work
@@ -58,7 +65,7 @@ def _adaptive_shift(n_docs: int) -> int:
     """Pick the doc-range bucket width from corpus size: ~250k docs per
     bucket, clamped to [1, 4096] buckets. A 60k-doc index runs 1 task
     (no scheduling fan-out for milliseconds of work); a 10^12-doc index
-    runs 4096 (raise TARGET or override per query for more)."""
+    runs 4096 (raise TARGET for more)."""
     n_buckets = max(1, min(4096, n_docs // TARGET_DOCS_PER_BUCKET or 1))
     bits = max(1, (n_buckets - 1).bit_length())  # >=1: a 64-bit shift wraps
     return 64 - bits
@@ -450,29 +457,27 @@ def field_weight_of(term: str, field_weights: dict[str, float]) -> float:
 
 
 def wand_scores(
-    reader: IndexReader,
+    readers: IndexReader | list[IndexReader],
     query: LoweredQuery,
     k: int | None = 10,
-    bucket_shift: int | None = None,
     field_weights: dict[str, float] | None = None,
-    groups_override: list[tuple[str, ...]] | None = None,
-    stats_override: dict | None = None,
 ) -> DataFrame:
     """Unordered (doc_id, score) of the query's candidates. With k, each
     bucket returns only its local top-k (MaxScore pruning active); with
     k=None every conjunction-satisfying doc is returned with its exact
     score — the input of the structural post-verification stage.
 
-    groups_override / stats_override are the federation hooks
-    (operators/federation.py): a shard of a sharded index scores its
-    local postings under GLOBAL collection stats — pre-resolved term
-    groups (union of every shard's dictionary expansion) and
-    {"avgdl": float, "idf_by_term": {...}, "df_by_term": {...}}
-    computed over summed df / n_docs / total_dl. With the override the
-    shard pays ZERO dictionary jobs here; a term the shard lacks
-    simply matches no local postings (correct: shards partition the
-    docs)."""
-    spark = reader.spark
+    ``readers`` is one IndexReader or a list of them (the shards of a
+    sharded index, operators/federation.py). The term groups and the
+    collection stats come from score.query_stats — integer sums over
+    the readers, so one reader scores under its own stats and N shards
+    score bit-identically to one index over their union. Each reader
+    runs the kernels over its own blocks under those stats, with the
+    doc-bucket shift taken from its own n_docs; the per-reader frames
+    union. A term a reader lacks matches no postings there (shards
+    partition the docs)."""
+    readers = as_readers(readers)
+    spark = readers[0].spark
     # each calling thread gets its own FAIR scheduler pool (pool names
     # are created on demand): concurrent clients' jobs share executor
     # slots fairly instead of queueing FIFO behind one client's stages
@@ -481,94 +486,75 @@ def wand_scores(
     spark.sparkContext.setLocalProperty(
         "spark.scheduler.pool", f"query-{_threading.get_ident()}"
     )
-    groups = (
-        groups_override
-        if groups_override is not None
-        else reader.resolve_groups(query)
-    )
+    groups, stats = query_stats(readers, query)
     if not groups or any(len(g) == 0 for g in groups):
         return _empty_results(spark)
-    meta = reader.meta
-    if bucket_shift is None:
-        bucket_shift = _adaptive_shift(int(meta.get("n_docs", 0)))
-    k1, b = float(meta["k1"]), float(meta["b"])
-    all_terms = sorted({t for g in groups for t in g})
-    if stats_override is not None:
-        avgdl = float(stats_override["avgdl"])
-        tmeta_present = stats_override["idf_by_term"]  # GLOBAL presence
-    else:
-        avgdl = float(meta["avgdl"])
-        tmeta_present = reader.term_meta(all_terms)
+    tmeta = stats["terms"]
     # terms absent from the dictionary: singleton group -> empty result
     for g in groups:
-        if all(t not in tmeta_present for t in g):
+        if all(t not in tmeta for t in g):
             return _empty_results(spark)
+    k1, b, avgdl = stats["k1"], stats["b"], stats["avgdl"]
+    all_terms = sorted({t for g in groups for t in g})
 
     from ..functions.hashing import spark_xxhash64
 
     tid_of = {t: spark_xxhash64(t) for t in all_terms}  # bit-equal to writer
-    buckets = reader.term_buckets(all_terms)
-    blk = (
-        reader.blocks()
-        .filter(F.col("term_bucket").isin(buckets))  # partition pruning
-        .filter(F.col("term_id").isin(list(tid_of.values())))  # row-group pushdown
-        .withColumn(
-            "qb",
-            F.explode(
-                F.sequence(
-                    F.shiftright("first_doc_id", bucket_shift),
-                    F.shiftright("last_doc_id", bucket_shift),
-                )
-            ),
-        )
-    )
-
-    if stats_override is not None:
-        idf_by_term = dict(stats_override["idf_by_term"])
-        df_by_term = dict(stats_override["df_by_term"])
-    else:
-        idf_by_term = {t: float(m["idf"]) for t, m in tmeta_present.items()}
-        df_by_term = {t: int(m["df"]) for t, m in tmeta_present.items()}
+    buckets = readers[0].term_buckets(all_terms)
+    idf_by_term = {t: float(m["idf"]) for t, m in tmeta.items()}
+    df_by_term = {t: int(m["df"]) for t, m in tmeta.items()}
     if field_weights:
         idf_by_term = {
             t: v * field_weight_of(t, field_weights)
             for t, v in idf_by_term.items()
         }
     group_list = [tuple(g) for g in groups]
-    shift = bucket_shift
     kk = k if k is not None else 1 << 31  # no pruning, all candidates
-    excl = reader.pending_tombstone_ids()  # None unless deletes pending
 
-    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        return score_bucket_kernel(
-            pdf, group_list, tid_of, idf_by_term, df_by_term,
-            shift, kk, avgdl, k1, b, exclude=excl,
+    def reader_scores(reader: IndexReader) -> DataFrame:
+        shift = _adaptive_shift(int(reader.meta.get("n_docs", 0)))
+        excl = reader.pending_tombstone_ids()  # None unless deletes pending
+        blk = (
+            reader.blocks()
+            .filter(F.col("term_bucket").isin(buckets))  # partition pruning
+            .filter(F.col("term_id").isin(list(tid_of.values())))  # row-group pushdown
+            .withColumn(
+                "qb",
+                F.explode(
+                    F.sequence(
+                        F.shiftright("first_doc_id", shift),
+                        F.shiftright("last_doc_id", shift),
+                    )
+                ),
+            )
         )
 
-    return blk.groupBy("qb").applyInPandas(score_bucket, "doc_id long, score double")
+        def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
+            return score_bucket_kernel(
+                pdf, group_list, tid_of, idf_by_term, df_by_term,
+                shift, kk, avgdl, k1, b, exclude=excl,
+            )
+
+        return blk.groupBy("qb").applyInPandas(
+            score_bucket, "doc_id long, score double"
+        )
+
+    return _union_all([reader_scores(r) for r in readers])
 
 
 def wand_topk(
-    reader: IndexReader,
+    readers: IndexReader | list[IndexReader],
     query: LoweredQuery,
     k: int = 10,
     offset: int = 0,
-    bucket_shift: int | None = None,
     field_weights: dict[str, float] | None = None,
-    groups_override: list[tuple[str, ...]] | None = None,
-    stats_override: dict | None = None,
 ) -> DataFrame:
-    """Global top-k with LIMIT/OFFSET paging (reiz/fetch.py:10,71-81).
+    """Global top-k with LIMIT/OFFSET paging (reiz/fetch.py:10,71-81)
+    over one index or a reader list (see wand_scores).
     field_weights (BM25F): per-namespace score multipliers, e.g.
     {'id': 2.0, 'node': 0.5} boosts identifier hits over bare
-    node-type hits — folded into idf, exact (see field_weight_of).
-    groups_override/stats_override: the federation hooks, passed
-    through to wand_scores."""
-    out = wand_scores(
-        reader, query, k=k + offset, bucket_shift=bucket_shift,
-        field_weights=field_weights,
-        groups_override=groups_override, stats_override=stats_override,
-    )
+    node-type hits — folded into idf, exact (see field_weight_of)."""
+    out = wand_scores(readers, query, k=k + offset, field_weights=field_weights)
     ranked = out.orderBy(F.desc("score"), F.asc("doc_id"))
     if offset:
         ranked = ranked.offset(offset)
@@ -579,7 +565,6 @@ def wand_topk_batch(
     reader: IndexReader,
     queries: dict[str, LoweredQuery],
     k: int = 10,
-    bucket_shift: int | None = None,
 ) -> DataFrame:
     """Run MANY queries in ONE Spark job: (query_name, doc_id, score,
     rank).
@@ -596,10 +581,7 @@ def wand_topk_batch(
     per-query results are rank-identical to the one-at-a-time path
     (pytest-gated)."""
     spark = reader.spark
-    meta = reader.meta
-    if bucket_shift is None:
-        bucket_shift = _adaptive_shift(int(meta.get("n_docs", 0)))
-    k1, b, avgdl = float(meta["k1"]), float(meta["b"]), float(meta["avgdl"])
+    bucket_shift = _adaptive_shift(int(reader.meta.get("n_docs", 0)))
 
     ctx: dict[str, tuple] = {}  # qid -> (group_list, q_idf, q_df)
     all_terms: set[str] = set()
@@ -611,7 +593,9 @@ def wand_topk_batch(
         resolved[qid] = [tuple(g) for g in groups]
         all_terms.update(t for g in groups for t in g)
     terms_sorted = sorted(all_terms)
-    tmeta = reader.term_meta(terms_sorted)  # ONE dictionary lookup
+    stats = shard_stats([reader], terms_sorted)  # ONE dictionary lookup
+    k1, b, avgdl = stats["k1"], stats["b"], stats["avgdl"]
+    tmeta = stats["terms"]
     idf_by_term = {t: float(m["idf"]) for t, m in tmeta.items()}
     df_by_term = {t: int(m["df"]) for t, m in tmeta.items()}
     for qid, group_list in resolved.items():

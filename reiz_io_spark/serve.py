@@ -13,17 +13,18 @@ module gives the engine the same two-tier design:
   index, or the shards of a sharded one (operators/federation.py —
   shards partition the docs). Every request takes the same steps for
   any number of shards: pin one generation; take the global BM25
-  statistics as integer sums over the shards (dfs_query_then_fetch);
-  score each shard's cached, DECODED posting lists under those stats
-  with the exact kernel semantics of the distributed path
-  (ascending-term float accumulation — rank identity vs
-  naive_bm25_topk is pytest-gated); merge on (-score, doc_id); render
-  metadata from the owning shard. Sums over one shard are that
-  index's own statistics, so a one-snapshot service is the
-  single-index service bit-for-bit.
+  statistics as integer sums over the shards (score.shard_stats, the
+  dfs phase of dfs_query_then_fetch); score each shard's cached,
+  DECODED posting lists under those stats with the exact kernel
+  semantics of the distributed path (ascending-term float
+  accumulation — rank identity vs naive_bm25_topk is pytest-gated);
+  merge on (-score, doc_id); render metadata from the owning shard.
+  Sums over one shard are that index's own statistics, so a
+  one-snapshot service is the single-index service bit-for-bit.
 - Queries whose total df exceeds ``max_driver_postings`` take the
-  distributed route instead (operators/federation.py's plans under the
-  same global stats; for one reader they are the wand_topk plan). A
+  distributed route instead: the ordinary read operators (wand_topk,
+  bm25_topk_after, explain_score, structural_topk) over the
+  generation's reader list, which take the same summed stats. A
   hot-term scan at 10^12 docs is cluster work; a 5-term conjunction
   over rare terms is not. Cache misses fetch ONLY the missing terms'
   blocks via one pruned parquet read per shard (term_bucket partition
@@ -40,7 +41,6 @@ import os
 import threading
 import time
 from collections import OrderedDict
-from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -48,9 +48,14 @@ from pyspark.sql import functions as F
 from .functions import codec
 from .functions.hashing import spark_xxhash64
 from .functions.links import github_link, username_of
-from .operators import federation
-from .operators.score import IndexReader
-from .operators.wand import field_weight_of
+from .operators.score import (
+    IndexReader,
+    as_readers,
+    bm25_topk_after,
+    explain_score,
+    shard_stats,
+)
+from .operators.wand import field_weight_of, wand_topk
 from .plans.lower import LoweredQuery, expand_groups
 
 # decoded sources kept per shard for structural verification
@@ -287,7 +292,7 @@ class _Shard:
 class _Generation:
     """One pinned set of shard snapshots and the global statistics that
     rank across them: n_docs, total_dl and per-term df/cf are integer
-    sums over the shards (federation.shard_stats), idf/avgdl derive
+    sums over the shards (score.shard_stats), idf/avgdl derive
     from the sums. A request pins ONE generation at entry and reads
     everything through it, so a refresh landing mid-request can never
     mix generations (old idf with new postings/avgdl). The Like
@@ -299,8 +304,7 @@ class _Generation:
     def __init__(self, shards: list[_Shard]):
         self.shards = shards
         self.readers = [sh.reader for sh in shards]
-        self.spark = self.readers[0].spark
-        totals = federation.shard_stats(self.readers, [])
+        totals = shard_stats(self.readers, [])
         self.k1, self.b = totals["k1"], totals["b"]
         self.n_docs, self.avgdl = totals["n_docs"], totals["avgdl"]
         versions = "-".join(str(sh.meta.get("version", 0)) for sh in shards)
@@ -340,7 +344,7 @@ class _Generation:
             t for t in terms if t not in self._tmeta and t not in self._absent
         ]
         if missing:
-            got = federation.shard_stats(self.readers, missing)["terms"]
+            got = shard_stats(self.readers, missing)["terms"]
             self._tmeta.update(got)
             self._absent.update(t for t in missing if t not in got)
         return {t: self._tmeta[t] for t in terms if t in self._tmeta}
@@ -425,9 +429,7 @@ class QueryService:
         max_cached_terms: int = 65_536,
         auto_refresh_s: float | None = None,
     ):
-        readers = list(reader) if isinstance(reader, (list, tuple)) else [reader]
-        if not readers:
-            raise ValueError("QueryService: no index snapshots")
+        readers = as_readers(reader)
         self.max_driver_postings = max_driver_postings
         self._max_driver_docmeta = max_driver_docmeta
         self._max_cached_terms = max_cached_terms
@@ -531,9 +533,9 @@ class QueryService:
     ) -> list[tuple]:
         """Global top-k after ``offset`` as (doc_id, score, owner)."""
         if self._distributed(tmeta):
-            top = federation.federated_topk(
-                gen.spark, None, query, k=k, offset=offset,
-                field_weights=field_weights, readers=gen.readers,
+            top = wand_topk(
+                gen.readers, query, k=k, offset=offset,
+                field_weights=field_weights,
             ).collect()
             return [(r["doc_id"], r["score"], None) for r in top]
         return gen._score_driver(
@@ -566,15 +568,14 @@ class QueryService:
         ranks the full candidate set (df-budget-bounded) and the
         keyset filter slices it; page N+1 equals rows N*k+1.. of
         query_topk's full ranking (pytest-gated). Over-budget: the
-        distributed exact cursor plan (federation.federated_topk_after)."""
+        distributed exact cursor plan (score.bm25_topk_after)."""
         gen, groups, tmeta = self._pin(query)
         if groups is None:
             return []
         s0, d0 = float(cursor[0]), int(cursor[1])
         if self._distributed(tmeta):
-            top = federation.federated_topk_after(
-                gen.spark, None, query, (s0, d0), k=k,
-                field_weights=field_weights, readers=gen.readers,
+            top = bm25_topk_after(
+                gen.readers, query, (s0, d0), k=k, field_weights=field_weights
             ).collect()
             ranked = [(r["doc_id"], r["score"], None) for r in top]
         else:
@@ -597,8 +598,7 @@ class QueryService:
         expression the driver scorer uses (codec.bm25_contrib), so a
         doc's rows sum to its served score exactly. Rows come in rank
         order, terms ascending. Warm path: ZERO Spark jobs; over budget
-        each shard collects the distributed explain under the global
-        stats."""
+        the distributed explain_score over the generation's readers."""
         gen, groups, tmeta = self._pin(query)
         if groups is None:
             return []
@@ -607,21 +607,16 @@ class QueryService:
             return field_weight_of(t, field_weights) if field_weights else 1.0
 
         if self._distributed(tmeta):
-            from .operators.score import explain_score
-
             top_ids = [
                 d for d, _, _ in
                 self._ranked(gen, groups, tmeta, query, k, 0, field_weights)
             ]
             if not top_ids:
                 return []
-            stats = federation.stats_override(gen.avgdl, tmeta)
             out = [
-                dict(r.asDict())
-                for reader in gen.readers  # a doc has rows in its owner only
+                r.asDict()
                 for r in explain_score(
-                    reader, query, top_ids, field_weights=field_weights,
-                    stats_override=stats,
+                    gen.readers, query, top_ids, field_weights=field_weights
                 ).collect()
             ]
             out.sort(key=lambda r: (top_ids.index(r["doc_id"]), r["term"]))
@@ -663,7 +658,10 @@ class QueryService:
         if groups is None:
             return []
         if self._distributed(tmeta):
-            return self._positions_distributed(gen, groups, tmeta, query, k, offset)
+            from .operators.verify import structural_topk
+
+            rows = structural_topk(gen.readers, query, k=k, offset=offset)
+            return _fold_position_rows(rows.collect(), offset)
         postings = gen._fetch_postings(list(tmeta))
         want = k + offset
         tranche = max(want * 4, 16)
@@ -714,43 +712,6 @@ class QueryService:
                  ]}
             )
         return out
-
-    def _positions_distributed(
-        self, gen: _Generation, groups, tmeta, query: LoweredQuery,
-        k: int, offset: int,
-    ) -> list[dict]:
-        """Hot query: each shard's DISTRIBUTED verify stage under the
-        global stats returns its verified top-(k+offset) — any global
-        top doc is in its owner's list — then a doc-level global merge.
-        The per-shard jobs are submitted concurrently (Spark's
-        scheduler runs them in parallel, so latency stays ~flat in the
-        shard count); structural_topk's verify matcher is per-reader,
-        so one union plan is not available here."""
-        from .operators.verify import structural_topk
-
-        stats = federation.stats_override(gen.avgdl, tmeta)
-
-        def shard_rows(reader):
-            return structural_topk(
-                reader, query, k=k + offset, offset=0,
-                groups_override=groups, stats_override=stats,
-            ).collect()
-
-        with ThreadPoolExecutor(max_workers=len(gen.readers)) as pool:
-            per_shard_rows = list(pool.map(shard_rows, gen.readers))
-        docs: list[tuple[float, int, list]] = []
-        for rows in per_shard_rows:
-            cur: list = []
-            for r in rows:
-                if cur and cur[0]["doc_id"] != r["doc_id"]:
-                    docs.append((cur[0]["score"], cur[0]["doc_id"], cur))
-                    cur = []
-                cur.append(r)
-            if cur:
-                docs.append((cur[0]["score"], cur[0]["doc_id"], cur))
-        docs.sort(key=lambda t: (-t[0], t[1]))
-        flat = [r for _, _, rows in docs[offset:offset + k] for r in rows]
-        return _fold_position_rows(flat, offset)
 
     def analyze(self, query: LoweredQuery) -> dict:
         """Lowered plan + per-term global stats (the reference's POST
@@ -805,19 +766,3 @@ class QueryService:
             "n_docs": gen.n_docs,
             "avgdl": gen.avgdl,
         }
-
-
-class FederatedQueryService(QueryService):
-    """A QueryService over the snapshots of per-shard services, for
-    callers that hold one service per shard."""
-
-    def __init__(self, services: list[QueryService]):
-        if not services:
-            raise ValueError("FederatedQueryService: no shards")
-        super().__init__(
-            [s.reader for s in services],
-            max_driver_postings=min(s.max_driver_postings for s in services),
-            max_driver_docmeta=services[0]._max_driver_docmeta,
-            max_cached_terms=services[0]._max_cached_terms,
-            auto_refresh_s=services[0].auto_refresh_s,
-        )

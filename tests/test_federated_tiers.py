@@ -34,7 +34,6 @@ from reiz_io_spark.operators.federation import (
     federated_append_to_ann_index,
     federated_grep,
     federated_grep_lines,
-    federated_topk,
     shard_corpus,
     shard_embeddings,
 )
@@ -321,7 +320,9 @@ def test_streamed_federated_upserts_equal_batch_and_fresh(spark, tmp_path):
     def _fed_rows(dirs, k=30):
         return [
             (r["doc_id"], r["score"])
-            for r in federated_topk(spark, dirs, Q, k=k).collect()
+            for r in wand_topk(
+                [IndexReader(spark, d) for d in dirs], Q, k=k
+            ).collect()
         ]
 
     assert _fed_rows(streamed) == _fed_rows(batch)
@@ -345,13 +346,11 @@ def test_streamed_federated_upserts_equal_batch_and_fresh(spark, tmp_path):
         fresh.append(d)
 
     def _rpps(dirs):
-        from reiz_io_spark.operators.federation import (
-            federated_doc_metadata,
-        )
+        from reiz_io_spark.operators.score import attach_doc_metadata
 
         readers = [IndexReader(spark, d) for d in dirs]
-        top = federated_topk(spark, dirs, Q, k=10_000)
-        rows = federated_doc_metadata(readers, top).select(
+        top = wand_topk(readers, Q, k=10_000)
+        rows = attach_doc_metadata(readers, top).select(
             "repo", "path", F.round("score", 9).alias("score")
         ).collect()
         return sorted((x["repo"], x["path"], x["score"]) for x in rows)

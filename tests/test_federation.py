@@ -17,13 +17,13 @@ from pyspark.sql import functions as F
 
 from reiz_io_spark.operators.build import build_index
 from reiz_io_spark.operators.deletes import delete_docs
-from reiz_io_spark.operators.federation import (
-    federated_doc_metadata,
-    federated_stats,
-    federated_topk,
-    shard_corpus,
+from reiz_io_spark.operators.federation import shard_corpus
+from reiz_io_spark.operators.score import (
+    IndexReader,
+    attach_doc_metadata,
+    query_stats,
 )
-from reiz_io_spark.operators.score import IndexReader, attach_doc_metadata
+from reiz_io_spark.operators.verify import CANDIDATE_BUDGET, structural_topk
 from reiz_io_spark.operators.wand import wand_topk
 from reiz_io_spark.plans.lower import lower_query
 from reiz_io_spark.plans.queries import REFERENCE_QUERIES
@@ -65,34 +65,34 @@ def fed(spark, tmp_path_factory):
 def test_federated_equals_single_index_bitwise(spark, fed):
     for q in (Q, Q_LIKE):
         want = _rows(wand_topk(IndexReader(spark, fed["single"]), q, k=25))
-        got = _rows(federated_topk(spark, None, q, k=25, readers=fed["readers"]))
+        got = _rows(wand_topk(fed["readers"], q, k=25))
         assert got == want, q.name
 
 
 def test_global_stats_match_single_index(spark, fed):
     single = IndexReader(spark, fed["single"])
-    groups, stats, k1 = federated_stats(fed["readers"], Q)
+    groups, stats = query_stats(fed["readers"], Q)
     assert [set(g) for g in groups] == [
         set(g) for g in single.resolve_groups(Q)
     ]
     assert stats["avgdl"] == float(single.meta["avgdl"])
     tmeta = single.term_meta(sorted({t for g in groups for t in g}))
     for t, m in tmeta.items():
-        assert stats["df_by_term"][t] == int(m["df"])
-        assert stats["idf_by_term"][t] == float(m["idf"])
+        assert stats["terms"][t]["df"] == int(m["df"])
+        assert stats["terms"][t]["idf"] == float(m["idf"])
 
 
 def test_local_stats_would_diverge(spark, fed):
     """The discipline matters: at least one shard's local df/avgdl
     differs from the global one for the flagship terms — scoring
     locally would skew (the artifact the dfs phase removes)."""
-    _, stats, _ = federated_stats(fed["readers"], Q)
+    _, stats = query_stats(fed["readers"], Q)
     diverges = False
     for r in fed["readers"]:
         if float(r.meta["avgdl"]) != stats["avgdl"]:
             diverges = True
-        for t, m in r.term_meta(list(stats["df_by_term"])).items():
-            if int(m["df"]) != stats["df_by_term"][t]:
+        for t, m in r.term_meta(list(stats["terms"])).items():
+            if int(m["df"]) != stats["terms"][t]["df"]:
                 diverges = True
     assert diverges
 
@@ -101,8 +101,7 @@ def test_field_weights_and_offset(spark, fed):
     w = {"id": 2.0, "node": 0.5}
     single = IndexReader(spark, fed["single"])
     assert _rows(
-        federated_topk(spark, None, Q, k=10, offset=5, field_weights=w,
-                       readers=fed["readers"])
+        wand_topk(fed["readers"], Q, k=10, offset=5, field_weights=w)
     ) == _rows(wand_topk(single, Q, k=10, offset=5, field_weights=w))
 
 
@@ -113,10 +112,10 @@ def test_metadata_join_across_shards(spark, fed):
         (r["repo"], r["path"], r["score"])
         for r in attach_doc_metadata(single, top_single).collect()
     ]
-    top_fed = federated_topk(spark, None, Q, k=10, readers=fed["readers"])
+    top_fed = wand_topk(fed["readers"], Q, k=10)
     got = [
         (r["repo"], r["path"], r["score"])
-        for r in federated_doc_metadata(fed["readers"], top_fed).collect()
+        for r in attach_doc_metadata(fed["readers"], top_fed).collect()
     ]
     assert got == want
 
@@ -147,12 +146,12 @@ def test_pending_delete_in_one_shard(spark, fed, tmp_path_factory):
     assert hit == 1, "repo-hash routing must place one repo in one shard"
     readers = [IndexReader(spark, d) for d in sdirs]
     want = _rows(wand_topk(IndexReader(spark, single2), Q, k=25))
-    got = _rows(federated_topk(spark, None, Q, k=25, readers=readers))
+    got = _rows(wand_topk(readers, Q, k=25))
     assert got == want
     assert victim not in {
         r["repo"]
-        for r in federated_doc_metadata(
-            readers, federated_topk(spark, None, Q, k=25, readers=readers)
+        for r in attach_doc_metadata(
+            readers, wand_topk(readers, Q, k=25)
         ).collect()
     }
 
@@ -173,20 +172,18 @@ def test_k1_mismatch_refuses(spark, fed, tmp_path_factory):
         json.dump(meta, fh)
     readers = [IndexReader(spark, bad)] + fed["readers"][1:]
     with pytest.raises(ValueError, match="k1"):
-        federated_stats(readers, Q)
+        query_stats(readers, Q)
 
 
 def test_federated_serving_tier(spark, fed):
-    """FederatedQueryService: global stats assembled from shard-service
-    memos, per-shard driver scoring, merged top-k — equal to both the
+    """QueryService over the shard readers: global stats summed over
+    the shards, per-shard driver scoring, merged top-k — equal to both the
     single-index warm service and the distributed federated path; the
     warm repeat touches no new Spark jobs' worth of postings fetches."""
-    from reiz_io_spark.serve import FederatedQueryService, QueryService
+    from reiz_io_spark.serve import QueryService
 
     single_svc = QueryService(IndexReader(spark, fed["single"]))
-    fed_svc = FederatedQueryService(
-        [QueryService(r) for r in fed["readers"]]
-    )
+    fed_svc = QueryService(fed["readers"])
     for q in (Q, Q_LIKE):
         for w in (None, {"id": 2.0, "node": 0.5}):
             want = [
@@ -199,8 +196,7 @@ def test_federated_serving_tier(spark, fed):
             ]
             assert got == want, (q.name, w)
     # offset paging parity against the distributed federated path
-    want = _rows(federated_topk(spark, None, Q, k=10, offset=5,
-                                readers=fed["readers"]))
+    want = _rows(wand_topk(fed["readers"], Q, k=10, offset=5))
     got = [
         (r["doc_id"], r["score"])
         for r in fed_svc.query_topk(Q, k=10, offset=5)
@@ -214,12 +210,10 @@ def test_federated_serving_tier(spark, fed):
 def test_federated_serving_distributed_fallback(spark, fed):
     """A tiny driver budget routes the federated service through the
     distributed federated WAND path — results unchanged."""
-    from reiz_io_spark.serve import FederatedQueryService, QueryService
+    from reiz_io_spark.serve import QueryService
 
-    fed_svc = FederatedQueryService([
-        QueryService(r, max_driver_postings=1) for r in fed["readers"]
-    ])
-    want = _rows(federated_topk(spark, None, Q, k=10, readers=fed["readers"]))
+    fed_svc = QueryService(fed["readers"], max_driver_postings=1)
+    want = _rows(wand_topk(fed["readers"], Q, k=10))
     got = [(r["doc_id"], r["score"]) for r in fed_svc.query_topk(Q, k=10)]
     assert got == want
 
@@ -281,8 +275,8 @@ def test_federated_writes_route_to_owning_shard(spark, fed, tmp_path_factory):
     }
     got = {
         (r["repo"], r["path"], round(r["score"], 9))
-        for r in federated_doc_metadata(
-            readers, federated_topk(spark, None, Q, k=25, readers=readers)
+        for r in attach_doc_metadata(
+            readers, wand_topk(readers, Q, k=25)
         ).collect()
     }
     assert got == want
@@ -295,8 +289,8 @@ def test_federated_writes_route_to_owning_shard(spark, fed, tmp_path_factory):
     readers = [IndexReader(spark, d) for d in sdirs]
     assert victim not in {
         r["repo"]
-        for r in federated_doc_metadata(
-            readers, federated_topk(spark, None, Q, k=25, readers=readers)
+        for r in attach_doc_metadata(
+            readers, wand_topk(readers, Q, k=25)
         ).collect()
     }
 
@@ -340,7 +334,7 @@ def test_reshard_without_retokenize(spark, fed, tmp_path_factory):
             compact_deletes(spark, d)
 
     old_readers = [IndexReader(spark, d) for d in sdirs]
-    want = _rows(federated_topk(spark, None, Q, k=30, readers=old_readers))
+    want = _rows(wand_topk(old_readers, Q, k=30))
 
     new_dirs = reshard_index(spark, sdirs, 2, str(base / "new"))
     assert len(new_dirs) == 2
@@ -351,14 +345,14 @@ def test_reshard_without_retokenize(spark, fed, tmp_path_factory):
         bad = {k: v for k, v in rep.items() if not v["ok"]}
         assert not bad, (d, bad)
     new_readers = [IndexReader(spark, d) for d in new_dirs]
-    got = _rows(federated_topk(spark, None, Q, k=30, readers=new_readers))
+    got = _rows(wand_topk(new_readers, Q, k=30))
     assert got == want, "reshard must be invisible to queries"
     # deleted repo stays gone; updated repo serves the new content ids
     repos = {
         r["repo"]
-        for r in federated_doc_metadata(
+        for r in attach_doc_metadata(
             new_readers,
-            federated_topk(spark, None, Q, k=30, readers=new_readers),
+            wand_topk(new_readers, Q, k=30),
         ).collect()
     }
     assert del_repo not in repos
@@ -379,11 +373,11 @@ def test_federated_positions_equal_single_index(spark, fed):
     """Structural positions through the federated serving tier equal
     the single-index service over the union corpus — same ranking
     (global stats), same verified docs, same spans/links."""
-    from reiz_io_spark.serve import FederatedQueryService, QueryService
+    from reiz_io_spark.serve import QueryService
 
     q = lower_query("pos", REFERENCE_QUERIES["simple/not_constant"])
     single_svc = QueryService(IndexReader(spark, fed["single"]))
-    fed_svc = FederatedQueryService([QueryService(r) for r in fed["readers"]])
+    fed_svc = QueryService(fed["readers"])
     want = single_svc.query_positions(q, k=5)
     got = fed_svc.query_positions(q, k=5)
     assert got == want
@@ -394,35 +388,30 @@ def test_federated_positions_equal_single_index(spark, fed):
 
 
 def test_federated_statistics_equal_single_index(spark, fed):
-    from reiz_io_spark.serve import FederatedQueryService, QueryService
+    from reiz_io_spark.serve import QueryService
 
     single = QueryService(IndexReader(spark, fed["single"])).statistics()
-    fed_stats = FederatedQueryService(
-        [QueryService(r) for r in fed["readers"]]
-    ).statistics()
+    fed_stats = QueryService(fed["readers"]).statistics()
     assert fed_stats == single
 
 
 def test_federated_positions_distributed_route(spark, fed):
-    """Over-budget federated positions route through per-shard
-    DISTRIBUTED structural verify under global stats — equal to the
-    single-index service forced onto its distributed route."""
-    from reiz_io_spark.serve import FederatedQueryService, QueryService
+    """Over-budget federated positions route through the DISTRIBUTED
+    structural verify over the shard readers under global stats — equal
+    to the single-index service forced onto its distributed route."""
+    from reiz_io_spark.serve import QueryService
 
     q = lower_query("pos", REFERENCE_QUERIES["simple/not_constant"])
     single_svc = QueryService(
         IndexReader(spark, fed["single"]), max_driver_postings=1
     )
-    fed_svc = FederatedQueryService([
-        QueryService(r, max_driver_postings=1) for r in fed["readers"]
-    ])
+    fed_svc = QueryService(fed["readers"], max_driver_postings=1)
     want = single_svc.query_positions(q, k=5)
     got = fed_svc.query_positions(q, k=5)
     assert want and got == want
 
 
-def test_federated_facets_equal_single_index(spark, fed):
-    from reiz_io_spark.operators.federation import federated_facets
+def test_facets_over_shards_equal_single_index(spark, fed):
     from reiz_io_spark.operators.score import facet_counts
 
     single = IndexReader(spark, fed["single"])
@@ -433,18 +422,14 @@ def test_federated_facets_equal_single_index(spark, fed):
         ]
         got = [
             (r[col], r["n_docs"])
-            for r in federated_facets(
-                spark, None, q, facet_col=col, readers=fed["readers"]
-            ).collect()
+            for r in facet_counts(fed["readers"], q, facet_col=col).collect()
         ]
         assert got == want and want  # non-empty, identical incl. order
     # k truncation keeps the (count desc, facet asc) deterministic head
     want_q = [
         (r["repo"], r["n_docs"]) for r in facet_counts(single, Q).collect()
     ]
-    got3 = federated_facets(
-        spark, None, Q, facet_col="repo", k=3, readers=fed["readers"]
-    ).collect()
+    got3 = facet_counts(fed["readers"], Q, facet_col="repo", k=3).collect()
     assert [(r["repo"], r["n_docs"]) for r in got3] == want_q[:3]
 
 
@@ -474,10 +459,10 @@ def test_serving_explain_single_and_federated(spark, fed):
     """explain_topk at the serving tier: contributions sum to the
     served score exactly; the federated explain (owner-shard tf/dl
     under global df/idf) is row-identical to the single-index one."""
-    from reiz_io_spark.serve import FederatedQueryService, QueryService
+    from reiz_io_spark.serve import QueryService
 
     single_svc = QueryService(IndexReader(spark, fed["single"]))
-    fed_svc = FederatedQueryService([QueryService(r) for r in fed["readers"]])
+    fed_svc = QueryService(fed["readers"])
     for q in (Q, Q_LIKE):
         top = single_svc.query_topk(q, k=3)
         rows = single_svc.explain_topk(q, k=3)
@@ -517,31 +502,28 @@ def test_serving_explain_single_and_federated(spark, fed):
 
 
 def test_federated_cursor_paging_equals_single_index(spark, fed):
-    from reiz_io_spark.operators.federation import federated_topk_after
     from reiz_io_spark.operators.score import bm25_topk_after
 
     single = IndexReader(spark, fed["single"])
     k = 8
-    page1 = _rows(federated_topk(spark, None, Q, k=k, readers=fed["readers"]))
+    page1 = _rows(wand_topk(fed["readers"], Q, k=k))
     cursor = (page1[-1][1], page1[-1][0])
     got = _rows(
-        federated_topk_after(
-            spark, None, Q, cursor, k=k, readers=fed["readers"]
-        )
+        bm25_topk_after(fed["readers"], Q, cursor, k=k)
     )
     want = _rows(bm25_topk_after(single, Q, cursor, k=k))
     assert got == want and got
     # pages tile: page1 + page2 == the first 2k of the full ranking
     assert page1 + got == _rows(
-        federated_topk(spark, None, Q, k=2 * k, readers=fed["readers"])
+        wand_topk(fed["readers"], Q, k=2 * k)
     )
 
 
 def test_serving_query_after_single_and_federated(spark, fed):
-    from reiz_io_spark.serve import FederatedQueryService, QueryService
+    from reiz_io_spark.serve import QueryService
 
     single_svc = QueryService(IndexReader(spark, fed["single"]))
-    fed_svc = FederatedQueryService([QueryService(r) for r in fed["readers"]])
+    fed_svc = QueryService(fed["readers"])
     k = 6
     page1 = single_svc.query_topk(Q, k=k)
     cursor = (page1[-1]["score"], page1[-1]["doc_id"])
@@ -556,3 +538,52 @@ def test_serving_query_after_single_and_federated(spark, fed):
     assert [
         (r["doc_id"], r["score"]) for r in fed_svc.query_topk(Q, k=2 * k)
     ][k:] == got
+
+
+@pytest.mark.parametrize(
+    "candidate_budget", [CANDIDATE_BUDGET, 0], ids=["materialized", "prefixes"]
+)
+def test_structural_verify_and_explain_over_shards(spark, fed, candidate_budget):
+    """structural_topk over the shard readers equals the single index on
+    both retrieval routes (materialized candidates, ranked prefixes);
+    explain_score over the shard readers is row-identical too."""
+    from reiz_io_spark.operators.score import explain_score
+
+    single = IndexReader(spark, fed["single"])
+    q = lower_query("pos", REFERENCE_QUERIES["simple/not_constant"])
+    want = structural_topk(
+        single, q, k=5, candidate_budget=candidate_budget
+    ).collect()
+    got = structural_topk(
+        fed["readers"], q, k=5, candidate_budget=candidate_budget
+    ).collect()
+    assert want and got == want
+    ids = [r["doc_id"] for r in wand_topk(single, Q, k=3).collect()]
+    want_x = explain_score(single, Q, ids).collect()
+    assert want_x and explain_score(fed["readers"], Q, ids).collect() == want_x
+
+
+def test_cli_query_over_shards_equals_single_index(spark, fed, capsys):
+    """`query --indexes` over the shard dirs prints the rows `query
+    --index` prints for the union index; the single-index-only flags
+    refuse a shard set."""
+    import argparse
+
+    from reiz_io_spark import cli
+
+    def run(**kw):
+        args = argparse.Namespace(
+            cmd="query", index=None, indexes=None,
+            pattern="Call(Name('len'))", k=10, naive=False,
+            at_version=None, explain=False, after=None,
+        )
+        vars(args).update(kw)
+        code = cli._dispatch(args, spark)
+        return code, capsys.readouterr().out.splitlines()
+
+    code, want = run(index=fed["single"])
+    assert code == 0 and len(want) == 10
+    assert run(indexes=",".join(fed["shards"])) == (0, want)
+    for flag in ({"naive": True}, {"at_version": 1}):
+        code, out = run(indexes=",".join(fed["shards"]), **flag)
+        assert code == 2 and out == []

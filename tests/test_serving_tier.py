@@ -26,7 +26,7 @@ from reiz_io_spark.operators.deletes import delete_docs
 from reiz_io_spark.operators.federation import shard_corpus
 from reiz_io_spark.operators.score import IndexReader, naive_bm25_topk
 from reiz_io_spark.plans.lower import lower_query
-from reiz_io_spark.serve import FederatedQueryService, QueryService
+from reiz_io_spark.serve import QueryService
 from reiz_io_spark.sources.corpus import synth_corpus
 
 Q = lower_query("flagship", "Call(Name('len'))")
@@ -64,10 +64,9 @@ def test_small_postings_cache_serves_exact_results(spark, tier, n_shards):
     if n_shards == 1:
         svc = QueryService(single, max_cached_terms=8)
     else:
-        svc = FederatedQueryService([
-            QueryService(IndexReader(spark, d), max_cached_terms=8)
-            for d in tier["shards"]
-        ])
+        svc = QueryService(
+            [IndexReader(spark, d) for d in tier["shards"]], max_cached_terms=8
+        )
     want = _pairs(naive_bm25_topk(single, Q_WIDE, k=K).collect())
     got = _pairs(svc.query_topk(Q_WIDE, k=K))
     assert want and got == want
