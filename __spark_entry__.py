@@ -593,7 +593,7 @@ def _code_search_wand(s: SparkSession, d: str) -> DataFrame:
 
 def _code_search_explain(s: SparkSession, d: str) -> DataFrame:
     """Per-term BM25 contribution rows for the flagship query's top-1
-    doc (score.explain_score — runs-scan with doc_id+term IN pushdown,
+    doc (score.explain_score — runs view over docs, doc_id IN pushdown,
     broadcast term metadata, no shuffle). The DuckDB twin recomputes
     the identical breakdown from the side tables, so tf, df, idf, and
     the contribution arithmetic are each hash-pinned."""

@@ -1,21 +1,24 @@
-"""Inverted-index build: corpus -> docs / postings runs / dictionary /
-compressed blocks / lineage, checkpoint-resumable.
+"""Inverted-index build: corpus -> docs / dictionary / compressed blocks
+/ lineage, checkpoint-resumable.
 
 This one columnar pipeline replaces the reference's per-AST-node INSERT
 ingest (reiz/serialization/insert.py:18-51, serializer.py:88-97 — one
 network round trip per node, ~17.5M objects for 53k files) with:
 
-    corpus ──filter(lang)──▶ tokenize UDF (map-side tf) ──▶ docs + runs
+    corpus ──filter(lang)──▶ tokenize UDF (map-side tf) ──▶ docs
+    runs = explode(docs.terms)  [a view over docs, never written]
     runs ──term_id = xxhash64(term); broadcast-join hot-term fan-out map
          ──salt = pmod(xxhash64(doc_id), S(term))
          ──repartition(term_id, salt)  [the north rule's salted re-shuffle]
          ──sortWithinPartitions(term_id, salt, doc_id)  [external merge:
             Spark's sort-based shuffle spills + merges runs on disk]
-         ──mapInPandas(encode)──▶ delta+varint blocks w/ block-max bounds
+         ──mapInArrow(encode)──▶ delta+varint blocks w/ block-max bounds
 
 Scale design notes (100 TB / 10^12 files):
 - tf aggregation happens INSIDE the tokenizer UDF (one row per doc), so
   the only full-data shuffle is the block-encode repartition.
+- the posting runs are read_runs(), an explode of the docs table's
+  per-doc tf map: the same postings are never stored twice.
 - S(term) = ceil(df / FRAGMENT_POSTINGS): hot terms (id:self, node:Name —
   Zipfian corpora) fan out across S fragments, each encoded
   independently; no single task ever owns a whole hot posting list.
@@ -25,7 +28,7 @@ Scale design notes (100 TB / 10^12 files):
   pmod(xxhash64(term), N_TERM_BUCKETS): query-time partition pruning
   reads only the buckets of the query's terms.
 - resume: per-shard lineage rows (shard = pmod(xxhash64(repo), n_shards))
-  written only after that shard's docs+runs land; a re-run anti-joins
+  written only after that shard's docs land; a re-run anti-joins
   pending shards against lineage — the analog of the reference's
   DB-backed ingest cache (reiz/serialization/cache.py:8-25,
   context.py:105-109).
@@ -42,7 +45,7 @@ from collections.abc import Iterator
 from contextlib import contextmanager
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
@@ -56,7 +59,6 @@ from ..schema import (
     DICTIONARY_ON_DISK,
     DOCS_ON_DISK,
     LINEAGE,
-    RUNS_ON_DISK,
 )
 
 FRAGMENT_POSTINGS = 262_144  # target postings per salted fragment
@@ -90,7 +92,6 @@ def _paths(out_dir: str) -> dict[str, str]:
     return {
         "docs": os.path.join(out_dir, "docs"),
         "content": os.path.join(out_dir, "content"),
-        "runs": os.path.join(out_dir, "runs"),
         "dictionary": os.path.join(out_dir, "dictionary_v1"),
         "blocks": os.path.join(out_dir, "blocks_v1"),
         "lineage": os.path.join(out_dir, "lineage"),
@@ -217,7 +218,7 @@ def prepare_docs(corpus: DataFrame, n_shards: int) -> DataFrame:
     # bare shard. Hashing n_shards DISTINCT key values into n_shards
     # partitions leaves ~1/e of tasks empty and loads others with 2-3
     # whole shards — every downstream stage (content write, tokenizer,
-    # docs/runs writes) inherited that straggler profile, and each
+    # docs writes) inherited that straggler profile, and each
     # (batch, shard) dir got ONE parquet file, so the tokenize scan
     # could not split finer than a shard. The deterministic subshard
     # (pure function of doc_id) multiplies the key space ~3x the core
@@ -229,6 +230,28 @@ def prepare_docs(corpus: DataFrame, n_shards: int) -> DataFrame:
     return df.repartition(
         n_shards * k, "shard", F.pmod(F.xxhash64("doc_id"), F.lit(k))
     )
+
+
+def read_runs(
+    spark: SparkSession, out_dir: str, batches: list[str] | None = None
+) -> DataFrame:
+    """The posting runs (batch, shard, term, doc_id, tf, dl) of an
+    index: a view over the docs table, whose per-doc tf map (the
+    forward index) already holds every posting. Parse-failed docs carry
+    no postings; dl is the doc's length. ``batches`` prunes on the
+    batch partition column, so a merge of new batches never opens an
+    old batch's files. Never materialized: a stored copy duplicated
+    docs.terms on disk and cost the build one more write pass."""
+    docs = spark.read.schema(DOCS_ON_DISK).parquet(_paths(out_dir)["docs"])
+    if batches is not None:
+        docs = docs.filter(F.col("batch").isin(batches))
+    return docs.filter(F.col("parse_ok")).select(
+        "batch",
+        "shard",
+        F.explode("terms").alias("term", "tf"),
+        "doc_id",
+        F.col("doclen").alias("dl"),
+    ).select("batch", "shard", "term", "doc_id", "tf", "dl")
 
 
 def _other_batch_dirs(docs_path: str, build_id: str) -> list[str]:
@@ -272,9 +295,9 @@ def stage1_ingest(
     build_id: str = "build-0",
     n_shards: int = 8,
 ) -> dict:
-    """Stage 1: tokenize the corpus batch -> docs + runs + lineage.
+    """Stage 1: tokenize the corpus batch -> content + docs + lineage.
 
-    docs/runs are partitioned by (batch=build_id, shard): each ingest
+    content/docs are partitioned by (batch=build_id, shard): each ingest
     batch owns its partitions, so dynamic-overwrite replay of the same
     batch is idempotent (the Structured Streaming foreachBatch contract,
     streaming/ingest.py) and an interrupted batch resumes via the
@@ -350,39 +373,16 @@ def stage1_ingest(
     docs.write.mode("overwrite").partitionBy("batch", "shard").parquet(p["docs"])
     t_docs = time.perf_counter()
 
-    # runs: one explode of the per-doc tf map; dl rides along -> the query
-    # path never joins back to docs for lengths. Derived from the staged
-    # parquet (re-tokenization avoided); only this batch's pending shards
-    # are rewritten.
-    # explicit schema on every docs re-read: inferring it is a Spark job
+    # the lineage aggregate reads the docs just written (explicit
+    # schema on every docs re-read: inferring it is a Spark job)
     staged = spark.read.schema(DOCS_ON_DISK).parquet(p["docs"]).filter(
         F.col("batch") == build_id
     )
     if done_ids:
         staged = staged.filter(~F.col("shard").isin(done_ids))
-    runs = (
-        staged.filter(F.col("parse_ok"))
-        .select(
-            "shard",
-            "doc_id",
-            F.col("doclen").alias("dl"),
-            F.explode("terms").alias("term", "tf"),
-        )
-        .select(F.lit(build_id).alias("batch"), "shard", "term", "doc_id", "tf", "dl")
-    )
-    # r8: NO sortWithinPartitions before the runs write — measured at
-    # the 200k bench it cost 1.7 s and bought nothing (identical
-    # 110 MB on disk; parquet dictionary pages compress the term
-    # column the same either way, and every runs reader aggregates or
-    # re-sorts). The encode stage's (term_id, salt, doc_id) sort is
-    # where ordering actually matters and it still happens there.
-    runs.write.mode("overwrite").partitionBy(
-        "batch", "shard"
-    ).parquet(p["runs"])
-    t_runs = time.perf_counter()
 
     # lineage rows for the shards we just processed (atomic append AFTER
-    # the shard data landed — crash before this line => shard re-runs).
+    # the shard's docs landed — crash before this line => shard re-runs).
     stage1_ms = int((time.perf_counter() - t0) * 1000)
     lineage_rows = (
         staged.groupBy("shard")
@@ -410,8 +410,7 @@ def stage1_ingest(
         "stage1_ms": stage1_ms,
         "t_content_write_s": round(t_content - t0, 2),
         "t_docs_write_s": round(t_docs - t0, 2),
-        "t_runs_write_s": round(t_runs - t_docs, 2),
-        "t_lineage_s": round(time.perf_counter() - t_runs, 2),
+        "t_lineage_s": round(time.perf_counter() - t_docs, 2),
     }
 
 
@@ -427,7 +426,7 @@ def merge_and_encode(
     """Stages 2-3: dictionary + salted merge + block encode over ALL
     ingested batches (the one-shot / first-merge path; subsequent
     batches should use merge_incremental, which reads only new runs).
-    Deterministic given the runs tables — re-running after more batches
+    Deterministic given the docs table — re-running after more batches
     produces the superset index, byte-identical to the incremental
     chain (pytest-gated).
 
@@ -466,8 +465,8 @@ def _encode_all_runs(
     dict_dir = os.path.join(out_dir, f"dictionary_v{version}")
     blocks_dir = os.path.join(out_dir, f"blocks_v{version}")
     t1 = time.perf_counter()
-    all_runs = spark.read.schema(RUNS_ON_DISK).parquet(p["runs"])
-    # deleted docs (operators/deletes.py): runs is an append-only log
+    all_runs = read_runs(spark, out_dir)
+    # deleted docs (operators/deletes.py): docs is an append-only log
     # that keeps tombstoned docs' postings forever — a full re-encode
     # must not resurrect them. Distributed anti-join (never a driver
     # collect; the ledger can be large after years of deletes), and the
@@ -507,37 +506,12 @@ def _encode_all_runs(
     # same numpy expression the oracle uses — bit-identical, and the
     # build saves an Arrow round-trip of the whole 10^9-term dictionary
     # through a Python stage. Per-block score bounds live on blocks.
-    (
+    _write_dictionary(
         all_runs.groupBy("term")  # built-in partial+final hash agg — skew-safe
-        .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
-        .withColumn("term_id", F.xxhash64("term"))
-        .withColumn(
-            "term_bucket", F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)).cast("int")
-        )
-        # whole buckets per task -> one file per bucket dir; AQE sizes
-        # the exchange from the data (at most N_TERM_BUCKETS non-empty
-        # partitions, so a fixed fan-out above that only adds empty tasks)
-        .repartition("term_bucket")
-        .write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .parquet(dict_dir)
+        .agg(F.count("*").alias("df"), F.sum("tf").alias("cf")),
+        dict_dir,
     )
     dictionary = spark.read.schema(DICTIONARY_ON_DISK).parquet(dict_dir)
-    # term_id collision invariant (schema.py BLOCKS note): every term_id
-    # must map to exactly one term — a collision would silently merge two
-    # posting lists. The dictionary is grouped by term, so rows ==
-    # distinct terms; collisions exist iff count(*) > countDistinct(
-    # term_id). ONE partial-agg pass (no groupBy-per-id job); hard fail.
-    inv = dictionary.agg(
-        F.count("*").alias("n_terms"),
-        F.countDistinct("term_id").alias("n_ids"),
-    ).collect()[0]
-    collisions = int(inv["n_terms"]) - int(inv["n_ids"])
-    if collisions:
-        raise RuntimeError(
-            f"xxhash64 term_id collision on {collisions} ids — "
-            "re-key the dictionary (e.g. widen to (term_id, len(term)))"
-        )
     t_dict = time.perf_counter()
 
     # ---- stage 3: salted re-shuffle + external merge + block encode -------
@@ -546,10 +520,10 @@ def _encode_all_runs(
     # (df > fragment target — a Zipf head of a few thousand rows) and is
     # broadcast, so there is no 10^12-row postings-dictionary shuffle.
     hot = _hot_map(dictionary, fragment_postings)
-    postings = all_runs.withColumn("term_id", F.xxhash64("term")).select(
+    postings = all_runs.withColumn("term_id", _term_id()).select(
         "term_id", "doc_id", "tf", "dl"
     )
-    blocks = _encode_postings(spark, postings, hot, block_size)
+    blocks = _encode_postings(postings, hot, block_size)
     # Encoded blocks are tiny (compressed bytes); one extra shuffle by
     # term_bucket collapses the write from n_salted_partitions x
     # n_buckets small files (measured: 1024 at 32x32, a multi-second
@@ -564,7 +538,7 @@ def _encode_all_runs(
         ).partitionBy("term_bucket").parquet(blocks_dir)
     t_blocks = time.perf_counter()
 
-    # the delete ledger survives a full re-encode: runs still carry the
+    # the delete ledger survives a full re-encode: docs still carry the
     # deleted rows, so the pointer carries forward — rewritten with
     # every row folded=true (the anti-join above excluded them from the
     # new blocks, so flags and block state must agree; a later
@@ -591,7 +565,7 @@ def _encode_all_runs(
         "block_size": block_size,
         "fragment_postings": fragment_postings,
         "n_term_buckets": N_TERM_BUCKETS,
-        "term_id_collisions": collisions,
+        "term_id_collisions": 0,
         "merged_batches": merged_batches,
         "stage23_ms": int((time.perf_counter() - t1) * 1000),
         "t_stats_dict_s": round(t_dict - t1, 2),
@@ -599,6 +573,61 @@ def _encode_all_runs(
         **(extra or {}),
     }
     return _publish(out_dir, meta, prev_meta)
+
+
+def _term_id():
+    """term -> term_id: the build's one term-id expression (query-side
+    twin: functions/hashing.spark_xxhash64)."""
+    return F.xxhash64("term")
+
+
+def _term_bucket():
+    """term_id -> term_bucket. Equal to pmod(xxhash64(term), N), and
+    a function of term_id, so terms sharing an id share a bucket (the
+    collision check in _write_dictionary relies on it)."""
+    return F.pmod(F.col("term_id"), F.lit(N_TERM_BUCKETS)).cast("int")
+
+
+def _write_dictionary(terms: DataFrame, path: str) -> None:
+    """The one dictionary writer, shared by the full build and the
+    delta merge: (term, df, cf) rows, one per term -> term_id and
+    term_bucket added, whole buckets per task (one parquet file per
+    bucket dir; AQE sizes the exchange from the data — at most
+    N_TERM_BUCKETS non-empty partitions, so a fixed fan-out above that
+    only adds empty tasks).
+
+    The term_id collision invariant (schema.py BLOCKS note) is checked
+    INSIDE this write: every term_id must map to exactly one term — a
+    collision would silently merge two posting lists. term_bucket is a
+    function of term_id, so colliding terms share a bucket, and once a
+    bucket is ordered by term_id they are adjacent: lag(term_id) over
+    the bucket finds each one. The window adds no exchange (the
+    repartition already clusters by term_bucket) and the count rides
+    the write as an observed metric — no re-read of the dictionary, no
+    extra job. A retried task can only add to the count, never drop a
+    match. Raises before the caller commits anything."""
+    seen = Observation("term_id_collisions")
+    in_bucket = Window.partitionBy("term_bucket").orderBy("term_id")
+    (
+        terms.select("term", "df", "cf", _term_id().alias("term_id"))
+        .withColumn("term_bucket", _term_bucket())
+        .repartition("term_bucket")
+        .withColumn("_prev_id", F.lag("term_id").over(in_bucket))
+        .observe(
+            seen,
+            F.count(F.when(F.col("_prev_id") == F.col("term_id"), 1)).alias("n"),
+        )
+        .drop("_prev_id")
+        .write.mode("overwrite")
+        .partitionBy("term_bucket")
+        .parquet(path)
+    )
+    collisions = int(seen.get["n"] or 0)
+    if collisions:
+        raise RuntimeError(
+            f"xxhash64 term_id collision on {collisions} ids — "
+            "re-key the dictionary (e.g. widen to (term_id, len(term)))"
+        )
 
 
 def _hot_map(dictionary: DataFrame, fragment_postings: int) -> DataFrame:
@@ -610,7 +639,7 @@ def _hot_map(dictionary: DataFrame, fragment_postings: int) -> DataFrame:
 
 
 def _encode_postings(
-    spark: SparkSession, postings: DataFrame, hot: DataFrame, block_size: int
+    postings: DataFrame, hot: DataFrame, block_size: int
 ) -> DataFrame:
     """(term_id, doc_id, tf, dl) -> compressed block rows.
 
@@ -619,17 +648,19 @@ def _encode_postings(
     re-execute the upstream scan), skew-free by construction (hot terms
     fan out over salt = pmod(xxhash64(doc_id), n_frag) — a pure function
     of doc_id, so fragment membership is stable across full and
-    incremental builds). Each task writes at most N_TERM_BUCKETS files —
-    bounded, compactable small-file cost instead of a second data pass."""
-    # r8: floor the encode fan-out at 3x cores (scale-adaptive — on a
-    # real cluster shuffle.partitions is set per job and exceeds this).
-    # With n_part == cores the heaviest stage of the build (Arrow
-    # transfer + Python block encode) had zero straggler slack; 3x
-    # packing lets fast tasks absorb slow fragments (guide §2.5).
-    n_part = max(
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-        3 * spark.sparkContext.defaultParallelism,
-    )
+    incremental builds).
+
+    The exchange takes spark.sql.shuffle.partitions and AQE coalesces it
+    from the data (Hyper Dimension Shuffle, VLDB 2019: let the data
+    size the fan-out). A fixed 3x-cores floor used to split the encode
+    of a 2,027-file bench build into 12 tasks on 4 cores, and every
+    Python task pays a fixed ~0.27 s before its UDF starts, even on a
+    reused worker: pyspark's worker_util.setup_spark_files calls
+    importlib.invalidate_caches() per task, which under Python 3.11
+    re-reads pyspark.zip's directory once per cached zipimporter. Three
+    waves of that overhead cost more than the encode itself (the
+    per-invocation UDF tax of "Accelerating Python UDFs in Vectorized
+    Query Execution", CIDR 2022); fewer, fuller tasks amortize it."""
     salted = (
         postings.join(F.broadcast(hot), "term_id", "left")
         .na.fill({"n_frag": 1})
@@ -646,7 +677,7 @@ def _encode_postings(
     # fails the task (_narrow_int32) instead of wrapping into corrupt
     # blocks when ANSI casts are off.
     return (
-        salted.repartition(n_part, "term_id", "salt")
+        salted.repartition("term_id", "salt")
         .sortWithinPartitions("term_id", "salt", "doc_id")
         .select(
             "term_id", "salt", "doc_id", _narrow_int32("tf"), _narrow_int32("dl")
@@ -788,13 +819,13 @@ def merge_incremental(spark: SparkSession, out_dir: str) -> dict:
     dictionary + blocks — WITHOUT re-reading or re-encoding untouched
     data (VERDICT r01 item 5; the scale contract for streaming ingest).
 
-    Reads: ONLY the new batches' runs partitions (partition pruning on
-    batch=...), the dictionary/blocks of the term_buckets containing
-    affected terms, and the (tiny) lineage table. Terms untouched by the
+    Reads: ONLY the new batches' docs partitions (read_runs, partition
+    pruning on batch=...), the dictionary/blocks of the term_buckets
+    containing affected terms, and the (tiny) lineage table. Terms untouched by the
     new batches keep their existing block files byte-for-byte.
 
-    The new runs are an ADDED delta for _merge_term_delta (the one
-    commit path it shares with compact_deletes): (df, cf) per term
+    The new batches' runs are an ADDED delta for _merge_term_delta (the
+    one commit path it shares with compact_deletes): (df, cf) per term
     outer-merged into the affected buckets' dictionary rows, the
     affected fragments' blocks decoded, unioned with the new postings
     (duplicates removed in the encoder -> idempotent under replay of a
@@ -851,12 +882,10 @@ def _merge_incremental_locked(spark: SparkSession, out_dir: str) -> dict:
     t0 = time.perf_counter()
 
     # batch is a hive partition column: this scan reads ONLY the new
-    # batches' partition dirs (functionally asserted in
-    # tests/test_incremental.py by deleting the old batches' runs files
-    # before merging).
-    new_runs = spark.read.schema(RUNS_ON_DISK).parquet(p["runs"]).filter(
-        F.col("batch").isin(new_batches)
-    )
+    # batches' docs partition dirs (functionally asserted in
+    # tests/test_incremental.py by truncating the old batches' docs
+    # files before merging).
+    new_runs = read_runs(spark, out_dir, new_batches)
     # deleted docs: a batch can land (lineage 'done') BEFORE a delete
     # folds one of its doc_ids — merging it afterwards must not encode
     # a FOLDED doc's postings into the blocks (read paths mask only
@@ -998,10 +1027,8 @@ def _merge_term_delta(
             (F.count("*") * sign).alias("df_delta"),
             (F.sum("tf") * sign).alias("cf_delta"),
         )
-        .withColumn("term_id", F.xxhash64("term"))
-        .withColumn(
-            "term_bucket", F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)).cast("int")
-        )
+        .withColumn("term_id", _term_id())
+        .withColumn("term_bucket", _term_bucket())
     ).persist()
     try:
         affected_buckets = sorted(
@@ -1026,30 +1053,10 @@ def _merge_term_delta(
                 (F.coalesce("cf", F.lit(0)) + F.coalesce("cf_delta", F.lit(0))).alias("cf"),
             )
             .filter(F.col("df") > 0)
-            .withColumn("term_id", F.xxhash64("term"))
-            .withColumn(
-                "term_bucket", F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)).cast("int")
-            )
         )
         dict_staging = os.path.join(out_dir, "dictionary_staging")
-        (
-            upd_dict.repartition("term_bucket")  # whole buckets per task, AQE-sized
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(dict_staging)
-        )
+        _write_dictionary(upd_dict, dict_staging)
         staged_dict = spark.read.schema(DICTIONARY_ON_DISK).parquet(dict_staging)
-        if not removed:
-            # collision invariant over the staged parquet (not the join
-            # plan, so the outer join isn't computed twice): rows are
-            # one-per-term, so a collision exists iff count(*) >
-            # countDistinct(term_id). Removing terms cannot create one.
-            inv = staged_dict.agg(
-                F.count("*").alias("n_terms"), F.countDistinct("term_id").alias("n_ids")
-            ).collect()[0]
-            collisions = int(inv["n_terms"]) - int(inv["n_ids"])
-            if collisions:
-                raise RuntimeError(f"xxhash64 term_id collision on {collisions} ids")
         phases["dict_write"] = time.perf_counter() - t_ph
 
         # --- blocks: re-encode ONLY the affected FRAGMENTS -----------------
@@ -1057,7 +1064,7 @@ def _merge_term_delta(
         old_blocks = spark.read.schema(BLOCKS_ON_DISK).parquet(cur_blocks_dir).filter(
             F.col("term_bucket").isin(affected_buckets)
         )
-        delta_postings = delta_runs.withColumn("term_id", F.xxhash64("term")).select(
+        delta_postings = delta_runs.withColumn("term_id", _term_id()).select(
             "term_id", "doc_id", "tf", "dl"
         )
         fp = F.lit(float(fragment_postings))
@@ -1125,7 +1132,7 @@ def _merge_term_delta(
             staged_dict.filter(F.col("term_bucket").isin(affected_buckets)),
             fragment_postings,
         )
-        new_blocks = _encode_postings(spark, postings, hot, block_size)
+        new_blocks = _encode_postings(postings, hot, block_size)
         blocks_staging = os.path.join(out_dir, "blocks_staging")
         with _arrow_batch(spark, ENCODE_ARROW_BATCH):
             (
@@ -1166,7 +1173,7 @@ def build_index(
 ) -> dict:
     """Full build = stage1_ingest + merge_and_encode. Safe to re-run
     after a crash: completed shards are skipped via the lineage
-    anti-join; the merge + block stage is deterministic given runs."""
+    anti-join; the merge + block stage is deterministic given docs."""
     s1 = stage1_ingest(spark, corpus, out_dir, build_id=build_id, n_shards=n_shards)
     with _writer_lock(out_dir):
         return _encode_all_runs(

@@ -212,51 +212,59 @@ def ngram_jaccard_pairs(
     arr = d32.select(
         "doc_id", _shingle_array(n).alias("sh_arr")
     ).persist()
-    sh = arr.select(
-        "doc_id",
-        F.size("sh_arr").alias("n_sh"),
-        F.explode("sh_arr").alias("shingle"),
-    )
-    dfs = sh.groupBy("shingle").agg(F.count("*").alias("sh_df")).filter(
-        F.col("sh_df") >= 2
-    )
-    if max_shingle_df is not None:
-        dfs = dfs.filter(F.col("sh_df") <= max_shingle_df)
-    joinable = sh.join(dfs.select("shingle"), "shingle")
-    a = joinable.alias("a")
-    b = joinable.alias("b")
-    # float bound with slack: size-compat is nb*t <= na <= nb/t. The
-    # final filter compares the 6-dp ROUNDED jaccard (round can lift a
-    # true J by up to 5e-7) and float ratio arithmetic wobbles at 1e-16,
-    # so the bound backs off by 1e-6: a pair is removed only when
-    # J <= min/max < t - 1e-6, whose rounded value is still < t — the
-    # filter can never remove a pair the unfiltered plan would emit.
-    tb = float(threshold) - 1e-6
-    inter = (
-        a.join(b, F.col("a.shingle") == F.col("b.shingle"))
-        .filter(
-            (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.col("a.n_sh") >= F.col("b.n_sh") * tb)
-            & (F.col("b.n_sh") >= F.col("a.n_sh") * tb)
+    try:
+        sh = arr.select(
+            "doc_id",
+            F.size("sh_arr").alias("n_sh"),
+            F.explode("sh_arr").alias("shingle"),
         )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n_sh").alias("na"),
-            F.col("b.n_sh").alias("nb"),
+        dfs = sh.groupBy("shingle").agg(F.count("*").alias("sh_df")).filter(
+            F.col("sh_df") >= 2
         )
-        .agg(F.count("*").alias("inter"))
-    )
-    return (
-        inter.withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6
-            ),
+        if max_shingle_df is not None:
+            dfs = dfs.filter(F.col("sh_df") <= max_shingle_df)
+        joinable = sh.join(dfs.select("shingle"), "shingle")
+        a = joinable.alias("a")
+        b = joinable.alias("b")
+        # float bound with slack: size-compat is nb*t <= na <= nb/t. The
+        # final filter compares the 6-dp ROUNDED jaccard (round can lift a
+        # true J by up to 5e-7) and float ratio arithmetic wobbles at 1e-16,
+        # so the bound backs off by 1e-6: a pair is removed only when
+        # J <= min/max < t - 1e-6, whose rounded value is still < t — the
+        # filter can never remove a pair the unfiltered plan would emit.
+        tb = float(threshold) - 1e-6
+        inter = (
+            a.join(b, F.col("a.shingle") == F.col("b.shingle"))
+            .filter(
+                (F.col("a.doc_id") < F.col("b.doc_id"))
+                & (F.col("a.n_sh") >= F.col("b.n_sh") * tb)
+                & (F.col("b.n_sh") >= F.col("a.n_sh") * tb)
+            )
+            .groupBy(
+                F.col("a.doc_id").alias("doc_a"),
+                F.col("b.doc_id").alias("doc_b"),
+                F.col("a.n_sh").alias("na"),
+                F.col("b.n_sh").alias("nb"),
+            )
+            .agg(F.count("*").alias("inter"))
         )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+        pairs = (
+            inter.withColumn(
+                "jaccard",
+                F.round(
+                    F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6
+                ),
+            )
+            .filter(F.col("jaccard") >= threshold)
+            .select("doc_a", "doc_b", "jaccard")
+        )
+        # materialized here so the cache is released before returning
+        # (a lazy result would re-run the shingle HOF per consumer once
+        # the cache is gone); one Arrow round trip of the pair set
+        out = pairs.toArrow()
+    finally:
+        arr.unpersist()
+    return documents.sparkSession.createDataFrame(out, pairs.schema)
 
 
 def ngram_jaccard_pairs_sql(

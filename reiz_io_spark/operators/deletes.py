@@ -21,8 +21,8 @@ cannot. This module gives the index Lucene-style *live docs*:
 
 Scale shape (100 TB): a delete is one docs-table scan (predicate
 pushdown) + a tombstone-parquet rewrite (ledger-sized, not
-corpus-sized). Compaction scans the runs table once (broadcast semi
-join on the pending ids) for the deleted postings and hands them to
+corpus-sized). Compaction reads the posting runs (build.read_runs, the
+view over docs) once, broadcast semi join on the pending ids, for the deleted postings and hands them to
 build._merge_term_delta as a REMOVED delta — the one term-delta merge
 merge_incremental runs with an ADDED delta — which touches only the
 affected terms' block rows: cost proportional to the deleted docs'
@@ -30,8 +30,8 @@ postings, never a full re-encode.
 Read-time filtering is a sorted-array membership test inside the
 scoring kernel for the block path (pending ids only — folded ids are
 already absent from blocks) and a broadcast anti-join for the
-runs/content-based paths (those tables are append-only logs that keep
-deleted rows forever, so they filter the FULL ledger).
+runs/content-based paths (docs and content are append-only logs that
+keep deleted rows forever, so they filter the FULL ledger).
 
 Commit protocol: same as every other mutation here — staged writes,
 then ONE atomic meta.json flip (build._publish). A crash before the
@@ -46,7 +46,7 @@ A PENDING delete is reversible: ``undelete_docs`` drops the ledger
 rows and the docs reappear (their postings were never touched). A
 FOLDED delete is permanent for the doc_id — the postings were
 compacted away, and the ledger row must stay (the append-only
-runs/docs/content logs still carry the rows, and a full re-encode
+docs/content logs still carry the rows, and a full re-encode
 must not resurrect them), so re-ingesting the same (repo, path)
 yields the same xxhash64 doc_id and stays hidden. Restoring folded
 content means ingesting it under a new path. That is the documented
@@ -55,9 +55,9 @@ contract.
 Tombstone table schema: (doc_id long, doclen long, parse_ok boolean,
 folded boolean). ``folded=false`` rows are pending (present in blocks,
 filtered at read time); ``folded=true`` rows were compacted out of
-blocks but stay in the ledger because the append-only runs/docs/
-content tables still carry the deleted rows (and a full
-merge_and_encode over runs must not resurrect them).
+blocks but stay in the ledger because the append-only docs/content
+tables still carry the deleted rows (and a full merge_and_encode over
+the runs view must not resurrect them).
 """
 
 from __future__ import annotations
@@ -70,8 +70,8 @@ import time
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schema import DOCS_ON_DISK, LINEAGE, RUNS_ON_DISK
-from .build import _merge_term_delta, _paths, _publish, _writer_lock
+from ..schema import DOCS_ON_DISK, LINEAGE
+from .build import _merge_term_delta, _paths, _publish, _writer_lock, read_runs
 
 TOMBSTONES_SCHEMA = (
     "doc_id long, doclen long, parse_ok boolean, folded boolean"
@@ -242,8 +242,8 @@ def undelete_docs(
 def compact_deletes(spark: SparkSession, index_dir: str) -> dict:
     """Fold pending tombstones into dictionary + blocks.
 
-    Shape (cost ∝ deleted postings): runs ⋉ pending ids (broadcast
-    semi join, one pruned scan) gives the deleted postings, which
+    Shape (cost ∝ deleted postings): runs view ⋉ pending ids (broadcast
+    semi join, one pruned docs scan) gives the deleted postings, which
     build._merge_term_delta folds as a REMOVED delta — the one
     term-delta merge merge_incremental shares: ONLY the affected terms'
     blocks are decoded, anti-joined, re-encoded with the UPDATED
@@ -288,12 +288,10 @@ def compact_deletes(spark: SparkSession, index_dir: str) -> dict:
             return meta  # every pending tombstone awaits its merge
         phases["classify"] = time.perf_counter() - t_ph
 
-        # deleted postings: ONE pruned runs scan, broadcast semi join,
+        # deleted postings: ONE pruned docs scan, broadcast semi join,
         # restricted to merged batches — exactly the data the blocks
         # were encoded from
-        runs = spark.read.schema(RUNS_ON_DISK).parquet(p["runs"]).filter(
-            F.col("batch").isin(merged_batches)
-        )
+        runs = read_runs(spark, index_dir, merged_batches)
         deleted_runs = runs.join(F.broadcast(pending), "doc_id", "left_semi")
         affected_buckets = _merge_term_delta(
             spark, index_dir, meta, deleted_runs, removed=True, phases=phases

@@ -286,7 +286,8 @@ def reshard_index(
     """Re-split a shard set to ``new_n`` shards WITHOUT re-tokenizing.
 
     The tokenizer (an ast.parse per document) dominates build cost; its
-    output already lives in the docs/runs/content logs. Resharding is
+    output already lives in the docs/content logs (the posting runs are
+    a view over docs). Resharding is
     therefore pure data movement + encode: ONE pass per table unions
     the old shards' logs, drops tombstoned docs (folded deletes must
     not resurrect; version-qualified update identities ride along
@@ -306,7 +307,7 @@ def reshard_index(
     import shutil
     import time
 
-    from ..schema import CONTENT_ON_DISK, DOCS_ON_DISK, RUNS_ON_DISK
+    from ..schema import CONTENT_ON_DISK, DOCS_ON_DISK
     from .build import _paths, _write_meta_atomic, merge_and_encode
     from .deletes import read_tombstones
 
@@ -342,9 +343,9 @@ def reshard_index(
     for j, nd in enumerate(new_dirs):
         os.makedirs(nd, exist_ok=True)
 
-    # docs carries repo -> route directly; runs/content route through a
-    # broadcast-light doc_id->fed_shard map derived from docs (runs has
-    # no repo column); everything lands in ONE staged write per table
+    # docs carries repo -> route directly; content routes through a
+    # broadcast-light doc_id->fed_shard map derived from docs;
+    # everything lands in ONE staged write per table
     docs_all = (
         _union("docs", DOCS_ON_DISK)
         .withColumn("fed_shard", shard_of(new_n))
@@ -354,8 +355,7 @@ def reshard_index(
         )
     )
     route = docs_all.select("doc_id", "fed_shard", "shard")
-    for table, schema in (("docs", DOCS_ON_DISK), ("content", CONTENT_ON_DISK),
-                          ("runs", RUNS_ON_DISK)):
+    for table, schema in (("docs", DOCS_ON_DISK), ("content", CONTENT_ON_DISK)):
         stage_dir = os.path.join(staging, table)
         if table == "docs":
             df = docs_all

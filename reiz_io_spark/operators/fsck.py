@@ -57,7 +57,7 @@ def fsck_index(
         t for t in ("dictionary", "blocks")
         if not os.path.isdir(table_dir(index_dir, meta, t))
     ] + [
-        t for t in ("docs", "runs", "content", "lineage")
+        t for t in ("docs", "content", "lineage")
         if not os.path.isdir(p[t])
     ]
     ok("dirs_resolve", not missing, f"missing: {missing}" if missing else "")

@@ -228,13 +228,16 @@ def bm25_topk(
     n_docs, avgdl = corpus_stats(documents)
 
     # the matched-postings relation feeds BOTH the df aggregation (the
-    # broadcast build job) and the scoring join; without materialization
-    # the corpus scan + per-term tf pass executes once per consumer
-    # (r8 probe: 2x the whole scan). The matched set is query-sized
-    # (docs holding >= 1 term x |terms|), so the cache is tiny; persist
-    # (not localCheckpoint) so the blocks are freed promptly instead of
-    # lingering past the query (bench-sequence heap hygiene).
-    p = _postings_for_terms(documents, query_terms).persist()
+    # broadcast build job) and the scoring join; planned twice, the
+    # corpus scan + per-term tf pass would execute once per consumer
+    # (r8 probe: 2x the whole scan). It ends in ONE doc_id exchange
+    # instead of a cache: both consumers plan the identical exchange,
+    # Spark reuses it (ReusedExchange — the scan runs once), and the
+    # scoring groupBy(doc_id) rides its partitioning with no further
+    # shuffle. The matched set is query-sized (docs holding >= 1 term
+    # x |terms|). No persist, so nothing stays cached past the query
+    # and the result stays a lazy plan.
+    p = _postings_for_terms(documents, query_terms).repartition("doc_id")
     d = (
         p.groupBy("term").agg(F.count("*").alias("df"))
         .withColumn(

@@ -169,8 +169,10 @@ def phrase_topk(
     # (the old plan ran the corpus explode three times — m.count() for
     # df, the m plan again for rows, plus a tokens() join for dl — and
     # paid a doc_id exchange). The matched set (docs with phrase_tf >
-    # 0) is tiny; localCheckpoint materializes it once so the df count
-    # and the final ranking share the single pass. phrase_tf itself is
+    # 0) is tiny; it is persisted once so the df count and the final
+    # ranking share the single pass, and released before returning (the
+    # top-k rows are collected here, so no cached block outlives the
+    # call). phrase_tf itself is
     # the one-regex count (_phrase_regex_tf) when every term is a
     # possible token, with the position-array formulation kept as the
     # defining fallback; dl is the quality_score token-run count —
@@ -189,7 +191,6 @@ def phrase_topk(
                 dl.alias("dl"),
             )
             .filter(F.col("phrase_tf") > 0)
-            .persist()
         )
     else:
         g = tokens(d).select(
@@ -211,7 +212,6 @@ def phrase_topk(
                 "dl",
             )
             .filter(F.col("phrase_tf") > 0)
-            .localCheckpoint(eager=False)
         )
     # memoized per corpus snapshot (fulltext.corpus_stats): avg(dl)
     # over all docs == sum(len(toks))/count in exact IEEE terms, so
@@ -220,23 +220,28 @@ def phrase_topk(
     from .fulltext import corpus_stats
 
     n_docs, avgdl = corpus_stats(documents)
-    scored = m
-    df = m.count()
-    import math
+    m = m.persist()
+    try:
+        df = m.count()
+        import math
 
-    idf = math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-    tf = F.col("phrase_tf").cast("double")
-    denom = tf + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / F.lit(avgdl))
-    score = F.lit(idf) * tf * (BM25_K1 + 1.0) / denom
-    return (
-        scored.select(
-            "doc_id",
-            "phrase_tf",
-            F.round(score, 6).alias("score"),
+        idf = math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+        tf = F.col("phrase_tf").cast("double")
+        denom = tf + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / F.lit(avgdl))
+        score = F.lit(idf) * tf * (BM25_K1 + 1.0) / denom
+        top = (
+            m.select(
+                "doc_id",
+                "phrase_tf",
+                F.round(score, 6).alias("score"),
+            )
+            .orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(k)
         )
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+        rows = top.collect()
+    finally:
+        m.unpersist()
+    return documents.sparkSession.createDataFrame(rows, top.schema)
 
 
 def proximity_match(

@@ -1,4 +1,4 @@
-"""Naive BM25 query path: pure DataFrame ops over the runs table.
+"""Naive BM25 query path: pure DataFrame ops over the posting runs.
 
 This is the correctness baseline the WAND path must match bit-for-bit
 (SURVEY.md §7.2). Everything is built-in Catalyst expressions — the only
@@ -29,9 +29,8 @@ from ..schema import (
     CONTENT_ON_DISK,
     DICTIONARY_ON_DISK,
     DOCS_ON_DISK,
-    RUNS_ON_DISK,
 )
-from .build import N_TERM_BUCKETS, _paths
+from .build import N_TERM_BUCKETS, _paths, read_runs
 
 
 class IndexReader:
@@ -122,7 +121,9 @@ class IndexReader:
         )
 
     def runs(self) -> DataFrame:
-        return self.spark.read.schema(RUNS_ON_DISK).parquet(self.paths["runs"])
+        """(batch, shard, term, doc_id, tf, dl): build.read_runs, the
+        posting view over docs."""
+        return read_runs(self.spark, self.index_dir)
 
     def blocks(self) -> DataFrame:
         cached = self._cached.get("blocks")
@@ -404,7 +405,7 @@ def naive_bm25_topk(
     p = reader.runs().filter(F.col("term").isin(all_terms))
     tomb = reader.tombstones()
     if tomb is not None:
-        # runs is an append-only log that keeps deleted docs' postings;
+        # docs is an append-only log that keeps deleted docs' postings;
         # exclude the FULL ledger (no broadcast hint: the cumulative
         # ledger can outgrow the broadcast threshold — let AQE pick)
         p = p.join(tomb.select("doc_id"), "doc_id", "left_anti")

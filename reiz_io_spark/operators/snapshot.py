@@ -21,7 +21,7 @@ Contract:
 Concurrency: safe against query traffic and committed mutations
 (readers never write; committed table dirs are immutable). Like any
 file-level backup it must not race an ACTIVELY LANDING ingest batch —
-the append-only docs/content/runs logs could be mid-write. Export
+the append-only docs/content logs could be mid-write. Export
 refuses while a writer lock (deletes.lock / trigram lock) is held and
 verifies the clone with fsck by default; run it from the same
 scheduling slot as compactions.
@@ -84,7 +84,7 @@ def export_snapshot(
 
     # append-only logs + lineage: the whole dirs
     copied = []
-    for name in ("docs", "content", "runs", "lineage"):
+    for name in ("docs", "content", "lineage"):
         src = os.path.join(index_dir, name)
         if os.path.isdir(src):
             shutil.copytree(src, os.path.join(dest_dir, name),

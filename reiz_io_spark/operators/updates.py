@@ -28,8 +28,8 @@ merge (operators/build.py::merge_incremental) machinery:
     them as a side effect).
 
 Atomicity: the tombstone/untombstone rows are staged as a per-batch
-sidecar (``update_ledger/batch=<id>/``) next to the staged runs/docs/
-content partitions; ``merge_incremental`` — the ADDED-delta caller of
+sidecar (``update_ledger/batch=<id>/``) next to the staged docs/content
+partitions; ``merge_incremental`` — the ADDED-delta caller of
 build._merge_term_delta, the one term-delta merge compact_deletes also
 runs — folds the sidecar into the tombstone ledger inside the SAME
 meta.json flip that publishes the new blocks/dictionary. Queries

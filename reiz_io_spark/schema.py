@@ -51,7 +51,10 @@ TOKENIZED = StructType(
 
 # Document stats + identity. doc_id = xxhash64(repo, path) — deterministic
 # under retries (no row_number over unordered data). content_sha256 is the
-# per-row invariant vs. the source table. The raw source itself lives in
+# per-row invariant vs. the source table. On disk docs also carries the
+# per-doc tf map (DOCS_ON_DISK.terms); the posting runs (batch, shard,
+# term, doc_id, tf, dl) are a view over it (build.read_runs), never a
+# stored table. The raw source itself lives in
 # the separate CONTENT table (below), NOT here: docs is the metadata/
 # forward-index table every query touches, content is read only by the
 # structural-verify stage and result rendering — keeping them in separate
@@ -87,17 +90,6 @@ CONTENT = StructType(
     ]
 )
 
-# Posting runs as written by stage1_ingest (term, docID, tf, dl; batch /
-# shard are hive partition columns on disk).
-RUNS = StructType(
-    [
-        StructField("term", StringType(), False),
-        StructField("doc_id", LongType(), False),
-        StructField("tf", LongType(), False),
-        StructField("dl", LongType(), False),
-    ]
-)
-
 # Term dictionary with collection stats. idf / max_score are NOT stored:
 # both are pure functions of (n_docs, df, k1) and are derived driver-side
 # per query (IndexReader.term_meta) so the dictionary never goes stale as
@@ -116,9 +108,9 @@ DICTIONARY = StructType(
 # metadata for block-max WAND. first/last doc_id enable block skipping.
 # Terms are carried as term_id = xxhash64(term) (8 bytes) so the big
 # shuffle never ships strings; the dictionary maps term <-> term_id
-# (collisions are astronomically unlikely below ~10^9 terms; the
-# merge stage enforces countDistinct(term) == 1 per term_id and fails
-# the build otherwise — see merge_and_encode).
+# (collisions are astronomically unlikely below ~10^9 terms; every
+# dictionary write checks one term per term_id and fails the build
+# otherwise — see build._write_dictionary).
 # (max_tf, min_dl) is the block-max bound corner: BM25 tf-normalization
 # is monotone ↑ tf / ↓ dl, so codec.block_bound(max_tf, min_dl, idf,
 # avgdl) dominates every posting in the block. idf/avgdl are applied at
@@ -192,10 +184,6 @@ DOCS_ON_DISK = StructType(
 )
 CONTENT_ON_DISK = StructType(
     list(CONTENT.fields)
-    + [StructField("batch", StringType(), False), StructField("shard", IntegerType(), False)]
-)
-RUNS_ON_DISK = StructType(
-    list(RUNS.fields)
     + [StructField("batch", StringType(), False), StructField("shard", IntegerType(), False)]
 )
 DICTIONARY_ON_DISK = StructType(

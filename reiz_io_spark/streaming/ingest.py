@@ -7,7 +7,7 @@ in". Our lineage design generalizes it, so a streaming front-end is a
 thin adapter:
 
     readStream(corpus dir) ──foreachBatch──▶ stage-1 of build_index
-        (tokenize -> docs/runs/lineage for the batch's pending shards)
+        (tokenize -> content/docs/lineage for the batch's pending shards)
     ... then one merge (stages 2-3) when querying is needed.
 
 Each micro-batch appends whole shards; the batch build's lineage
@@ -20,7 +20,7 @@ append-only-new-files, like the reference's ingest cache; for
 in-place file updates use ``stream_upserts_into_index`` below (CDC
 upserts via the update tier — something the reference cannot do).
 ``finalize_index`` is a full merge the first time and an INCREMENTAL
-merge afterwards (only new batches' runs are read; only affected
+merge afterwards (only new batches' docs are read; only affected
 terms' blocks are re-encoded) — the result is content-identical to the
 batch path, so every correctness guarantee (rank identity, codec
 round-trip, sha256 invariant) carries over unchanged.
@@ -49,7 +49,7 @@ def stream_corpus_into_index(
     available_now: bool = True,
 ):
     """Ingest a growing directory of corpus parquet files into the index
-    tables (docs/runs/lineage) incrementally. Returns the query handle;
+    tables (content/docs/lineage) incrementally. Returns the query handle;
     call ``finalize_index`` afterwards to (re)build dictionary+blocks."""
     stream = (
         spark.readStream.schema(CORPUS)
@@ -82,8 +82,8 @@ def finalize_index(
 ) -> dict:
     """Make everything ingested so far queryable.
 
-    First call: full merge (stages 2-3 over all runs). Subsequent calls:
-    INCREMENTAL merge — only the new batches' runs partitions are read,
+    First call: full merge (stages 2-3 over all docs). Subsequent calls:
+    INCREMENTAL merge — only the new batches' docs partitions are read,
     only the affected terms' blocks are re-encoded, untouched terms keep
     their files (operators/build.merge_incremental; content-identity
     with a from-scratch rebuild is pytest-gated). This is the streaming

@@ -52,7 +52,6 @@ def main() -> None:
             "wall_s": wall,
             "t_content_write_s": meta.get("t_content_write_s"),
             "t_docs_write_s": meta.get("t_docs_write_s"),
-            "t_runs_write_s": meta.get("t_runs_write_s"),
             "t_stats_dict_s": meta.get("t_stats_dict_s"),
             "t_blocks_s": meta.get("t_blocks_s"),
         })

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from reiz_io_spark.functions import codec
+from reiz_io_spark.operators.build import read_runs
 
 
 def _vdir(out, table):
@@ -45,7 +46,7 @@ def test_doc_id_unique_and_deterministic(spark, built_index):
 
 def test_postings_sum_tf_equals_doclen(spark, built_index):
     out, _ = built_index
-    runs = spark.read.parquet(out + "/runs")
+    runs = read_runs(spark, out)
     docs = spark.read.parquet(out + "/docs").filter(F.col("parse_ok"))
     per_doc = runs.groupBy("doc_id").agg(F.sum("tf").alias("s"))
     j = docs.join(per_doc, "doc_id", "left").na.fill({"s": 0})
@@ -54,7 +55,7 @@ def test_postings_sum_tf_equals_doclen(spark, built_index):
 
 def test_dictionary_df_matches_countDistinct(spark, built_index):
     out, _ = built_index
-    runs = spark.read.parquet(out + "/runs")
+    runs = read_runs(spark, out)
     d = spark.read.parquet(_vdir(out, "dictionary"))
     truth = runs.groupBy("term").agg(F.countDistinct("doc_id").alias("df2"))
     j = d.join(truth, "term")
@@ -67,7 +68,7 @@ def test_blocks_roundtrip_to_postings(spark, built_index):
     from reiz_io_spark.functions.hashing import spark_xxhash64
 
     out, _ = built_index
-    runs = spark.read.parquet(out + "/runs")
+    runs = read_runs(spark, out)
     blocks = spark.read.parquet(_vdir(out, "blocks"))
     expected = {
         (spark_xxhash64(r["term"]), r["doc_id"]): (r["tf"], r["dl"])
@@ -137,6 +138,42 @@ def test_encode_rejects_values_beyond_int32(spark):
     spark.conf.set(key, "false")
     try:
         with pytest.raises(Exception, match="does not fit the int32"):
-            _encode_postings(spark, postings, hot, 128).collect()
+            _encode_postings(postings, hot, 128).collect()
     finally:
         spark.conf.set(key, old)
+
+
+def test_term_id_collision_fails_build_and_merge(spark, monkeypatch, tmp_path):
+    """Forced term-id collisions (a 3-valued term-id hash) fail the
+    dictionary write of a full build and of an incremental merge, and
+    neither commits: meta.json stays absent or unchanged."""
+    import os
+
+    from reiz_io_spark.operators import build
+    from reiz_io_spark.sources.corpus import synth_corpus
+
+    def degenerate_term_id():
+        return F.pmod(F.xxhash64("term"), F.lit(3))
+
+    corpus = synth_corpus(spark, n_filler=10, seed=3)
+    half = F.pmod(F.xxhash64("path"), F.lit(2))
+
+    fresh = str(tmp_path / "fresh")
+    with monkeypatch.context() as m:
+        m.setattr(build, "_term_id", degenerate_term_id)
+        with pytest.raises(RuntimeError, match="term_id collision"):
+            build.build_index(spark, corpus, fresh, build_id="c", n_shards=2)
+    assert not os.path.exists(os.path.join(fresh, "meta.json"))
+
+    inc = str(tmp_path / "inc")
+    build.build_index(spark, corpus.filter(half == 0), inc, build_id="c0", n_shards=2)
+    meta_path = os.path.join(inc, "meta.json")
+    with open(meta_path) as fh:
+        committed = fh.read()
+    build.stage1_ingest(spark, corpus.filter(half == 1), inc, build_id="c1", n_shards=2)
+    with monkeypatch.context() as m:
+        m.setattr(build, "_term_id", degenerate_term_id)
+        with pytest.raises(RuntimeError, match="term_id collision"):
+            build.merge_incremental(spark, inc)
+    with open(meta_path) as fh:
+        assert fh.read() == committed

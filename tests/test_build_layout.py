@@ -27,12 +27,15 @@ from reiz_io_spark.sources.corpus import synth_corpus
 
 # Spark jobs of one build_index into a fresh dir on this corpus
 # (local[8], 8 shuffle partitions): 22 when the stage-1 docs re-reads
-# inferred their schema and the resume check collected an empty lineage
-MAX_BUILD_JOBS = 18
+# inferred their schema and the resume check collected an empty lineage,
+# 18 while stage 1 still wrote a runs table and the term-id collision
+# check re-read the dictionary
+MAX_BUILD_JOBS = 14
 # Spark jobs of update_docs (stage-1 ingest + merge) and of the
-# compact_deletes that folds the replaced versions, on the same corpus,
-# measured when merge and compaction still had separate delta merges
-MAX_UPDATE_JOBS = 64
+# compact_deletes that folds the replaced versions, on the same corpus
+# (update: 64 while the merge's collision check re-read the staged
+# dictionary)
+MAX_UPDATE_JOBS = 60
 MAX_COMPACT_JOBS = 42
 
 

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from reiz_io_spark.operators.build import (
     merge_and_encode,
     merge_incremental,
+    read_runs,
     stage1_ingest,
 )
 from reiz_io_spark.sources.corpus import synth_corpus
@@ -46,15 +47,23 @@ def test_incremental_merge_matches_full_rebuild(spark, split_corpus, tmp_path):
     merge_and_encode(spark, inc_dir, build_id="b0", fragment_postings=64)
     stage1_ingest(spark, b, inc_dir, build_id="b1", n_shards=4)
     # functional proof the merge never reads the old batch's runs: make
-    # the b0 runs partition unreadable (empty the parquet files)
+    # the b0 docs partition, which the runs view reads, unreadable
+    # (empty the parquet files) for the merge, then restore it for the
+    # identity checks below
     import glob
     import os
 
-    b0_files = glob.glob(inc_dir + "/runs/batch=b0/**/*.parquet", recursive=True)
+    b0_files = glob.glob(inc_dir + "/docs/batch=b0/**/*.parquet", recursive=True)
     assert b0_files
+    saved = {}
     for f in b0_files:
+        with open(f, "rb") as fh:
+            saved[f] = fh.read()
         os.truncate(f, 0)
     meta = merge_incremental(spark, inc_dir)
+    for f, data in saved.items():
+        with open(f, "wb") as fh:
+            fh.write(data)
 
     full_dir = str(tmp_path / "full")
     stage1_ingest(spark, a, full_dir, build_id="b0", n_shards=4)
@@ -62,7 +71,7 @@ def test_incremental_merge_matches_full_rebuild(spark, split_corpus, tmp_path):
     meta_full = merge_and_encode(spark, full_dir, build_id="full", fragment_postings=64)
 
     # the merge read ONLY the new batch's runs partitions (it succeeded
-    # with b0's run files truncated to zero bytes)
+    # with b0's docs files truncated to zero bytes)
     assert meta["last_merge_new_batches"] == ["b1"]
 
     # semantic AND byte-level content identity with the full rebuild
@@ -106,7 +115,7 @@ def test_cross_batch_reingest_is_noop(spark, split_corpus, tmp_path):
 
     # same files again under a new batch id
     stage1_ingest(spark, a, out, build_id="b1", n_shards=4)
-    runs_b1 = spark.read.parquet(out + "/runs").filter(F.col("batch") == "b1")
+    runs_b1 = read_runs(spark, out).filter(F.col("batch") == "b1")
     assert runs_b1.count() == 0
     meta1 = merge_incremental(spark, out)
     assert _decoded_index(spark, out) == before

@@ -56,7 +56,7 @@ def test_kill_and_resume_rebuilds_identical_index(spark, small_corpus, tmp_path)
                 fragment_postings=64)
     lin = spark.read.parquet(resumed_dir + "/lineage").filter(F.col("shard") < 2)
     surviving = lin.collect()
-    for sub in ("docs", "runs"):
+    for sub in ("docs",):
         for shard in (2, 3):
             shutil.rmtree(
                 f"{resumed_dir}/{sub}/batch=b/shard={shard}", ignore_errors=True
