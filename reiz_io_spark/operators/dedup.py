@@ -700,56 +700,80 @@ def dup_clusters(
     Distributed min-label propagation: every doc starts labeled with its
     own id; each round takes the min label across neighbors; terminates
     when no label changes (rounds <= component diameter — near-dup
-    components are shallow). Labels are localCheckpoint'ed per round so
-    the plan doesn't grow with iterations; each round is one join +
-    one aggregate on the EDGE set (tiny relative to the corpus), never a
-    corpus-sized shuffle. Docs with no near-dup edge keep cluster_id ==
-    doc_id. Exact-SQL twin: a recursive CTE (dup_clusters_sql)."""
+    components are shallow). Each round's labels are localCheckpoint'ed
+    so the plan doesn't grow with iterations, and the previous round's
+    checkpoint is released once the new one is materialized; each round
+    is one join + one aggregate on the EDGE set (tiny relative to the
+    corpus), never a corpus-sized shuffle. The final labels (docs with
+    a near-dup edge only) are collected so every checkpoint is released
+    before returning; docs with no near-dup edge keep cluster_id ==
+    doc_id through a lazy anti-join. Exact-SQL twin: a recursive CTE
+    (dup_clusters_sql)."""
     pairs = ngram_jaccard_pairs(
         documents, n=n, threshold=threshold, max_shingle_df=max_shingle_df
     ).select("doc_a", "doc_b")
-    edges = pairs.unionByName(
-        pairs.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-        )
-    ).localCheckpoint(eager=False)  # reused every round
+    held: list[DataFrame] = []  # live checkpoints, released in the finally
 
-    labels = edges.select(F.col("doc_a").alias("doc_id")).distinct().select(
-        "doc_id", F.col("doc_id").alias("cluster_id")
-    ).localCheckpoint(eager=False)
-    for _ in range(max_iter):
-        neigh = (
-            edges.join(
-                labels.select(
-                    F.col("doc_id").alias("doc_b"),
-                    F.col("cluster_id").alias("nb_cluster"),
-                ),
-                "doc_b",
+    def checkpoint(df: DataFrame) -> DataFrame:
+        held.append(df.localCheckpoint(eager=False))
+        return held[-1]
+
+    try:
+        edges = checkpoint(pairs.unionByName(  # reused every round
+            pairs.select(
+                F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
             )
-            .groupBy("doc_a")
-            .agg(F.min("nb_cluster").alias("nb_min"))
-        )
-        updated = (
-            labels.join(neigh, labels.doc_id == neigh.doc_a, "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"), F.coalesce("nb_min", F.col("cluster_id"))
-                ).alias("cluster_id"),
-                (F.coalesce("nb_min", F.col("cluster_id")) < F.col("cluster_id"))
-                .cast("int")
-                .alias("changed"),
+        ))
+        labels = checkpoint(
+            edges.select(F.col("doc_a").alias("doc_id")).distinct().select(
+                "doc_id", F.col("doc_id").alias("cluster_id")
             )
-            .localCheckpoint(eager=False)
         )
-        n_changed = updated.agg(F.sum("changed")).collect()[0][0] or 0
-        labels = updated.select("doc_id", "cluster_id").localCheckpoint(eager=False)
-        if n_changed == 0:
-            break
+        for _ in range(max_iter):
+            neigh = (
+                edges.join(
+                    labels.select(
+                        F.col("doc_id").alias("doc_b"),
+                        F.col("cluster_id").alias("nb_cluster"),
+                    ),
+                    "doc_b",
+                )
+                .groupBy("doc_a")
+                .agg(F.min("nb_cluster").alias("nb_min"))
+            )
+            updated = checkpoint(
+                labels.join(neigh, labels.doc_id == neigh.doc_a, "left")
+                .select(
+                    "doc_id",
+                    F.least(
+                        F.col("cluster_id"), F.coalesce("nb_min", F.col("cluster_id"))
+                    ).alias("cluster_id"),
+                    (F.coalesce("nb_min", F.col("cluster_id")) < F.col("cluster_id"))
+                    .cast("int")
+                    .alias("changed"),
+                )
+            )
+            n_changed = updated.agg(F.sum("changed")).collect()[0][0] or 0
+            # this round is materialized: the previous labels are superseded
+            _release_checkpoint(held.pop(-2))
+            labels = updated.select("doc_id", "cluster_id")
+            if n_changed == 0:
+                break
+        out = labels.toArrow()
+    finally:
+        for df in held:
+            _release_checkpoint(df)
+    labels = documents.sparkSession.createDataFrame(out, labels.schema)
     singletons = documents.select("doc_id").join(
         labels, "doc_id", "left_anti"
     ).select("doc_id", F.col("doc_id").alias("cluster_id"))
     return labels.unionByName(singletons)
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Unpersist the blocks of a localCheckpoint'ed DataFrame (its plan
+    is one LogicalRDD over the checkpointed RDD)."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def dup_clusters_sql(

@@ -15,10 +15,12 @@ module gives the engine the same two-tier design:
   any number of shards: pin one generation; take the global BM25
   statistics as integer sums over the shards (score.shard_stats, the
   dfs phase of dfs_query_then_fetch); score each shard's cached,
-  DECODED posting lists under those stats with the exact kernel
-  semantics of the distributed path (ascending-term float
-  accumulation — rank identity vs naive_bm25_topk is pytest-gated);
-  merge on (-score, doc_id); render metadata from the owning shard.
+  DECODED posting lists under those stats in one vectorized pass,
+  O(P log C) for P query postings and C candidates, whose np.bincount
+  adds each candidate's contributions in ascending-term order — the
+  exact float sequence of the distributed path (rank identity vs
+  naive_bm25_topk is pytest-gated); merge on (-score, doc_id); render
+  metadata from the owning shard.
   Sums over one shard are that index's own statistics, so a
   one-snapshot service is the single-index service bit-for-bit.
 - Queries whose total df exceeds ``max_driver_postings`` take the
@@ -78,6 +80,13 @@ class _LRU(OrderedDict):
         self.move_to_end(key)
         while len(self) > self.maxsize:
             self.popitem(last=False)
+
+
+def _locate(ids: np.ndarray, d: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(pos, hit): each of ``d``'s insertion points in the sorted,
+    non-empty ``ids`` and whether ``ids[pos]`` equals it."""
+    pos = np.searchsorted(ids, d)
+    return pos, ids[np.minimum(pos, ids.size - 1)] == d
 
 
 def _fold_position_rows(rows, offset: int) -> list[dict]:
@@ -196,9 +205,7 @@ class _Shard:
             tf = np.concatenate([x[1] for x in decoded])
             dl = np.concatenate([x[2] for x in decoded])
             if self._excl is not None:
-                pos = np.searchsorted(self._excl, d)
-                pos[pos == self._excl.size] = 0
-                live = self._excl[pos] != d
+                live = ~_locate(self._excl, d)[1]
                 d, tf, dl = d[live], tf[live], dl[live]
             order = np.argsort(d, kind="stable")
             out[t] = (d[order], tf[order], dl[order])
@@ -211,41 +218,50 @@ class _Shard:
         k: int, avgdl: float, k1: float, b: float,
         field_weights: dict[str, float] | None = None,
     ) -> list[tuple[int, float]]:
-        """This shard's top-k (doc_id, score) under the given stats."""
+        """This shard's top-k (doc_id, score) under the given stats, in
+        one vectorized pass over the query's P postings: O(P log C) for
+        C candidates.
+
+        Candidates are the smallest-df group's union; every later group
+        keeps the candidates its concatenated doc lists hit (no union
+        sort). Scoring concatenates every term's (d, tf, dl) in
+        ascending-term order with a per-posting (field-weighted) idf,
+        locates the postings in the candidates with one searchsorted,
+        and sums one bm25_contrib over the hits with np.bincount. That
+        adds in input order from 0.0, so each candidate receives its
+        contributions in ascending-term order: the oracle's float
+        sequence, bit for bit."""
         candidates: np.ndarray | None = None
         for g in sorted(groups, key=lambda g: min(
             (tmeta[t]["df"] for t in g if t in tmeta), default=0
         )):
             docs_g = [postings[t][0] for t in g if t in tmeta]
-            union = (
-                np.unique(np.concatenate(docs_g))
-                if docs_g
-                else np.empty(0, np.int64)
-            )
-            candidates = (
-                union
-                if candidates is None
-                else np.intersect1d(candidates, union, assume_unique=True)
-            )
+            if not docs_g:
+                return []
+            if candidates is None:
+                candidates = np.unique(np.concatenate(docs_g))
+            else:
+                pos, hit = _locate(candidates, np.concatenate(docs_g))
+                keep = np.zeros(candidates.size, dtype=bool)
+                keep[pos[hit]] = True
+                candidates = candidates[keep]
             if candidates.size == 0:
                 return []
-        if candidates is None or candidates.size == 0:
+        if candidates is None:
             return []
-        scores = np.zeros(candidates.size, dtype=np.float64)
-        for term in sorted(tmeta):
-            d, tf, dl = postings[term]
-            if d.size == 0:
-                continue
-            pos = np.clip(np.searchsorted(d, candidates), 0, d.size - 1)
-            hit = d[pos] == candidates
-            if not hit.any():
-                continue
-            idf = float(tmeta[term]["idf"])
-            if field_weights:
-                idf *= field_weight_of(term, field_weights)
-            scores[hit] += codec.bm25_contrib(
-                tf[pos[hit]], dl[pos[hit]], idf, avgdl, k1, b
-            )
+        terms = sorted(tmeta)
+        cols = [postings[t] for t in terms]
+        idf = [float(tmeta[t]["idf"]) for t in terms]
+        if field_weights:
+            idf = [w * field_weight_of(t, field_weights) for t, w in zip(terms, idf)]
+        pos, hit = _locate(candidates, np.concatenate([c[0] for c in cols]))
+        contrib = codec.bm25_contrib(
+            np.concatenate([c[1] for c in cols])[hit],
+            np.concatenate([c[2] for c in cols])[hit],
+            np.repeat(idf, [c[0].size for c in cols])[hit],
+            avgdl, k1, b,
+        )
+        scores = np.bincount(pos[hit], weights=contrib, minlength=candidates.size)
         order = np.lexsort((candidates, -scores))[:k]
         return [(int(candidates[i]), float(scores[i])) for i in order]
 

@@ -1,9 +1,10 @@
 """Operators that persist an intermediate release it before returning.
 
 bm25_topk, phrase_topk and ngram_jaccard_pairs each cache a relation
-that several consumers share. Each materializes its result inside the
-call and unpersists the cache in a ``finally``, so running one leaves
-the SparkContext's persistent-RDD set as it found it."""
+that several consumers share; dup_clusters checkpoints its edge set
+and every round of labels. Each materializes its result inside the
+call and releases what it persisted in a ``finally``, so running one
+leaves the SparkContext's persistent-RDD set as it found it."""
 
 from __future__ import annotations
 
@@ -20,6 +21,7 @@ OPERATORS = {
     "phrase_topk_regex": lambda d: phrase.phrase_topk(d, ["slow", "hash", "batch"], k=10),
     "phrase_topk_positions": lambda d: phrase.phrase_topk(d, ["slow", "hash-x"], k=10),
     "ngram_jaccard_pairs": lambda d: dedup.ngram_jaccard_pairs(d, n=3, threshold=0.5),
+    "dup_clusters": lambda d: dedup.dup_clusters(d, n=3, threshold=0.5),
 }
 
 

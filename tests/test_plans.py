@@ -4,6 +4,8 @@ full scans / shuffle joins."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from reiz_io_spark.operators.score import IndexReader, attach_doc_metadata, naive_bm25_topk
@@ -28,6 +30,23 @@ def test_blocks_scan_is_partition_pruned(spark, built_index):
     assert "term_bucket" in plan.split("PartitionFilters", 1)[1][:400]
 
 
+def _exploded_term_filter(plan: str) -> str | None:
+    """Condition of the Filter on the runs view's exploded ``term``
+    column (a node above the Generate), or None when the plan has none."""
+    nodes = re.findall(r"^\((\d+)\) (\w+)[^\n]*\n((?:.+\n?)*)", plan, re.M)
+    gen = next(((int(i), body) for i, name, body in nodes if name == "Generate"), None)
+    if gen is None:
+        return None
+    term = re.search(r"\[(term#\d+), tf#\d+L?\]", gen[1]).group(1)
+    for i, name, body in nodes:
+        cond = re.search(r"^Condition : (.*)$", body, re.M)
+        if name == "Filter" and int(i) > gen[0] and cond and (
+            cond.group(1).startswith(f"{term} IN (")
+        ):
+            return cond.group(1)
+    return None
+
+
 def test_runs_scan_pushes_term_filter(spark, built_index):
     """Naive path: the term IN (...) predicate reaches the parquet scan."""
     reader = IndexReader(spark, built_index[0])
@@ -36,6 +55,11 @@ def test_runs_scan_pushes_term_filter(spark, built_index):
     assert "PushedFilters" in plan
     pushed = plan.split("PushedFilters", 1)[1][:500]
     assert "term" in pushed and "In" in pushed
+    # the runs view explodes the docs' tf map: the term IN-list filters
+    # the exploded rows right above the Generate
+    cond = _exploded_term_filter(plan)
+    assert cond is not None and "id:len" in cond, plan
+    assert _exploded_term_filter(_plan(reader.runs())) is None
 
 
 def test_metadata_join_is_broadcast(spark, built_index):

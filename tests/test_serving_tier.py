@@ -7,6 +7,9 @@ Contracts under test:
   request reads its own postings, never entries a fill can evict);
 - the over-budget (distributed) routes of query_after and explain_topk
   over two shards equal the single index forced over budget;
+- a wide identifier-prefix (LIKE) query served from the driver route
+  ranks exactly like naive_bm25_topk over one index and two shards,
+  plain and weighted, paged by query_after, and with pending deletes;
 - auto-refresh rebinds only the shard that committed;
 - the HTTP result caches follow the generation the service serves: a
   commit picked up by auto-refresh is never answered from a cache
@@ -32,6 +35,9 @@ from reiz_io_spark.sources.corpus import synth_corpus
 Q = lower_query("flagship", "Call(Name('len'))")
 # every Name whose identifier contains an 'a': dozens of id: terms
 Q_WIDE = lower_query("wide", "Name(f'%a%')")
+# every called Name with a tail identifier: one wide OR group of id:
+# terms conjoined with the node terms
+Q_PREFIX = lower_query("prefix", "Call(Name(f'ident_0%'))")
 K = 10
 
 
@@ -108,6 +114,55 @@ def test_over_budget_explain_two_shards(spark, tier, q):
     assert [r["doc_id"] for r in top] == list(sums)
     for r in top:
         assert abs(sums[r["doc_id"]] - r["score"]) < 1e-9
+
+
+def _tiled(svc, q, field_weights, page):
+    """The full ranking as query_topk's first page + query_after pages."""
+    rows = svc.query_topk(q, k=page, field_weights=field_weights)
+    out = list(rows)
+    while rows:
+        cursor = (rows[-1]["score"], rows[-1]["doc_id"])
+        rows = svc.query_after(q, cursor, k=page, field_weights=field_weights)
+        out.extend(rows)
+    return _pairs(out)
+
+
+@pytest.mark.parametrize("deleted", [False, True], ids=["live", "deleted"])
+@pytest.mark.parametrize("n_shards", [1, 2])
+def test_wide_prefix_query_rank_identity(spark, tier, tmp_path, n_shards, deleted):
+    """A LIKE prefix expanding to >= 20 identifiers (one wide OR group)
+    ranks on the driver route exactly as naive_bm25_topk over the single
+    index; after a delete (on copies) the pending tombstones are masked."""
+    import shutil
+
+    single_dir, shard_dirs = tier["single"], tier["shards"]
+    single = IndexReader(spark, single_dir)
+    n_terms = len({t for g in single.resolve_groups(Q_PREFIX) for t in g})
+    assert n_terms >= 20
+    victim = None
+    if deleted:
+        victim = QueryService(single).query_topk(Q_PREFIX, k=1)[0]["repo"]
+        single_dir = str(tmp_path / "single")
+        shard_dirs = [str(tmp_path / f"s{i}") for i in range(2)]
+        for src, dst in zip([tier["single"], *tier["shards"]],
+                            [single_dir, *shard_dirs]):
+            shutil.copytree(src, dst)
+            delete_docs(spark, dst, F.col("repo") == victim)
+        single = IndexReader(spark, single_dir)
+    svc = QueryService(
+        single if n_shards == 1
+        else [IndexReader(spark, d) for d in shard_dirs]
+    )
+    assert svc.analyze(Q_PREFIX)["route"] == "driver-cache"
+    for weights in (None, {"id": 2.0, "node": 0.5}):
+        want = _pairs(naive_bm25_topk(
+            single, Q_PREFIX, k=100_000, field_weights=weights
+        ).collect())
+        assert len(want) > 20
+        full = svc.query_topk(Q_PREFIX, k=100_000, field_weights=weights)
+        assert _pairs(full) == want
+        assert victim not in {r["repo"] for r in full}
+        assert _tiled(svc, Q_PREFIX, weights, page=7) == want
 
 
 def test_concurrent_requests_under_cache_pressure(spark, tier):
