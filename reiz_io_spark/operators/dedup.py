@@ -594,55 +594,64 @@ def minhash_lsh_pairs(
     # localCheckpoint: the banded self-join and the verification both
     # reference the signature table several times; without truncating
     # the lineage every branch re-runs the signature UDF over the whole
-    # corpus. Checkpointed data lives on executors (memory+disk) and is
-    # freed by the ContextCleaner when the plan is GC'd.
-    sigs = (
-        minhash_signatures(documents, n_hashes, shingle_n, seed)
-        .filter(F.size("sig") > 0)
-        .localCheckpoint(eager=False)
-    )
-    banded = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda bi: F.xxhash64(
-                    F.slice("sig", bi * rows_per_band + 1, rows_per_band).cast(
-                        "string"
-                    )
-                ),
-            )
-        ).alias("band", "bucket"),
-    )
-    # r8: the banded self-join (two shuffled sides + a join) is replaced
-    # by ONE groupBy per (band, bucket) whose sorted member list emits
-    # its upper triangle (_upper_triangle_pairs) — identical candidate
-    # pair set, one exchange fewer (guide §2.4).
-    candidates = (
-        banded.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .select(F.explode(_upper_triangle_pairs(F.col("ids"))).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
-    if prefilter_margin is not None:
-        sig_a = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sa"))
-        sig_b = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sb"))
-        est = F.size(
-            F.filter(F.zip_with("sa", "sb", lambda x, y: x == y), lambda e: e)
-        ) / F.lit(float(n_hashes))
-        candidates = (
-            candidates.join(sig_a, "doc_a")
-            .join(sig_b, "doc_b")
-            .filter(est >= max(0.0, threshold - prefilter_margin))
-            .select("doc_a", "doc_b")
+    # corpus. The verified pairs are materialized inside the call so
+    # every checkpoint is released before returning.
+    held: list[DataFrame] = []  # live checkpoints, released in the finally
+    try:
+        sigs = (
+            minhash_signatures(documents, n_hashes, shingle_n, seed)
+            .filter(F.size("sig") > 0)
+            .localCheckpoint(eager=False)
         )
-    # reused 3x by the verification join (cand_docs union + pair join)
-    candidates = candidates.localCheckpoint(eager=False)
-    return jaccard_for_pairs(documents, candidates, n=shingle_n).filter(
-        F.col("jaccard") >= threshold
-    )
+        held.append(sigs)
+        banded = sigs.select(
+            "doc_id",
+            F.posexplode(
+                F.transform(
+                    F.sequence(F.lit(0), F.lit(bands - 1)),
+                    lambda bi: F.xxhash64(
+                        F.slice("sig", bi * rows_per_band + 1, rows_per_band).cast(
+                            "string"
+                        )
+                    ),
+                )
+            ).alias("band", "bucket"),
+        )
+        # r8: the banded self-join (two shuffled sides + a join) is
+        # replaced by ONE groupBy per (band, bucket) whose sorted member
+        # list emits its upper triangle (_upper_triangle_pairs) —
+        # identical candidate pair set, one exchange fewer (guide §2.4).
+        candidates = (
+            banded.groupBy("band", "bucket")
+            .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
+            .filter(F.size("ids") >= 2)
+            .select(F.explode(_upper_triangle_pairs(F.col("ids"))).alias("p"))
+            .select("p.doc_a", "p.doc_b")
+            .distinct()
+        )
+        if prefilter_margin is not None:
+            sig_a = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sa"))
+            sig_b = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sb"))
+            est = F.size(
+                F.filter(F.zip_with("sa", "sb", lambda x, y: x == y), lambda e: e)
+            ) / F.lit(float(n_hashes))
+            candidates = (
+                candidates.join(sig_a, "doc_a")
+                .join(sig_b, "doc_b")
+                .filter(est >= max(0.0, threshold - prefilter_margin))
+                .select("doc_a", "doc_b")
+            )
+        # reused 3x by the verification join (cand_docs union + pair join)
+        candidates = candidates.localCheckpoint(eager=False)
+        held.append(candidates)
+        pairs = jaccard_for_pairs(documents, candidates, n=shingle_n).filter(
+            F.col("jaccard") >= threshold
+        )
+        out = pairs.toArrow()
+    finally:
+        for df in held:
+            _release_checkpoint(df)
+    return documents.sparkSession.createDataFrame(out, pairs.schema)
 
 
 # --- SimHash -----------------------------------------------------------------

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import _release_checkpoint
 from .fulltext import TOKEN_SPLIT
 
 # LSH defaults: 16 hashes in 8 bands of 2 rows -> candidate admission
@@ -159,59 +160,67 @@ def minhash_lsh_checkable(
     emitted pair is correct; banding only bounds recall, identically in
     both engines (same hashes -> same buckets -> same candidates)."""
     r = n_hashes // bands
+    # the shingle table feeds the signatures, the sizes and both sides
+    # of the verify join: checkpointed once, released before returning
+    # (the pairs are materialized inside the call)
     sh = _shingles(documents, n).localCheckpoint(eager=False)
-    x = sh.select("doc_id", (_md5_48(F.col("shingle")) % _P).alias("x"))
-    mins = [
-        F.min((F.col("x") * a + b) % _P).alias(f"s{k}")
-        for k, (a, b) in ((k, _perm_params(k)) for k in range(n_hashes))
-    ]
-    sig = x.groupBy("doc_id").agg(*mins)
-    band_structs = [
-        F.struct(
-            F.lit(t).alias("band"),
-            F.concat_ws(
-                "_", *[F.col(f"s{t * r + i}").cast("string") for i in range(r)]
-            ).alias("key"),
+    try:
+        x = sh.select("doc_id", (_md5_48(F.col("shingle")) % _P).alias("x"))
+        mins = [
+            F.min((F.col("x") * a + b) % _P).alias(f"s{k}")
+            for k, (a, b) in ((k, _perm_params(k)) for k in range(n_hashes))
+        ]
+        sig = x.groupBy("doc_id").agg(*mins)
+        band_structs = [
+            F.struct(
+                F.lit(t).alias("band"),
+                F.concat_ws(
+                    "_", *[F.col(f"s{t * r + i}").cast("string") for i in range(r)]
+                ).alias("key"),
+            )
+            for t in range(bands)
+        ]
+        banded = sig.select(
+            "doc_id", F.explode(F.array(*band_structs)).alias("bk")
+        ).select("doc_id", "bk.band", "bk.key")
+        a_side = banded.alias("a")
+        b_side = banded.alias("b")
+        cand = (
+            a_side.join(
+                b_side,
+                (F.col("a.band") == F.col("b.band")) & (F.col("a.key") == F.col("b.key")),
+            )
+            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+            .select(
+                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+            )
+            .distinct()
         )
-        for t in range(bands)
-    ]
-    banded = sig.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bk")
-    ).select("doc_id", "bk.band", "bk.key")
-    a_side = banded.alias("a")
-    b_side = banded.alias("b")
-    cand = (
-        a_side.join(
-            b_side,
-            (F.col("a.band") == F.col("b.band")) & (F.col("a.key") == F.col("b.key")),
+        sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+        sh_a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
+        sh_b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
+        inter = (
+            cand.join(sh_a, "doc_a")
+            .join(sh_b, ["doc_b", "shingle"])
+            .groupBy("doc_a", "doc_b")
+            .agg(F.count("*").alias("inter"))
         )
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
+        sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
+        pairs = (
+            inter.join(sa, "doc_a")
+            .join(sb, "doc_b")
+            .withColumn(
+                "jaccard",
+                F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6),
+            )
+            .filter(F.col("jaccard") >= threshold)
+            .select("doc_a", "doc_b", "jaccard")
         )
-        .distinct()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    sh_a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    sh_b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        cand.join(sh_a, "doc_a")
-        .join(sh_b, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+        out = pairs.toArrow()
+    finally:
+        _release_checkpoint(sh)
+    return documents.sparkSession.createDataFrame(out, pairs.schema)
 
 
 def minhash_lsh_checkable_sql(

@@ -173,6 +173,32 @@ def test_phrase_filters_before_shuffle(spark):
     assert "table" in plan and "hash" in plan
 
 
+def test_phrase_fallback_filters_before_shuffle(spark):
+    """A phrase with a term that is not a possible token ("hash-x")
+    takes the position-array fallback instead of the one-regex count.
+    It stays map-only: per-slot position arrays built by array lambdas
+    over one token split, the every-slot-present Filter BELOW the one
+    round-robin parallelism spread (docs that cannot match never cross
+    it), the continuation tested by array_contains, and no explode,
+    aggregate or join."""
+    from reiz_io_spark.operators.phrase import phrase_match
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    plan = _plan(phrase_match(docs, ["slow", "hash-x"]))
+    tree = plan.split("\n\n")[0]  # the operator tree, above the details
+    assert "regexp_count" not in plan, plan[:2000]
+    assert plan.count("Exchange (") <= 1, tree
+    if "Exchange (" in tree:
+        assert "RoundRobinPartitioning" in plan, plan[:2000]
+        assert tree.index("Filter (") > tree.index("Exchange ("), tree
+    assert "Filter (" in tree and tree.count("Scan parquet") == 1, tree
+    assert "posexplode" not in plan and "Generate" not in plan, plan[:2000]
+    assert "Aggregate" not in plan and "Join" not in plan, plan[:2000]
+    # slot filters compare tokens with the phrase terms as literals
+    assert ".tok = slow)" in plan and ".tok = hash-x)" in plan, plan[:2000]
+    assert "array_contains(" in plan, plan[:2000]
+
+
 def test_chunk_dedup_hashes_before_shuffle(spark):
     """Chunk dedup's single shuffle must carry md5 hashes, never chunk
     text: the Project computing md5 sits BELOW the Exchange, so at

@@ -1,18 +1,22 @@
 """The serving tier's driver scorer (serve._Shard.score) against the
 per-term reference loop it replaced: same (doc_id, score) lists, bit
-for bit, on seeded random posting arrays and on the edge cases of the
+for bit, from both its dense (doc-ordinal) and sparse (candidate)
+paths, on seeded random posting arrays and on the edge cases of the
 vectorized pass (empty lists, terms absent from tmeta, docs shared by a
 group's terms, postings past the last candidate, k beyond the
-candidate count, score ties)."""
+candidate count, score ties). Also: which path the 16·P rule picks,
+and the cache fill refusing a posting whose doc the shard lacks."""
 
 from __future__ import annotations
+
+from types import SimpleNamespace
 
 import numpy as np
 import pytest
 
 from reiz_io_spark.functions import codec
 from reiz_io_spark.operators.wand import field_weight_of
-from reiz_io_spark.serve import _Shard
+from reiz_io_spark.serve import DENSE_DOCS_PER_POSTING, _Shard
 
 AVGDL, K1, B = 37.25, 1.2, 0.75
 WEIGHTS = {"id": 2.0, "node": 0.5}
@@ -56,12 +60,42 @@ def reference_score(groups, tmeta, postings, k, avgdl, k1, b, field_weights=None
     return [(int(candidates[i]), float(scores[i])) for i in order]
 
 
+def _stub(ids):
+    """A _Shard with only the state scoring and the cache fill read:
+    ``_ids`` None (no warm doc map: sparse path only) or a sorted doc
+    array."""
+    shard = _Shard.__new__(_Shard)
+    shard._ids = ids
+    shard.reader, shard.meta = SimpleNamespace(index_dir="stub"), {}
+    return shard
+
+
+def _superset(postings):
+    """Every posting's doc plus docs no posting holds (negative ids and
+    gaps between posting docs), sorted and unique like a shard's _ids."""
+    docs = [p[0] for p in postings.values()]
+    hi = max((int(d.max()) for d in docs if d.size), default=0)
+    return np.unique(np.concatenate(docs + [np.arange(-9, hi + 9, 4)]))
+
+
+def _entries(shard, postings):
+    return {t: shard._entry(t, *p) for t, p in postings.items()}
+
+
 def scored(groups, tmeta, postings, k, field_weights=None):
-    shard = _Shard.__new__(_Shard)  # score reads no shard state
-    got = shard.score(groups, tmeta, postings, k, AVGDL, K1, B, field_weights)
+    """The reference's answer, asserted equal to score on a shard
+    without _ids and to each path run directly on a shard with them."""
     want = reference_score(groups, tmeta, postings, k, AVGDL, K1, B, field_weights)
-    assert got == want
-    return got
+    args = (groups, tmeta)
+    rest = (k, AVGDL, K1, B, field_weights)
+    sparse = _stub(None)
+    assert sparse.score(*args, _entries(sparse, postings), *rest) == want
+    dense = _stub(_superset(postings))
+    entries = _entries(dense, postings)
+    assert dense.score(*args, entries, *rest) == want
+    assert dense._score_dense(*args, entries, *rest) == want
+    assert dense._score_sparse(*args, entries, *rest) == want
+    return want
 
 
 def _plist(docs, tf=None, dl=None):
@@ -168,3 +202,41 @@ def test_ties_broken_by_doc_id():
     got = scored([("a", "b")], tmeta, postings, 10)
     assert [d for d, _ in got] == [4, 6, 9, 1]
     assert got[0][1] == got[1][1] == got[2][1]
+
+
+@pytest.mark.parametrize("extra_docs, path", [
+    (0, "_score_dense"), (1, "_score_sparse"),
+], ids=["n_eq_16p", "n_over_16p"])
+def test_dense_rule_picks_the_path(monkeypatch, extra_docs, path):
+    postings = {"a": _plist([1, 4, 6], tf=[2, 1, 3]), "b": _plist([4, 9])}
+    tmeta = _tmeta(postings)
+    p = 5  # the query's postings on the shard
+    # docs 0 .. N-1 hold every posting doc; N = 16·P is still dense
+    shard = _stub(np.arange(DENSE_DOCS_PER_POSTING * p + extra_docs,
+                            dtype=np.int64))
+    called = []
+    for name in ("_score_dense", "_score_sparse"):
+        def spy(self, *a, _name=name, _orig=getattr(_Shard, name)):
+            called.append(_name)
+            return _orig(self, *a)
+        monkeypatch.setattr(_Shard, name, spy)
+    for groups in ([("a", "b")], [("a",), ("b",)]):
+        called.clear()
+        got = shard.score(groups, tmeta, _entries(shard, postings), 10,
+                          AVGDL, K1, B)
+        assert called == [path]
+        assert got == reference_score(groups, tmeta, postings, 10, AVGDL, K1, B)
+        assert got
+
+
+def test_fill_refuses_posting_doc_missing_from_ids():
+    shard = _stub(np.array([-3, 1, 4, 9], dtype=np.int64))
+    d, tf, dl, ords = shard._entry("a", *_plist([-3, 4, 9]))
+    assert ords.tolist() == [0, 2, 3]
+    assert _stub(None)._entry("a", *_plist([5]))[3] is None
+    # a doc between ids, past the last id, before the first id, and a
+    # shard whose doc map is empty
+    for docs, ids in (([1, 5], [-3, 1, 4, 9]), ([10], [-3, 1, 4, 9]),
+                      ([-4, 1], [-3, 1, 4, 9]), ([1], [])):
+        with pytest.raises(RuntimeError, match="corrupt index snapshot"):
+            _stub(np.array(ids, dtype=np.int64))._entry("a", *_plist(docs))

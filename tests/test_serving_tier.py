@@ -9,7 +9,10 @@ Contracts under test:
   over two shards equal the single index forced over budget;
 - a wide identifier-prefix (LIKE) query served from the driver route
   ranks exactly like naive_bm25_topk over one index and two shards,
-  plain and weighted, paged by query_after, and with pending deletes;
+  plain and weighted, paged by query_after, with pending deletes, and
+  after refresh_if_stale rebinds a shard; it reads at least as many
+  postings as each shard has docs, so every shard scores it on the
+  dense (doc-ordinal) path;
 - auto-refresh rebinds only the shard that committed;
 - the HTTP result caches follow the generation the service serves: a
   commit picked up by auto-refresh is never answered from a cache
@@ -21,6 +24,7 @@ from __future__ import annotations
 import json
 import urllib.request
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -127,12 +131,31 @@ def _tiled(svc, q, field_weights, page):
     return _pairs(out)
 
 
-@pytest.mark.parametrize("deleted", [False, True], ids=["live", "deleted"])
+def _spy_paths(monkeypatch) -> list[str]:
+    """Record each _Shard scoring path a request runs."""
+    from reiz_io_spark.serve import _Shard
+
+    called: list[str] = []
+    for name in ("_score_dense", "_score_sparse"):
+        def spy(self, *a, _name=name, _orig=getattr(_Shard, name)):
+            called.append(_name)
+            return _orig(self, *a)
+        monkeypatch.setattr(_Shard, name, spy)
+    return called
+
+
+@pytest.mark.parametrize("state", ["live", "deleted", "refreshed"])
 @pytest.mark.parametrize("n_shards", [1, 2])
-def test_wide_prefix_query_rank_identity(spark, tier, tmp_path, n_shards, deleted):
+def test_wide_prefix_query_rank_identity(spark, tier, tmp_path, monkeypatch,
+                                         n_shards, state):
     """A LIKE prefix expanding to >= 20 identifiers (one wide OR group)
     ranks on the driver route exactly as naive_bm25_topk over the single
-    index; after a delete (on copies) the pending tombstones are masked."""
+    index. Its P postings on each shard are >= the shard's N docs, so
+    every shard takes the dense path. After a delete (on copies) the
+    pending tombstones are masked: out of the docs' ordinals and the
+    postings alike, on a service opened after the delete ("deleted")
+    or on a warm one that refresh_if_stale rebinds ("refreshed": only
+    the shard holding the deleted repo commits)."""
     import shutil
 
     single_dir, shard_dirs = tier["single"], tier["shards"]
@@ -140,20 +163,50 @@ def test_wide_prefix_query_rank_identity(spark, tier, tmp_path, n_shards, delete
     n_terms = len({t for g in single.resolve_groups(Q_PREFIX) for t in g})
     assert n_terms >= 20
     victim = None
-    if deleted:
+    if state != "live":
         victim = QueryService(single).query_topk(Q_PREFIX, k=1)[0]["repo"]
         single_dir = str(tmp_path / "single")
         shard_dirs = [str(tmp_path / f"s{i}") for i in range(2)]
         for src, dst in zip([tier["single"], *tier["shards"]],
                             [single_dir, *shard_dirs]):
             shutil.copytree(src, dst)
-            delete_docs(spark, dst, F.col("repo") == victim)
-        single = IndexReader(spark, single_dir)
-    svc = QueryService(
-        single if n_shards == 1
-        else [IndexReader(spark, d) for d in shard_dirs]
-    )
+
+    def open_service():
+        return QueryService(
+            IndexReader(spark, single_dir) if n_shards == 1
+            else [IndexReader(spark, d) for d in shard_dirs]
+        )
+
+    def delete_victim():
+        dirs = [single_dir] + [
+            d for d in shard_dirs
+            if IndexReader(spark, d).docs().filter(F.col("repo") == victim).count()
+        ]
+        assert len(dirs) == 2  # the repo lives in exactly one shard
+        for d in dirs:
+            delete_docs(spark, d, F.col("repo") == victim)
+
+    if state == "deleted":
+        delete_victim()
+    svc = open_service()
+    if state == "refreshed":
+        svc.query_topk(Q_PREFIX, k=K)  # warm caches of the old snapshots
+        before = svc._snap.shards
+        delete_victim()
+        assert svc.refresh_if_stale()
+        rebound = [a is not b for a, b in zip(svc._snap.shards, before)]
+        assert sum(rebound) == 1
+    single = IndexReader(spark, single_dir)
     assert svc.analyze(Q_PREFIX)["route"] == "driver-cache"
+    gen = svc._snap
+    tmeta = gen.term_meta(sorted({t for g in gen.resolve_groups(Q_PREFIX) for t in g}))
+    for sh in gen.shards:
+        p = sum(v[0].size for v in sh.postings(list(tmeta)).values())
+        assert p >= sh._ids.size > 0
+        if sh._excl is not None:  # pending tombstones hold no ordinal
+            assert not np.isin(sh._excl, sh._ids).any()
+    assert (victim is None) == all(sh._excl is None for sh in gen.shards)
+    called = _spy_paths(monkeypatch)
     for weights in (None, {"id": 2.0, "node": 0.5}):
         want = _pairs(naive_bm25_topk(
             single, Q_PREFIX, k=100_000, field_weights=weights
@@ -163,6 +216,7 @@ def test_wide_prefix_query_rank_identity(spark, tier, tmp_path, n_shards, delete
         assert _pairs(full) == want
         assert victim not in {r["repo"] for r in full}
         assert _tiled(svc, Q_PREFIX, weights, page=7) == want
+    assert called and set(called) == {"_score_dense"}
 
 
 def test_concurrent_requests_under_cache_pressure(spark, tier):
